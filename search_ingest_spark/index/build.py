@@ -79,6 +79,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from search_ingest_spark.analysis import doc_terms_pandas
 from search_ingest_spark.catalog import Catalog
@@ -161,7 +162,9 @@ def dense_ids(df: DataFrame, key_col: str, out_col: str, n_buckets: int = 256) -
     n = df.count()
     if n == 0:
         return df.withColumn(out_col, F.lit(0).cast("long"))
-    if n <= _DENSE_IDS_DRIVER_MAX:
+    key_type = df.select(key_col).schema[0].dataType
+    if n <= _DENSE_IDS_DRIVER_MAX and isinstance(
+            key_type, (T.StringType, T.IntegralType)):
         # driver fast path: one narrow collect of the KEYS (never the
         # payload columns), rank them in Python (same code-point order
         # as Spark's string sort), broadcast the (key, id) map back —
@@ -171,12 +174,14 @@ def dense_ids(df: DataFrame, key_col: str, out_col: str, n_buckets: int = 256) -
         # unique and non-null — with duplicates the window path's
         # row_number over equal keys is the documented (and
         # nondeterministically ordered) semantics, so it is kept.
+        # String and integral keys only: a float NaN passes the
+        # uniqueness check (NaN != NaN) but has no place in Python's
+        # sorted(), while Spark orders it above every number.
         keys = [r[0] for r in df.select(key_col).collect()]
         if None not in keys and len(set(keys)) == n:
-            key_type = df.select(key_col).schema[0].dataType.simpleString()
             id_map = df.sparkSession.createDataFrame(
                 [(k, i) for i, k in enumerate(sorted(keys))],
-                f"`{key_col}` {key_type}, __did long",
+                f"`{key_col}` {key_type.simpleString()}, __did long",
             )
             return df.join(F.broadcast(id_map), key_col).select(
                 *[F.col(c) for c in df.columns],

@@ -1,13 +1,19 @@
-"""Spark-free low-latency reader over the same index tables.
+"""Spark-free low-latency reader, and the top-k executor both query
+front-ends share.
 
-Spark executes the batch/throughput query path (query/wand.py); a
-single interactive query, though, should not pay a Spark job's
-scheduling latency (~0.3-0.5 s).  Because the index is plain columnar
-tables with self-describing layout (hive-partitioned by shard, sorted
-by term within files, block metadata in columns), any parquet reader
-can serve it.  This module is that reader: pyarrow datasets + the SAME
-NumPy block-max kernel (wand.shard_topk), so results are bitwise
-identical to the Spark path — asserted in tests.
+A single interactive query should not pay a Spark job's scheduling
+latency (~0.3-0.5 s).  Because the index is plain columnar tables with
+self-describing layout (hive-partitioned by shard, sorted by term
+within files, block metadata in columns), any parquet reader can serve
+it.  This module is that reader (`LocalSearcher`): pyarrow datasets +
+the NumPy block-max kernel (wand.shard_topk).  It also holds the code
+`wand.Searcher` runs its unfiltered top-k with: the driver planning
+(`resolve_terms`, `plan_exact`, `plan_quantized`), the shard-chunk
+worker (`_serve_worker`) and the exact merge (`merge_candidates`).
+LocalSearcher runs the worker in-process (plus a process pool for
+corpus-scale plans); Searcher runs it as one Spark task per chunk in
+one job.  The two front-ends therefore return bitwise-identical
+results — asserted in tests.
 
 Serving-path scale shape (VERDICT r02 weak item #2): queries run in
 three stages —
@@ -273,6 +279,25 @@ def _scan_plan(dataset, tfilter, plan, kernel, k: int, guard: float,
     return frames, heap
 
 
+def drop_zip_subpackage_importers() -> None:
+    """Forget the per-subpackage zipimporters of this process's
+    sys.path_importer_cache (kept: one importer per archive).  A Spark
+    Python worker imports pyspark from pyspark.zip, which leaves one
+    zipimporter per imported subpackage (16 after a mapInArrow task),
+    and it calls importlib.invalidate_caches() at the start of every
+    task — on Python 3.11 that re-reads the archive's whole directory
+    once per importer: ~200 ms of each task on a 4-vCPU VM, most of a
+    one-task job's wall.  The entries are a cache; an import that needs
+    one rebuilds it from the archive's cached directory.  Called at the
+    end of a task so the worker's next task starts cheap."""
+    import sys
+    import zipimport
+
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
+            sys.path_importer_cache.pop(path, None)
+
+
 def _serve_worker(args):
     """Worker-process entry: scan one shard chunk against the pinned
     snapshot path and return its candidate frames."""
@@ -290,17 +315,160 @@ def _serve_worker(args):
     return frames
 
 
-class LocalSearcher:
-    """Serve top-k queries from an index catalog without a SparkSession."""
+# ---------------------------------------------------------------------------
+# Driver planning and merge, shared by LocalSearcher and wand.Searcher:
+# the query's term resolution, stages 1-2 of the module docstring, the
+# kernel parameters, and the exact final ranking of the candidates.
 
-    def __init__(self, cat: Catalog, *, n_threads: int = 1) -> None:
-        # n_threads is accepted for API compatibility but unused: the
-        # kernels are Python-loop-bound (varint decode) and hold the
-        # GIL, so in-process threading was measured to SLOW queries at
-        # every corpus size (see _run_plan).  Cross-shard parallelism
-        # belongs across reader PROCESSES, not threads in one.
+def resolve_terms(searcher, query_text: str, *, match_all: bool = False,
+                  min_match: int | None = None,
+                  exclude_text: str | None = None,
+                  required_text: str | None = None):
+    """(idf, excluded term ids, required term ids or None) of a match
+    query, planned through `searcher.plan` / `searcher.mode` — or None
+    when the query provably matches nothing: a must term is absent from
+    the dictionary, or fewer query terms are present than match_all /
+    min_match ask for."""
+    mode = searcher.mode
+    idf = searcher.plan(query_text) if query_text else {}
+    n_terms = (len(set(analyze_query(query_text, mode=mode)))
+               if query_text else 0)
+    required_tids: frozenset[int] | None = None
+    if required_text is not None:
+        req_idf = searcher.plan(required_text)
+        n_req = len(set(analyze_query(required_text, mode=mode)))
+        if len(req_idf) < n_req or not req_idf:
+            return None
+        required_tids = frozenset(req_idf)
+        idf = {**idf, **req_idf}  # must wins on overlap (same idf)
+        if min_match is not None and (len(idf) - len(req_idf)) < min_match:
+            return None
+    if (not idf or (match_all and len(idf) < n_terms)
+            or (required_tids is None and min_match is not None
+                and len(idf) < min_match)):
+        return None
+    excluded: frozenset[int] = (
+        frozenset(searcher.plan(exclude_text)) if exclude_text
+        else frozenset())
+    return idf, excluded, required_tids
+
+
+def _shard_order(meta: pd.DataFrame, ub: np.ndarray) -> pd.Series:
+    """shard → Σ_terms max block UB (≥ any doc's score in the shard),
+    best shard first."""
+    return (
+        pd.DataFrame({"shard": meta["shard"].to_numpy(np.int64),
+                      "term_id": meta["term_id"].to_numpy(np.int64),
+                      "ub": ub})
+        .groupby(["shard", "term_id"])["ub"].max()
+        .groupby("shard").sum()
+        .sort_values(ascending=False)
+    )
+
+
+def plan_exact(postings, idf: dict[int, float], avgdl: float,
+               excluded: frozenset[int] = frozenset(),
+               ) -> tuple[list[int], list]:
+    """Stages 1-2 for exact BM25 over the `postings` pyarrow dataset:
+    (term ids to scan, plan).  The plan is [(shard, ub, None)],
+    UB-descending; only the block metadata is read, never posting
+    bytes.  Excluded-only terms bound at 0 — they never ADD score, but
+    their rows must reach the scans to build the ban sets."""
+    tids = sorted({int(t) for t in idf} | excluded)
+    meta = postings.to_table(
+        columns=_META_COLS, filter=pc.field("term_id").isin(tids)
+    ).to_pandas()
+    if len(meta) == 0:
+        return tids, []
+    # same UB arithmetic as the kernel's per-block bound
+    mtf = meta["max_tf"].to_numpy(np.float64)
+    mdl = meta["min_dl"].to_numpy(np.float64)
+    ub = (
+        np.array([idf.get(t, 0.0) for t in meta["term_id"].to_numpy(np.int64)])
+        * ((mtf * (K1 + 1.0)) / (mtf + K1 * (1.0 - B + B * mdl / avgdl)))
+        * (1.0 + 1e-9)
+    )
+    return tids, [(int(s), float(u), None)
+                  for s, u in _shard_order(meta, ub).items()]
+
+
+def plan_quantized(postings_q, idf: dict[int, float],
+                   ) -> tuple[list[int], list]:
+    """Stages 1-2 over the impact-quantized `postings_q` dataset: the
+    shard bound comes from the EXACT per-block max_impact instead of
+    the (max_tf, min_dl) proxy.  (term ids, UB-descending plan)."""
+    from search_ingest_spark.index.codec import IMPACT_SCALE
+
+    tids = [int(t) for t in idf]
+    meta = postings_q.to_table(
+        columns=["term_id", "shard", "max_impact"],
+        filter=pc.field("term_id").isin(tids),
+    ).to_pandas()
+    if len(meta) == 0:
+        return tids, []
+    ub = (
+        np.array([idf[t] for t in meta["term_id"].to_numpy(np.int64)])
+        * ((meta["max_impact"].to_numpy(np.float64) + 0.5) / IMPACT_SCALE)
+        * (1.0 + 1e-9)
+    )
+    return tids, [(int(s), float(u), None)
+                  for s, u in _shard_order(meta, ub).items()]
+
+
+def kernel_params(idf: dict[int, float], k: int, *, avgdl: float = 1.0,
+                  quantized: bool = False, round_to: int | None = None,
+                  match_all: bool = False,
+                  excluded: frozenset[int] = frozenset(),
+                  min_match: int | None = None,
+                  after: tuple[float, int] | None = None,
+                  required_tids: frozenset[int] | None = None) -> dict:
+    """The picklable parameter dict a kernel is rebuilt from
+    (_kernel_from_params) in the driver, a pool process or a Spark
+    task; merge_candidates reads k / round_to / after from it."""
+    if quantized:
+        return {"quantized": True, "idf": idf, "k": k,
+                "round_to": round_to, "after": None}
+    return {"idf": idf, "k": k, "avgdl": avgdl, "match_all": match_all,
+            "round_to": round_to, "excluded": excluded,
+            "min_match": min_match, "after": after,
+            "required_tids": required_tids}
+
+
+def merge_candidates(doc_ids, scores, params: dict,
+                     ) -> tuple[np.ndarray, np.ndarray]:
+    """The exact final ranking over every candidate the scans returned:
+    HALF_UP rounding like Spark F.round / DuckDB round (np.round would
+    bank to even), the exact rounded search_after comparison (the
+    kernel is overinclusive by one rounding ulp), then (score desc,
+    doc_id asc) cut at k.  Candidates are at most k per kernel call, so
+    the per-value rounding cost is irrelevant.  A NaN score has no
+    place in that order and raises ValueError."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    scores = np.asarray(scores, dtype=np.float64)
+    if np.isnan(scores).any():
+        raise ValueError("NaN score among the top-k candidates")
+    round_to, after = params["round_to"], params["after"]
+    if round_to is not None:
+        scores = np.array([_round_half_up(s, round_to) for s in scores],
+                          dtype=np.float64)
+    if after is not None:
+        s_a, d_a = float(after[0]), int(after[1])
+        keep = (scores < s_a) | ((scores == s_a) & (doc_ids > d_a))
+        doc_ids, scores = doc_ids[keep], scores[keep]
+    order = np.lexsort((doc_ids, -scores))[:params["k"]]
+    return doc_ids[order], scores[order]
+
+
+class LocalSearcher:
+    """Serve top-k queries from an index catalog without a SparkSession.
+
+    No thread pool: the kernels are Python-loop-bound (varint decode)
+    and hold the GIL, so in-process threading was measured to SLOW
+    queries at every corpus size.  Cross-shard parallelism runs across
+    reader PROCESSES (see _run_plan)."""
+
+    def __init__(self, cat: Catalog) -> None:
         self.cat = cat
-        self.n_threads = n_threads
         stats = ds.dataset(cat.data_path(ib.STATS_TABLE)).to_table().to_pylist()[0]
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
@@ -337,7 +505,7 @@ class LocalSearcher:
         """[(doc_id, score, rank)] — bitwise identical to Searcher.topk.
 
         Three-stage shared-θ execution (module docstring): metadata-only
-        scan → shard UB ordering → threaded per-shard decode, where each
+        scan → shard UB ordering → θ-gated batched decode, where each
         shard inherits the global kth-best score as its pruning floor.
         θ-pruning only drops docs provably below the global kth score,
         so the result set is exactly the naive merge's.
@@ -356,27 +524,13 @@ class LocalSearcher:
         pagination with the rounded comparison re-applied at the final
         stage; ES bool `must` clauses with `query_text` as the scored
         `should` set) — bitwise parity asserted in tests."""
-        idf = self.plan(query_text) if query_text else {}
-        n_terms = (len(set(analyze_query(query_text, mode=self.mode)))
-                   if query_text else 0)
-        required_tids: frozenset[int] | None = None
-        if required_text is not None:
-            req_idf = self.plan(required_text)
-            n_req = len(set(analyze_query(required_text, mode=self.mode)))
-            if len(req_idf) < n_req or not req_idf:
-                return []
-            required_tids = frozenset(req_idf)
-            idf = {**idf, **req_idf}
-            if (min_match is not None
-                    and (len(idf) - len(req_idf)) < min_match):
-                return []
-        if (not idf or (match_all and len(idf) < n_terms)
-                or (required_tids is None and min_match is not None
-                    and len(idf) < min_match)):
+        resolved = resolve_terms(self, query_text, match_all=match_all,
+                                 min_match=min_match,
+                                 exclude_text=exclude_text,
+                                 required_text=required_text)
+        if resolved is None:
             return []
-        excluded: frozenset[int] = (
-            frozenset(self.plan(exclude_text)) if exclude_text else frozenset()
-        )
+        idf, excluded, required_tids = resolved
         return self._topk_from_idf(idf, k, match_all=match_all,
                                    attr_filter=attr_filter,
                                    round_to=round_to, excluded=excluded,
@@ -628,72 +782,33 @@ class LocalSearcher:
                        after: tuple[float, int] | None = None,
                        required_tids: frozenset[int] | None = None,
                        ) -> list[tuple[int, float, int]]:
-        tids = sorted({int(t) for t in idf} | excluded)
-        tfilter = pc.field("term_id").isin(tids)
-        # stage 1: metadata only — no posting bytes
-        meta = self._postings.to_table(
-            columns=_META_COLS, filter=tfilter
-        ).to_pandas()
-        if len(meta) == 0:
-            return []
-        allowed_by_shard: dict[int, np.ndarray] | None = None
-        if attr_filter:
+        tids, plan = plan_exact(self._postings, idf, self.avgdl, excluded)
+        if attr_filter and plan:
             # scalar = `term`; list = `terms`; dict with gte/gt/lte/lt
             # = ES `range`; `nested` = per-element conjunction —
             # query/filters.py compiles the SAME spec for the Spark
-            # path, so the two paths can't drift
+            # path, so the two paths can't drift.  Shards holding no
+            # allowed doc leave the plan.
             attrs = self._attr_scan(["shard", "doc_id"],
                                     attr_filter).to_pandas()
             allowed_by_shard = {
                 int(s): np.sort(g["doc_id"].to_numpy(np.int64))
                 for s, g in attrs.groupby("shard", sort=True)
             }
-        # stage 2: per-shard bound = Σ_terms max block UB (≥ any doc's
-        # score in the shard) — same UB arithmetic as the kernel
-        mtf = meta["max_tf"].to_numpy(np.float64)
-        mdl = meta["min_dl"].to_numpy(np.float64)
-        tid = meta["term_id"].to_numpy(np.int64)
-        # excluded-only terms bound at 0: they never ADD score, but their
-        # rows must survive into the bulk reads to build the ban sets
-        ub = (
-            np.array([idf.get(t, 0.0) for t in tid])
-            * ((mtf * (K1 + 1.0)) / (mtf + K1 * (1.0 - B + B * mdl / self.avgdl)))
-            * (1.0 + 1e-9)
-        )
-        bounds = (
-            pd.DataFrame({"shard": meta["shard"].to_numpy(np.int64),
-                          "term_id": tid, "ub": ub})
-            .groupby(["shard", "term_id"])["ub"].max()
-            .groupby("shard").sum()
-            .sort_values(ascending=False)
-        )
-        plan: list[tuple[int, float, np.ndarray | None]] = []
-        for s, sub in bounds.items():
-            allowed = None
-            if allowed_by_shard is not None:
-                allowed = allowed_by_shard.get(int(s))
-                if allowed is None or len(allowed) == 0:
-                    continue
-            plan.append((int(s), float(sub), allowed))
-
-        # stage 3: adaptive shared-θ execution (kernel built from the
-        # same picklable params the worker processes use)
-        params = {
-            "idf": idf, "k": k, "avgdl": self.avgdl,
-            "match_all": match_all, "round_to": round_to,
-            "excluded": excluded, "min_match": min_match, "after": after,
-            "required_tids": required_tids,
-        }
-        return self._run_plan(self._postings, tfilter, plan,
-                              _kernel_from_params(params), k,
-                              round_to, after=after,
-                              par=(self._postings_path, tids, params))
+            plan = [(s, u, allowed_by_shard[s]) for s, u, _ in plan
+                    if s in allowed_by_shard]
+        params = kernel_params(idf, k, avgdl=self.avgdl,
+                               match_all=match_all, round_to=round_to,
+                               excluded=excluded, min_match=min_match,
+                               after=after, required_tids=required_tids)
+        return self._run_plan(self._postings, self._postings_path, tids,
+                              plan, params)
 
     # shards fetched per bulk read: each pyarrow to_table pays
     # fragment-planning + file-open overhead (~3 ms even warm), and each
     # kernel invocation pays NumPy segment-machinery setup — so shards
     # are read in large batches (one to_table per batch) and merged into
-    # ONE kernel call per thread.  Merging is exact: shards partition
+    # ONE kernel call per batch.  Merging is exact: shards partition
     # the doc-id space, so a multi-shard frame is indistinguishable from
     # one bigger shard to the segment-based kernel (and its internal
     # descending-UB segment ordering then prunes ACROSS shards).
@@ -711,14 +826,11 @@ class LocalSearcher:
     # shards per worker batch inside a parallel chunk
     _PAR_BATCH = 32
 
-    def _run_plan(self, dataset, tfilter, plan, kernel, k: int,
-                  round_to: int | None,
-                  after: tuple[float, int] | None = None,
-                  par: tuple | None = None,
-                  ) -> list[tuple[int, float, int]]:
-        """Shared stage-3 executor: θ-gated batched reads + merged
-        kernels (_scan_plan), with optional cross-shard PROCESS
-        parallelism for corpus-scale plans.
+    def _run_plan(self, dataset, path: str, tids: list[int], plan: list,
+                  params: dict) -> list[tuple[int, float, int]]:
+        """Stage-3 executor: θ-gated batched reads + merged kernels
+        (_scan_plan), with cross-shard PROCESS parallelism for
+        corpus-scale plans, then the shared exact merge.
 
         `plan` = [(shard, static_ub, extra)], UB-descending: re-gate
         each batch on the risen global θ (posting BYTES of pruned
@@ -730,18 +842,20 @@ class LocalSearcher:
         doc-id space, so merged chunks concatenate their sorted
         allowed arrays losslessly.
 
-        `par` = (snapshot_path, term_ids, kernel_params) enables the
-        parallel tail: after the boot batch fixes θ, surviving shards
-        fan out to the persistent worker pool (see module comment);
-        candidates merge losslessly, so results stay bitwise identical
-        to the serial scan."""
+        After the boot batch fixes θ, surviving shards of a large plan
+        fan out to the persistent worker pool, each worker re-opening
+        the pinned snapshot `path` (see module comment); candidates
+        merge losslessly, so results stay bitwise identical to the
+        serial scan."""
         global _SERVE_POOL, _SERVE_POOL_BROKEN
-        guard = 10.0 ** -round_to if round_to is not None else 0.0
         if not plan:
             return []
-        par_possible = (
-            par is not None and not _SERVE_POOL_BROKEN
-            and len(plan) >= self._PAR_BOOT + self._PAR_MIN_SHARDS)
+        k, round_to = params["k"], params["round_to"]
+        guard = 10.0 ** -round_to if round_to is not None else 0.0
+        tfilter = pc.field("term_id").isin(tids)
+        kernel = _kernel_from_params(params)
+        par_possible = (not _SERVE_POOL_BROKEN
+                        and len(plan) >= self._PAR_BOOT + self._PAR_MIN_SHARDS)
         n_boot = self._PAR_BOOT if par_possible else self._SHARDS_PER_BATCH
         boot = plan[:n_boot]
         frames, heap = _scan_plan(dataset, tfilter, boot, kernel, k,
@@ -751,9 +865,7 @@ class LocalSearcher:
             th = heap[0][0] - guard if len(heap) >= k else -np.inf
             live = [p for p in rest if p[1] >= th]
             done = False
-            if (par is not None and not _SERVE_POOL_BROKEN
-                    and len(live) >= self._PAR_MIN_SHARDS):
-                path, tids, params = par
+            if not _SERVE_POOL_BROKEN and len(live) >= self._PAR_MIN_SHARDS:
                 try:
                     pool = _get_serve_pool()
                     n = max(1, min(_SERVE_POOL_SIZE,
@@ -791,27 +903,10 @@ class LocalSearcher:
         if not frames:
             return []
         allr = pd.concat(frames, ignore_index=True)
-        scores = allr["score"].to_numpy()
-        if round_to is not None:
-            # HALF_UP like Spark F.round / DuckDB round (np.round would
-            # bank to even) — k-bounded candidate set, so per-value cost
-            # is irrelevant
-            scores = np.array([_round_half_up(s, round_to) for s in scores])
-        doc_ids = allr["doc_id"].to_numpy()
-        if after is not None:
-            # re-apply the EXACT rounded cursor comparison (the kernel
-            # is overinclusive by one rounding ulp) — mirrors the Spark
-            # path's final-stage where clause
-            s_a, d_a = float(after[0]), int(after[1])
-            keep = (scores < s_a) | ((scores == s_a) & (doc_ids > d_a))
-            scores, doc_ids = scores[keep], doc_ids[keep]
-            if len(doc_ids) == 0:
-                return []
-        order = np.lexsort((doc_ids, -scores))[:k]
-        return [
-            (int(doc_ids[i]), float(scores[i]), r + 1)
-            for r, i in enumerate(order)
-        ]
+        doc_ids, scores = merge_candidates(allr["doc_id"], allr["score"],
+                                           params)
+        return [(int(d), float(s), r + 1)
+                for r, (d, s) in enumerate(zip(doc_ids, scores))]
 
     # -- impact-quantized serving ---------------------------------------------
     def topk_quantized(self, query_text: str, k: int = 10, *,
@@ -825,42 +920,13 @@ class LocalSearcher:
         shard bound comes from the EXACT per-block max_impact (no
         (max_tf, min_dl) proxy), and the decoded volume per shard is the
         one-byte impact stream — the serving path's cheapest mode."""
-        from search_ingest_spark.index.codec import IMPACT_SCALE
-        from search_ingest_spark.query.wand import shard_topk_impact
-
         idf = self.plan(query_text)
         if not idf:
             return []
         pq = self._postings_q()
-        tids = [int(t) for t in idf]
-        tfilter = pc.field("term_id").isin(tids)
-        meta = pq.to_table(
-            columns=["term_id", "shard", "first_doc_id", "last_doc_id",
-                     "n_docs", "max_impact"],
-            filter=tfilter,
-        ).to_pandas()
-        if len(meta) == 0:
-            return []
-        tid = meta["term_id"].to_numpy(np.int64)
-        ub = (
-            np.array([idf[t] for t in tid])
-            * ((meta["max_impact"].to_numpy(np.float64) + 0.5) / IMPACT_SCALE)
-            * (1.0 + 1e-9)
-        )
-        bounds = (
-            pd.DataFrame({"shard": meta["shard"].to_numpy(np.int64),
-                          "term_id": tid, "ub": ub})
-            .groupby(["shard", "term_id"])["ub"].max()
-            .groupby("shard").sum()
-            .sort_values(ascending=False)
-        )
-        plan = [(int(s), float(u), None) for s, u in bounds.items()]
-
-        params = {"quantized": True, "idf": idf, "k": k,
-                  "round_to": round_to}
-        return self._run_plan(pq, tfilter, plan,
-                              _kernel_from_params(params), k, round_to,
-                              par=(self._pq_path, tids, params))
+        tids, plan = plan_quantized(pq, idf)
+        params = kernel_params(idf, k, quantized=True, round_to=round_to)
+        return self._run_plan(pq, self._pq_path, tids, plan, params)
 
     def _postings_q(self):
         got = getattr(self, "_pq_ds", None)

@@ -2,23 +2,31 @@
 
 The fast path the reference gets from Elasticsearch/Lucene (WAND /
 block-max WAND over its inverted index) re-expressed for Spark's
-execution model:
+execution model.  An unfiltered top-k (`topk`, the dictionary-expansion
+queries, `topk_quantized`) is ES's coordinating node plus one fan-out:
 
-1. Query planning on the driver (like ES's coordinating node): analyze
-   the query with the SAME analyzer as index time, look up term ids +
-   document frequencies in `term_dict` (a pruned scan of a tiny table),
-   read global stats — idf per term is computed once here.
-2. A single distributed scan of `postings` filtered to the query's
-   term_ids.  The postings table is written sorted by (shard, term_id,
-   block_id), so parquet row-group min/max stats on `term_id` let the
-   scan skip almost all data (`PushedFilters` visible in `.explain`).
-3. `groupBy(shard).applyInPandas(scorer)` — each shard scores
-   independently (the doc-sharded layout co-locates every term's
-   postings for a doc range) and emits its local top-k.  Only shards
-   that contain query terms produce groups, so fan-out is bounded by
-   the data, not the shard count.
-4. Global `orderBy(score desc, doc_id asc).limit(k)` — Spark compiles
-   this to TakeOrderedAndProject (no full sort).
+1. Query planning on the driver, with the code the Spark-free reader
+   uses (query/reader.py): analyze the query with the SAME analyzer as
+   index time, look up term ids + document frequencies in `term_dict`
+   (a pruned pyarrow read of a tiny table) and compute each idf once;
+   then read only the block METADATA of those terms' postings and order
+   the shards by their score upper bound (reader.plan_exact /
+   plan_quantized).  No posting bytes are read here.
+2. ONE Spark job of one stage: `spark.range(n).mapInArrow` runs
+   n = min(defaultParallelism, shards in the plan) tasks; task i scores
+   the stride-split chunk i of the UB-ordered plan with the serving
+   worker (reader._serve_worker: pyarrow reads of the query terms'
+   blocks from the snapshot pinned when the Searcher opened it, θ-gated
+   batches of the kernel below) and returns its candidates.  Postings
+   never enter the JVM and nothing is shuffled.
+3. The driver merges the candidates (about k per kernel call) exactly
+   (reader.merge_candidates: HALF_UP rounding, the search_after cursor,
+   (score desc, doc_id asc)) and returns the ranked rows as a
+   LocalRelation, whose collect starts no further job.
+
+Filtered top-k (attr_filter / attr_where), topk_many and the
+full-matching-set queries still run as Spark plans over a pruned
+postings scan (a cogroup with doc_attrs, or _scored_partitions).
 
 The scorer kernel is exact block-max pruning, NumPy-vectorized:
 segments of doc-id space are processed in DESCENDING upper-bound order,
@@ -64,6 +72,38 @@ def _round_half_up(x: float, nd: int) -> float:
 
     return float(Decimal(repr(x)).quantize(Decimal(f"1e-{nd}"),
                                            rounding=ROUND_HALF_UP))
+
+
+RANKED_SCHEMA = "doc_id long, score double, rank int"
+
+
+def local_frame(spark: SparkSession, schema: str, **columns) -> DataFrame:
+    """Driver-held rows as a DataFrame whose plan is a LocalRelation:
+    `columns` maps each name of the DDL `schema`, in order, to its
+    values; no columns give the zero-row frame.  createDataFrame over a
+    pyarrow Table keeps the rows in the plan, so collect() starts no
+    Spark job — empty or not.  A list, or an empty pandas frame, plans
+    a LogicalRDD instead, and collecting that is a job of ~0.4 s."""
+    import pyarrow as pa
+
+    if columns:
+        tbl = pa.table(columns)
+    else:
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        tbl = to_arrow_schema(StructType.fromDDL(schema)).empty_table()
+    return spark.createDataFrame(tbl, schema)
+
+
+def ranked_frame(spark: SparkSession, doc_ids=(), scores=()) -> DataFrame:
+    """(doc_id, score, rank) LocalRelation over hits already in rank
+    order; no arguments give the zero-row result."""
+    return local_frame(
+        spark, RANKED_SCHEMA,
+        doc_id=np.asarray(doc_ids, dtype=np.int64),
+        score=np.asarray(scores, dtype=np.float64),
+        rank=np.arange(1, len(doc_ids) + 1, dtype=np.int32))
 
 
 def score_phrase_combos(
@@ -148,6 +188,13 @@ class Searcher:
         import pyarrow.dataset as ds
 
         self._dict_ds = ds.dataset(cat.data_path(ib.TERM_DICT_TABLE))
+        # the unfiltered top-k reads postings through pyarrow, on the
+        # driver (block metadata) and in its Spark tasks (blocks): the
+        # snapshot path is pinned here, postings_q's on first use
+        self._postings_path = cat.data_path(ib.POSTINGS_TABLE)
+        self._postings_ds = ds.dataset(self._postings_path,
+                                       partitioning="hive")
+        self._pq: tuple | None = None
 
     # -- planning -----------------------------------------------------------
     def plan(self, query_text: str) -> dict[int, float]:
@@ -177,16 +224,25 @@ class Searcher:
              required_text: str | None = None) -> DataFrame:
         """(doc_id, score, rank) — rank-identical to the brute-force oracle.
 
+        Without a filter this is the module docstring's fan-out: the
+        driver plans the shards from the postings' block metadata, ONE
+        Spark job of one stage scores shard chunks with
+        reader._serve_worker, and the driver merges the candidates
+        (reader.merge_candidates) into a LocalRelation — the result is
+        bitwise identical to LocalSearcher.topk, which runs the same
+        three pieces without Spark.
+
         `match_all=True` = conjunctive (AND) query.  A query with terms
         missing from the dictionary can match nothing under AND.
 
         `attr_filter` = {attr: value} equality filters over the
         doc_attrs table (built with attr_cols=[...]) — ES bool-query
-        filter context on the INDEX path: per shard, the postings
-        cogroup with the shard's qualifying doc ids (the Lucene
-        filter-bitset analog; the attrs scan is partition-pruned and
-        predicate-pushed) and the scorer masks candidates before
-        truncation.  df/avgdl are untouched, exactly like ES.
+        filter context on the INDEX path, planned in Spark instead: per
+        shard, the pruned postings scan cogroups with the shard's
+        qualifying doc ids (the Lucene filter-bitset analog; the attrs
+        scan is partition-pruned and predicate-pushed), the scorer
+        masks candidates before truncation, then TakeOrdered + rank.
+        df/avgdl are untouched, exactly like ES.
 
         `attr_where` = an arbitrary Column predicate over doc_attrs
         (range filters, geo distance via query.geo.haversine_km, ...) —
@@ -194,9 +250,9 @@ class Searcher:
 
         `exclude_text` = ES bool `must_not` terms: any doc containing
         ANY of its analyzed terms is excluded.  The excluded terms'
-        postings ride the same pruned per-shard scan (no extra job or
-        shuffle); the kernel decodes their doc-id runs into a ban set
-        before scoring.  df/avgdl are untouched, exactly like ES —
+        postings ride the same scans as the query terms (no extra job);
+        they add nothing to a shard's bound, and the kernel decodes
+        their doc-id runs into a ban set before scoring.  df/avgdl are untouched, exactly like ES —
         and a doc matching both a positive and an excluded term is
         excluded (must_not wins).
 
@@ -205,8 +261,8 @@ class Searcher:
         that (score desc, doc_id asc) sort position.  Stateless and
         depth-independent — page 1000 costs the same as page 1, unlike
         from/size.  The kernel keeps candidates at/below the cursor
-        (overinclusive by one rounding ulp) and this method re-applies
-        the exact rounded comparison before the global limit.
+        (overinclusive by one rounding ulp) and the final merge
+        re-applies the exact rounded comparison before the cut at k.
 
         `required_text` = ES bool `must` clauses alongside `query_text`
         as the `should` clauses: docs must contain EVERY analyzed
@@ -215,74 +271,60 @@ class Searcher:
         only (ES minimum_should_match with must present).  A term in
         both texts is treated as must (scored once).  See bool_topk for
         the request-shaped wrapper."""
-        idf = self.plan(query_text) if query_text else {}
+        from search_ingest_spark.query import reader
+
+        resolved = reader.resolve_terms(
+            self, query_text, match_all=match_all, min_match=min_match,
+            exclude_text=exclude_text, required_text=required_text)
+        if resolved is None:
+            return ranked_frame(self.spark)
+        idf, excluded, required_tids = resolved
+        if not attr_filter and attr_where is None:
+            tids, plan = reader.plan_exact(self._postings_ds, idf,
+                                           self.avgdl, excluded)
+            return self._fan_out(self._postings_path, tids, plan,
+                                 reader.kernel_params(
+                                     idf, k, avgdl=self.avgdl,
+                                     match_all=match_all,
+                                     round_to=round_to, excluded=excluded,
+                                     min_match=min_match,
+                                     after=search_after,
+                                     required_tids=required_tids))
         out_schema = "doc_id long, score double"
-        n_query_terms = (len(set(analyze_query(query_text, mode=self.mode)))
-                         if query_text else 0)
-        required_tids: frozenset[int] | None = None
-        if required_text is not None:
-            req_idf = self.plan(required_text)
-            n_req = len(set(analyze_query(required_text, mode=self.mode)))
-            if len(req_idf) < n_req or not req_idf:
-                # a must term absent from the dictionary matches nothing
-                return self.spark.createDataFrame(
-                    [], out_schema + ", rank int")
-            required_tids = frozenset(req_idf)
-            idf = {**idf, **req_idf}  # must wins on overlap (same idf)
-            if (min_match is not None
-                    and (len(idf) - len(req_idf)) < min_match):
-                return self.spark.createDataFrame(
-                    [], out_schema + ", rank int")
-        if (not idf or (match_all and len(idf) < n_query_terms)
-                or (required_tids is None and min_match is not None
-                    and len(idf) < min_match)):
-            return self.spark.createDataFrame([], out_schema + ", rank int")
-        excluded: frozenset[int] = (
-            frozenset(self.plan(exclude_text)) if exclude_text else frozenset()
-        )
-        term_ids = sorted(idf)
-        scan_ids = sorted(set(term_ids) | excluded)
+        scan_ids = sorted(set(idf) | excluded)
         pruned = self.postings.where(F.col("term_id").isin([int(t) for t in scan_ids]))
-        if attr_filter or attr_where is not None:
-            attrs = self.cat.read(ib.DOC_ATTRS_TABLE)
-            if attr_filter:
-                # scalar = ES `term`; list = ES `terms`; dict with
-                # gte/gt/lte/lt = ES `range` (query/filters.py — one
-                # spec compiled identically for both query paths)
-                attrs = attrs.where(filters.spark_cond(attr_filter))
-            if attr_where is not None:
-                attrs = attrs.where(attr_where)
-            avgdl, _idf = self.avgdl, idf
+        attrs = self.cat.read(ib.DOC_ATTRS_TABLE)
+        if attr_filter:
+            # scalar = ES `term`; list = ES `terms`; dict with
+            # gte/gt/lte/lt = ES `range` (query/filters.py — one
+            # spec compiled identically for both query paths)
+            attrs = attrs.where(filters.spark_cond(attr_filter))
+        if attr_where is not None:
+            attrs = attrs.where(attr_where)
+        avgdl, _idf = self.avgdl, idf
 
-            def co_scorer(post_pdf: pd.DataFrame,
-                          allow_pdf: pd.DataFrame) -> pd.DataFrame:
-                if len(post_pdf) == 0 or len(allow_pdf) == 0:
-                    return pd.DataFrame({
-                        "doc_id": pd.array([], dtype="int64"),
-                        "score": pd.array([], dtype="float64"),
-                    })
-                banned = None
-                if excluded:
-                    post_pdf, banned = split_banned(post_pdf, excluded)
-                allowed = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
-                return shard_topk(post_pdf, idf=_idf, k=k, avgdl=avgdl,
-                                  match_all=match_all, round_to=round_to,
-                                  allowed=allowed, min_match=min_match,
-                                  banned=banned, after=search_after,
-                                  required_tids=required_tids)
+        def co_scorer(post_pdf: pd.DataFrame,
+                      allow_pdf: pd.DataFrame) -> pd.DataFrame:
+            if len(post_pdf) == 0 or len(allow_pdf) == 0:
+                return pd.DataFrame({
+                    "doc_id": pd.array([], dtype="int64"),
+                    "score": pd.array([], dtype="float64"),
+                })
+            banned = None
+            if excluded:
+                post_pdf, banned = split_banned(post_pdf, excluded)
+            allowed = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
+            return shard_topk(post_pdf, idf=_idf, k=k, avgdl=avgdl,
+                              match_all=match_all, round_to=round_to,
+                              allowed=allowed, min_match=min_match,
+                              banned=banned, after=search_after,
+                              required_tids=required_tids)
 
-            per_shard = (
-                pruned.groupBy("shard")
-                .cogroup(attrs.select("shard", "doc_id").groupBy("shard"))
-                .applyInPandas(co_scorer, schema=out_schema)
-            )
-        else:
-            scorer = _make_shard_scorer(idf, k, self.avgdl, match_all, round_to,
-                                        min_match, excluded_tids=excluded,
-                                        after=search_after,
-                                        required_tids=required_tids)
-            per_shard = _scored_partitions(pruned, scorer, out_schema)
-        topk = per_shard
+        topk = (
+            pruned.groupBy("shard")
+            .cogroup(attrs.select("shard", "doc_id").groupBy("shard"))
+            .applyInPandas(co_scorer, schema=out_schema)
+        )
         if round_to is not None:
             topk = topk.withColumn("score", F.round("score", round_to))
         if search_after is not None:
@@ -297,6 +339,49 @@ class Searcher:
 
         return ranked_desc(topk, "score", "doc_id")
 
+    def _fan_out(self, path: str, tids: list[int], plan: list,
+                 params: dict) -> DataFrame:
+        """Score a UB-descending shard `plan` in ONE Spark job of one
+        stage and merge on the driver: task i runs reader._serve_worker
+        in-process over the stride-split chunk i of the plan (each chunk
+        stays UB-descending and UB-balanced), against the pinned
+        snapshot `path`, from θ0 = -inf — each task's θ gates only its
+        own batches, so its candidates hold its chunk's exact top k.
+        The driver merges all candidates with the serving path's exact
+        tail and returns the ranked rows as a LocalRelation.  Each task
+        ends by trimming its worker's zipimporter cache
+        (reader.drop_zip_subpackage_importers), which takes ~200 ms off
+        the next task that worker runs."""
+        from search_ingest_spark.query import reader
+
+        if not plan:
+            return ranked_frame(self.spark)
+        n = min(self.spark.sparkContext.defaultParallelism, len(plan))
+        chunks = [plan[j::n] for j in range(n)]
+        batch = reader.LocalSearcher._PAR_BATCH
+
+        def score(batches):
+            import pyarrow as pa
+
+            from search_ingest_spark.query.reader import (
+                _serve_worker, drop_zip_subpackage_importers,
+            )
+
+            try:
+                for b in batches:
+                    for i in b.column(0).to_pylist():
+                        for fr in _serve_worker((path, chunks[i], tids,
+                                                 params, -np.inf, batch)):
+                            yield pa.RecordBatch.from_pandas(
+                                fr, preserve_index=False)
+            finally:
+                drop_zip_subpackage_importers()
+
+        got = (self.spark.range(n, numPartitions=n)
+               .mapInArrow(score, "doc_id long, score double").toArrow())
+        doc_ids, scores = reader.merge_candidates(
+            got["doc_id"].to_numpy(), got["score"].to_numpy(), params)
+        return ranked_frame(self.spark, doc_ids, scores)
 
     # -- composed bool query --------------------------------------------------
     def bool_topk(self, *, must: str | None = None,
@@ -335,22 +420,16 @@ class Searcher:
     def _topk_expanded(self, idf: dict[int, float], k: int,
                        round_to: int | None) -> DataFrame:
         """Shared tail for dictionary-expansion queries (prefix /
-        wildcard / regexp / fuzzy OR-rewrites): pruned postings scan →
-        per-shard kernel → global TakeOrdered → rank."""
-        out_schema = "doc_id long, score double"
-        if not idf:
-            return self.spark.createDataFrame([], out_schema + ", rank int")
-        pruned = self.postings.where(
-            F.col("term_id").isin([int(t) for t in idf])
-        )
-        scorer = _make_shard_scorer(idf, k, self.avgdl, False, round_to)
-        topk = _scored_partitions(pruned, scorer, out_schema)
-        if round_to is not None:
-            topk = topk.withColumn("score", F.round("score", round_to))
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        from search_ingest_spark.ranking import ranked_desc
+        wildcard / regexp / fuzzy OR-rewrites): the expanded idf map
+        runs as a plain OR top-k through the one-job fan-out."""
+        from search_ingest_spark.query import reader
 
-        return ranked_desc(topk, "score", "doc_id")
+        if not idf:
+            return ranked_frame(self.spark)
+        tids, plan = reader.plan_exact(self._postings_ds, idf, self.avgdl)
+        return self._fan_out(self._postings_path, tids, plan,
+                             reader.kernel_params(idf, k, avgdl=self.avgdl,
+                                                  round_to=round_to))
 
     def match_bool_prefix_topk(
         self, text: str, k: int = 10, *, max_expansions: int = 50,
@@ -367,8 +446,7 @@ class Searcher:
         own idf.  (doc_id, score, rank)."""
         tokens = analyze_query(text, mode=self.mode)
         if not tokens:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int")
+            return ranked_frame(self.spark)
         idf: dict[int, float] = {}
         if len(tokens) > 1:
             idf.update(self.plan(" ".join(tokens[:-1])))
@@ -532,7 +610,7 @@ class Searcher:
         n_terms = len(set(analyze_query(query_text, mode=self.mode)))
         if (not idf or (match_all and len(idf) < n_terms)
                 or (min_match is not None and len(idf) < min_match)):
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, out_schema)
         pruned = self.postings.where(
             F.col("term_id").isin([int(t) for t in idf]))
         avgdl, _idf, _ma, _mm = self.avgdl, idf, match_all, min_match
@@ -725,7 +803,7 @@ class Searcher:
         tf = Counter(analyze_query(row[0]["text"], mode=self.mode))
         out_schema = "term string, tf int"
         if not tf:
-            return self.spark.createDataFrame([], out_schema + ", df long")
+            return local_frame(self.spark, out_schema + ", df long")
         tf_df = self.spark.createDataFrame(
             sorted(tf.items()), out_schema)
         dict_df = self.term_dict.where(
@@ -895,8 +973,7 @@ class Searcher:
                 f"seed doc {seed_doc_id} not found in doc_store")
         tf = Counter(analyze_query(row[0]["text"], mode=self.mode))
         if not tf:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int")
+            return ranked_frame(self.spark)
         dfm = {
             r["term"]: int(r["df"])
             for r in self.term_dict.where(
@@ -926,7 +1003,7 @@ class Searcher:
         out_schema = ("token string, suggestion string, df long, "
                       "distance int, rank int")
         if not tokens:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, out_schema)
         from pyspark.sql import Window
 
         tok_df = self.spark.createDataFrame(
@@ -993,7 +1070,7 @@ class Searcher:
         tokens = analyze_query(text, mode=self.mode)
         out_schema = "suggestion string, score double, rank int"
         if not tokens:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, out_schema)
         if len(tokens) > 8:
             raise ValueError(
                 f"phrase suggester caps input at 8 tokens, got "
@@ -1069,7 +1146,7 @@ class Searcher:
         out_schema = ("term string, tf int, dl int, df long, "
                       "idf double, partial double")
         if not terms:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, out_schema)
         tbl = self._dict_ds.to_table(
             columns=["term_id", "term", "df"],
             filter=pc.field("term").isin(terms))
@@ -1077,7 +1154,7 @@ class Searcher:
             tbl["term_id"].to_pylist(), tbl["term"].to_pylist(),
             tbl["df"].to_pylist())}
         if not meta:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, out_schema)
         d = int(doc_id)
         pruned = self.postings.where(
             F.col("term_id").isin(list(meta))
@@ -1204,24 +1281,20 @@ class Searcher:
         impact-ordered-postings idea on columnar storage.  Scores carry
         ~1% quantization noise, hence opt-in with its own oracle that
         models the same quantization (bm25.bm25_quantized_oracle_sql)."""
+        from search_ingest_spark.query import reader
+
         idf = self.plan(query_text)
-        out_schema = "doc_id long, score double"
         if not idf:
-            return self.spark.createDataFrame([], out_schema + ", rank int")
-        pq = self.cat.read(ib.POSTINGS_Q_TABLE)
-        pruned = pq.where(F.col("term_id").isin([int(t) for t in idf]))
-        _idf = idf
+            return ranked_frame(self.spark)
+        if self._pq is None:
+            import pyarrow.dataset as ds
 
-        def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            return shard_topk_impact(pdf, idf=_idf, k=k, round_to=round_to)
-
-        topk = _scored_partitions(pruned, scorer, out_schema)
-        if round_to is not None:
-            topk = topk.withColumn("score", F.round("score", round_to))
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        from search_ingest_spark.ranking import ranked_desc
-
-        return ranked_desc(topk, "score", "doc_id")
+            path = self.cat.data_path(ib.POSTINGS_Q_TABLE)
+            self._pq = (path, ds.dataset(path, partitioning="hive"))
+        path, pq = self._pq
+        tids, plan = reader.plan_quantized(pq, idf)
+        return self._fan_out(path, tids, plan, reader.kernel_params(
+            idf, k, quantized=True, round_to=round_to))
 
     # -- batch execution ------------------------------------------------------
     def topk_many(
@@ -1240,7 +1313,7 @@ class Searcher:
         plans = {qid: p for qid, p in plans.items() if p}
         out_schema = "query_id int, doc_id long, score double"
         if not plans:
-            return self.spark.createDataFrame([], out_schema + ", rank int")
+            return local_frame(self.spark, out_schema + ", rank int")
         all_tids = sorted({t for p in plans.values() for t in p})
         pruned = self.postings.where(
             F.col("term_id").isin([int(t) for t in all_tids])
@@ -1293,26 +1366,6 @@ def _scored_partitions(pruned: DataFrame, scorer, out_schema: str) -> DataFrame:
                          if len(frames) > 1 else frames[0])
 
     return pruned.repartition("shard").mapInPandas(run, schema=out_schema)
-
-
-def _make_shard_scorer(idf: dict[int, float], k: int, avgdl: float,
-                       match_all: bool = False, round_to: int | None = None,
-                       min_match: int | None = None,
-                       excluded_tids: frozenset[int] | None = None,
-                       after: tuple[float, int] | None = None,
-                       required_tids: frozenset[int] | None = None):
-    """Build the per-shard applyInPandas kernel (closure ships idf/k)."""
-
-    def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-        banned = None
-        if excluded_tids:
-            pdf, banned = split_banned(pdf, excluded_tids)
-        return shard_topk(pdf, idf=idf, k=k, avgdl=avgdl, match_all=match_all,
-                          round_to=round_to, min_match=min_match,
-                          banned=banned, after=after,
-                          required_tids=required_tids)
-
-    return scorer
 
 
 def split_banned(

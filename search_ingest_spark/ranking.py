@@ -102,6 +102,12 @@ def ranked_desc(
     order, plus any `extra_cols` carried through the sort struct
     unchanged (they never participate in the ordering — every caller's
     id column is unique, see module doc).
+
+    Preconditions, not checked here: scores are finite and ids are
+    unique.  A NaN score sorts above every number (Spark's NaN order)
+    instead of tying; duplicate ids let the extra columns decide ties.
+    The top-k front-ends check their scores before ranking
+    (query.reader.merge_candidates rejects NaN).
     """
     extras = list(extra_cols or [])
     if _is_numeric(df, id_col):
@@ -145,7 +151,11 @@ def ranked_asc(
     ascending twin of :func:`ranked_desc`, same no-window one-group
     aggregate.  Plain ascending struct ordering needs no negation at
     all: struct(key, id, payload...) ASC is (key asc, id asc) with the
-    payload unreachable behind the unique id."""
+    payload unreachable behind the unique id.
+
+    Same preconditions as :func:`ranked_desc`, not checked here: keys
+    are finite (a NaN key sorts last instead of tying) and ids are
+    unique (duplicates let the extra columns decide ties)."""
     extras = list(extra_cols or [])
     arr = F.sort_array(
         F.collect_list(

@@ -98,9 +98,13 @@ class TestAllScoresPlan:
         # over hash(shard)-complete partitions, not per-group)
         assert "hashpartitioning(shard" in plan, plan
         assert "MapInPandas" in plan, plan
-        # …and NO corpus tokenize: the scan reads postings columns only,
-        # never the documents table's text
-        assert "text" not in plan, plan
+        # …and NO corpus tokenize: the plan's one scan reads postings
+        # columns only (its ReadSchema), never the documents' text
+        scans = df._jdf.queryExecution().sparkPlan().collectLeaves()
+        assert scans.length() == 1, plan
+        cols = set(scans.apply(0).requiredSchema().fieldNames())
+        postings = {f.name for f in built.get_mapping(ib.POSTINGS_TABLE)}
+        assert cols and cols <= postings, (cols, plan)
 
     def test_brute_oracle_still_tokenizes(self, documents_smoke):
         # sanity for the assertion above: the brute path DOES carry the

@@ -5,6 +5,8 @@ designed for: filter pushdown into parquet scans, column pruning,
 broadcast of small sides, TakeOrderedAndProject for top-k (no global
 sort), zero exchanges in the doc-local tokenization stage.  These
 assertions fail if a refactor silently degrades the plan at 100x data.
+The unfiltered top-k runs its Spark job inside the call, so its
+contract is one job of one stage per call and a LocalRelation result.
 """
 
 from __future__ import annotations
@@ -30,8 +32,26 @@ def optimized_of(df) -> str:
 def doc_index(spark, documents_smoke, tmp_path_factory):
     cat = Catalog(spark, str(tmp_path_factory.mktemp("planidx")))
     ib.build_index(spark, documents_smoke, cat, mode="simple", docs_per_shard=16,
-                   with_positions=True, attr_cols=["lang", "source"])
+                   with_positions=True, attr_cols=["lang", "source"],
+                   quantize=True)
     return cat
+
+
+def next_job_id(spark) -> int:
+    j = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return j if isinstance(j, int) else j.get()
+
+
+def jobs_and_stages(spark, run) -> tuple[int, int]:
+    """(Spark jobs, stages) started while `run()` builds AND collects a
+    frame, counted by job id and the status tracker."""
+    first = next_job_id(spark)
+    run().collect()
+    last = next_job_id(spark)
+    tracker = spark.sparkContext.statusTracker()
+    stages = sum(len(tracker.getJobInfo(j).stageIds)
+                 for j in range(first, last))
+    return last - first, stages
 
 
 class TestScanPlans:
@@ -62,22 +82,49 @@ class TestQueryPlans:
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
         assert "SortMergeJoin" not in plan
 
-    def test_topk_is_take_ordered_not_global_sort(self, spark, doc_index):
-        s = Searcher(spark, doc_index)
-        plan = plan_of(s.topk("data", 10))
-        assert "TakeOrderedAndProject" in plan
+    @pytest.mark.parametrize("call", [
+        lambda s: s.topk("data table", 10),
+        lambda s: s.topk("data table", 10, round_to=4, min_match=1,
+                         exclude_text="spark"),
+        lambda s: s.topk_quantized("data table", 10),
+        lambda s: s.topk("zzzqqq", 10),
+    ], ids=["topk", "topk_options", "topk_quantized", "empty"])
+    def test_topk_result_is_local_relation(self, spark, doc_index, call):
+        # the shard fan-out merges on the driver: the returned frame
+        # holds the ranked rows themselves — no Exchange, no
+        # TakeOrdered or rank aggregate left for collect() to run
+        df = call(Searcher(spark, doc_index))
+        assert optimized_of(df).startswith("LocalRelation"), optimized_of(df)
+        plan = plan_of(df)
+        assert "LocalTableScan" in plan, plan
+        assert "Exchange" not in plan, plan
 
-    def test_wand_scores_shard_partitioned(self, spark, doc_index):
-        # the scorer kernel runs once per task over hash(shard)-complete
-        # partitions (wand._scored_partitions): the plan must carry a
-        # shard repartition feeding a MapInPandas — NOT a per-group
-        # FlatMapGroupsInPandas (whose per-group sort + Arrow roundtrip
-        # cost ~8 ms x n_shards per query, r07 §9c)
+    @pytest.mark.parametrize("call", [
+        lambda s: s.topk("data table", 10),
+        lambda s: s.topk("data table", 10, round_to=4, match_all=True),
+        lambda s: s.topk("table", 10, required_text="data",
+                         search_after=(0.5, 3), round_to=4),
+        lambda s: s.topk_quantized("data table", 10),
+    ], ids=["topk", "match_all", "required_after", "topk_quantized"])
+    def test_topk_is_one_job_one_stage(self, spark, doc_index, call):
         s = Searcher(spark, doc_index)
-        plan = plan_of(s.topk("data table", 10))
-        assert "MapInPandas" in plan
-        assert "hashpartitioning(shard" in plan
-        assert "FlatMapGroupsInPandas" not in plan
+        call(s).collect()  # warm the Python workers
+        assert jobs_and_stages(spark, lambda: call(s)) == (1, 1)
+
+    def test_expanded_topk_is_one_job_one_stage(self, spark, doc_index):
+        # the prefix expansion itself is a dictionary query of its own;
+        # the scoring of the expanded terms is the one-job fan-out
+        s = Searcher(spark, doc_index)
+        idf = s.plan_prefix("da", 5)
+        assert idf
+        assert jobs_and_stages(
+            spark, lambda: s._topk_expanded(idf, 10, 4)) == (1, 1)
+
+    def test_empty_topk_starts_no_job(self, spark, doc_index):
+        s = Searcher(spark, doc_index)
+        assert jobs_and_stages(spark, lambda: s.topk("zzzqqq", 10)) == (0, 0)
+        assert jobs_and_stages(
+            spark, lambda: s.topk("data", 10, min_match=3)) == (0, 0)
 
     def test_positions_scan_pushes_term_filter(self, spark, doc_index):
         # a phrase query must read only its terms' row groups

@@ -83,6 +83,27 @@ class TestDenseIdsFastPath:
         ids = sorted(r["nid"] for r in out.collect())
         assert ids == [0, 1, 2]
 
+    def test_float_nan_key_equals_window_path(self, spark, monkeypatch):
+        # a NaN key passes a set-based uniqueness check (NaN != NaN),
+        # but Python's sorted() has no place for it while Spark orders
+        # NaN above every number: with the size cap forced open, the
+        # ids must still be the window path's
+        df = spark.createDataFrame(
+            [(float("nan"),), (2.5,), (-1.0,), (0.0,), (7.0,)], "k double")
+
+        def ids():
+            # str(k): NaN never equals itself, its string does
+            return sorted((r["nid"], str(r["k"]))
+                          for r in dense_ids(df, "k", "nid").collect())
+
+        monkeypatch.setattr(ib, "_DENSE_IDS_DRIVER_MAX", 10**6)
+        fast = ids()
+        monkeypatch.setattr(ib, "_DENSE_IDS_DRIVER_MAX", -1)
+        slow = ids()
+        assert fast == slow
+        assert slow == [(0, "-1.0"), (1, "0.0"), (2, "2.5"), (3, "7.0"),
+                        (4, "nan")]
+
 
 class TestWriteSmallArrowCreate:
     def test_create_with_ddl_roundtrips(self, spark, tmp_path):
