@@ -420,11 +420,6 @@ class Catalog:
 
         return ds.dataset(self.data_path(name)).to_table().to_pylist()
 
-    _PA_TYPES = {
-        "long": "int64", "bigint": "int64", "int": "int32",
-        "double": "float64", "string": "string",
-    }
-
     def write_small(self, name: str, rows: list[tuple], ddl: str) -> None:
         """Driver-side write of a TINY table via pyarrow — no Spark
         job; identical snapshot/meta/txn semantics to write().  `ddl`
@@ -432,39 +427,47 @@ class Catalog:
         published meta stores the equivalent Spark schema so read()
         round-trips exactly."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql import types as T
 
         schema = T._parse_datatype_string(ddl)
-        names = [f.name for f in schema.fields]
-        pa_fields = []
-        for f in schema.fields:
-            tn = f.dataType.simpleString()
-            if tn not in self._PA_TYPES:
-                raise ValueError(f"write_small supports {sorted(self._PA_TYPES)}"
-                                 f" columns only, got {tn} for {f.name!r}")
-            pa_fields.append(pa.field(f.name, getattr(pa, self._PA_TYPES[tn])()))
-        cols = list(zip(*rows)) if rows else [[] for _ in names]
-        tbl = pa.table(
-            {n: pa.array(list(c), type=fld.type)
-             for n, c, fld in zip(names, cols, pa_fields)}
-        )
-        tdir = self._dir(name)
-        os.makedirs(tdir, exist_ok=True)
-        gen = f"snap-{uuid.uuid4().hex[:12]}"
-        target = os.path.join(tdir, gen)
-        os.makedirs(target)
-        pq.write_table(tbl, os.path.join(target, "part-00000.parquet"))
-        meta = {"current": gen, "schema": json.dumps(schema.jsonValue())}
-        prev = self._load_meta(name)
-        cleanup = [prev["current"]] if prev and prev["current"] != gen else []
-        self._publish(name, meta, cleanup)
+        pa_schema = self._arrow_schema(schema)
+        cols = list(zip(*rows)) if rows else [[] for _ in pa_schema]
+        self._write_arrow_snapshot(name, pa.table(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
+            schema=pa_schema), schema)
 
     _ARROW_TYPES = {
         "long": "int64", "bigint": "int64", "int": "int32",
         "integer": "int32", "string": "string", "double": "float64",
         "float": "float32", "boolean": "bool_", "binary": "binary",
     }
+
+    @classmethod
+    def _arrow_type(cls, dt):
+        """pyarrow type of a Spark column type, as Spark writes it."""
+        import pyarrow as pa
+
+        if isinstance(dt, T.ArrayType):
+            return pa.list_(cls._arrow_type(dt.elementType))
+        if isinstance(dt, T.TimestampType):
+            return pa.timestamp("us", tz="UTC")
+        tn = dt.simpleString()
+        if tn not in cls._ARROW_TYPES:
+            raise ValueError(f"no arrow type for column type {tn}")
+        return getattr(pa, cls._ARROW_TYPES[tn])()
+
+    @classmethod
+    def _arrow_schema(cls, schema: T.StructType):
+        import pyarrow as pa
+
+        return pa.schema([pa.field(f.name, cls._arrow_type(f.dataType))
+                          for f in schema.fields])
+
+    def arrow_schema(self, name: str, drop: tuple[str, ...] = ()):
+        """The table's published schema as a pyarrow schema, without
+        the `drop` columns (e.g. the partition column)."""
+        schema = self.get_mapping(name)
+        return self._arrow_schema(T.StructType(
+            [f for f in schema.fields if f.name not in drop]))
 
     def arrow_dataset(self, name: str):
         """pyarrow dataset over the table's CURRENT snapshot with the
@@ -477,21 +480,11 @@ class Catalog:
         import pyarrow.dataset as pads
 
         root = self.data_path(name)
-        spark_schema = self.get_mapping(name)
         part_names = {
             d.split("=", 1)[0] for d in os.listdir(root)
             if "=" in d and os.path.isdir(os.path.join(root, d))
         }
-
-        def _pa_field(f):
-            tn = f.dataType.simpleString()
-            if tn not in self._ARROW_TYPES:
-                raise ValueError(
-                    f"arrow_dataset: unsupported column type {tn} "
-                    f"for {f.name!r} in table {name!r}")
-            return pa.field(f.name, getattr(pa, self._ARROW_TYPES[tn])())
-
-        full = pa.schema([_pa_field(f) for f in spark_schema.fields])
+        full = self.arrow_schema(name)
         if part_names:
             part_schema = pa.schema(
                 [full.field(n) for n in full.names if n in part_names])
@@ -509,42 +502,78 @@ class Catalog:
 
         The table must exist unless `ddl` (a Spark DDL schema string)
         is given, which CREATEs it with that published schema."""
-        import pyarrow.parquet as pq
-
         meta = self._load_meta(name)
         if meta is None:
             if ddl is None:
                 raise FileNotFoundError(
                     f"write_small_arrow requires an existing table: {name}")
             schema = T._parse_datatype_string(ddl)
-            schema_json = json.dumps(schema.jsonValue())
         else:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
-            schema_json = meta["schema"]
-        tbl = tbl.select([f.name for f in schema.fields])
+        self._write_arrow_snapshot(name, tbl, schema)
+
+    def _write_arrow_snapshot(self, name: str, tbl, schema: T.StructType) -> None:
+        """Publish `tbl`, cast to `schema`, as table `name`'s new
+        one-file snapshot."""
+        import pyarrow.parquet as pq
+
+        tbl = tbl.select(schema.names).cast(self._arrow_schema(schema))
         tdir = self._dir(name)
-        os.makedirs(tdir, exist_ok=True)
         gen = f"snap-{uuid.uuid4().hex[:12]}"
         target = os.path.join(tdir, gen)
         os.makedirs(target)
         pq.write_table(tbl, os.path.join(target, "part-00000.parquet"))
-        self._publish(name, {"current": gen, "schema": schema_json},
-                      [meta["current"]] if meta else [])
+        prev = self._load_meta(name)
+        self._publish(name, {"current": gen,
+                             "schema": json.dumps(schema.jsonValue())},
+                      [prev["current"]] if prev else [])
+
+    def stage_path(self, name: str) -> str:
+        """A fresh staging dir inside table `name`'s directory, for a
+        caller that writes a partitioned stage itself (write_arrow_
+        partitions, possibly from Spark tasks) and then publishes it
+        with replace_partitions."""
+        return os.path.join(self._dir(name), f"stage-{uuid.uuid4().hex[:12]}")
+
+    @staticmethod
+    def write_arrow_partitions(stage: str, tbl, partition_col: str,
+                               schema=None) -> None:
+        """Write a pyarrow Table into `stage` as hive partition dirs
+        (`<col>=<v>/part-<uuid>.parquet`, the partition column kept in
+        the dir name only, like Spark's partitionBy), cast to `schema`
+        (the published schema without the partition column; default:
+        the table's own other columns)."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        col = tbl[partition_col]
+        if schema is None:
+            data = tbl.drop_columns([partition_col])
+        else:
+            data = tbl.select(schema.names).cast(schema)
+        for v in pc.unique(col).to_pylist():
+            sub = os.path.join(stage, f"{partition_col}={v}")
+            os.makedirs(sub, exist_ok=True)
+            pq.write_table(data.filter(pc.equal(col, v)), os.path.join(
+                sub, f"part-{uuid.uuid4().hex[:12]}.parquet"))
 
     def replace_partitions(
         self,
         name: str,
-        df: DataFrame,
+        data,
         partition_col: str,
         dirty_values: list,
         drop_values: list | None = None,
     ) -> None:
         """Replace ONLY the named partition directories of a
-        `partition_by`-written table with `df`'s data (which must contain
+        `partition_by`-written table with `data` (which must contain
         only dirty partitions) — the Parquet stand-in for Iceberg's
-        dynamic partition overwrite.  Clean partitions are untouched on
-        disk (hardlinked, zero data copy), so an incremental batch costs
-        IO proportional to the dirty set, not the table.
+        dynamic partition overwrite.  `data` is a Spark DataFrame, a
+        pyarrow Table (written on the driver, no Spark job), or the
+        path of a stage dir from stage_path(name) that the caller has
+        already filled.  Clean partitions are untouched on disk
+        (hardlinked, zero data copy), so an incremental batch costs IO
+        proportional to the dirty set, not the table.
 
         Crash safety matches write(): a FULL new snapshot dir is staged
         (clean partition dirs hardlinked, dirty ones moved in from the
@@ -554,8 +583,17 @@ class Catalog:
         cur = self.data_path(name)
         meta = self._load_meta(name)
         tdir = self._dir(name)
-        stage = os.path.join(tdir, f"stage-{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+        if isinstance(data, str):
+            stage = data
+        else:
+            stage = self.stage_path(name)
+            if isinstance(data, DataFrame):
+                data.write.mode("overwrite").partitionBy(
+                    partition_col).parquet(stage)
+            else:
+                self.write_arrow_partitions(
+                    stage, data, partition_col,
+                    self.arrow_schema(name, drop=(partition_col,)))
 
         gen = f"snap-{uuid.uuid4().hex[:12]}"
         target = os.path.join(tdir, gen)
@@ -574,7 +612,7 @@ class Catalog:
             sub = f"{partition_col}={v}"
             src = os.path.join(stage, sub)
             if os.path.exists(src):
-                # a dirty partition absent from `df` (all rows deleted)
+                # a dirty partition absent from `data` (all rows deleted)
                 # simply isn't carried into the new snapshot
                 os.rename(src, os.path.join(target, sub))
         shutil.rmtree(stage, ignore_errors=True)

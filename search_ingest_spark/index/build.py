@@ -84,6 +84,7 @@ from pyspark.sql import types as T
 from search_ingest_spark.analysis import doc_terms_pandas
 from search_ingest_spark.catalog import Catalog
 from search_ingest_spark.index.codec import BLOCK_SIZE, encode_blocks_bulk
+from search_ingest_spark.session import trimmed
 
 TERM_DICT_TABLE = "term_dict"
 DOC_LENS_TABLE = "doc_lens"
@@ -102,6 +103,41 @@ SORTED_ATTRS_SEG_PREFIX = "attrs_sorted_seg_"
 SORTED_ATTRS_OWNERS = "attrs_sorted_owners"
 BIGRAM_TABLE = "bigram_stats"
 MANIFEST_TABLE = "build_manifest"
+# one row: the avgdl postings_q's impacts were quantized with, so a
+# changefeed batch quantizes its spliced shards the same way
+POSTINGS_Q_META = "postings_q_meta"
+
+# How a changefeed batch (streaming/incremental.py) maintains each index
+# table.  apply_changes walks this registry, so a table added here
+# without a rule, or with a rule the batch cannot honour, is dropped
+# rather than left stale.
+SPLICE = "splice"  # rewritten per dirty shard from the post-batch docs
+DELTA = "delta"    # updated from the batch's exact aggregates / segments
+KEEP = "keep"      # build-time metadata the batch leaves as it is
+DROP = "drop"      # not recomputable per batch: dropped until a rebuild
+TABLE_RULES = {
+    DOC_LENS_TABLE: SPLICE,
+    POSTINGS_TABLE: SPLICE,
+    POSTINGS_Q_TABLE: SPLICE,   # dropped with its meta if that is absent
+    DOC_STORE_TABLE: SPLICE,    # dropped if a field is not a doc column
+    POSITIONS_TABLE: SPLICE,
+    DOC_ATTRS_TABLE: SPLICE,    # needs the indexer's attr_exprs
+    TERM_DICT_TABLE: DELTA,
+    STATS_TABLE: DELTA,
+    SORTED_ATTRS_TABLE: DELTA,  # sorted delta segments, needs sort_field
+    SORTED_ATTRS_META: DELTA,
+    SORTED_ATTRS_OWNERS: DELTA,
+    POSTINGS_Q_META: KEEP,
+    BIGRAM_TABLE: DROP,
+    MANIFEST_TABLE: DROP,
+}
+
+
+def table_rule(name: str) -> str | None:
+    """The registry rule of an index table (None: not an index table)."""
+    if name.startswith(SORTED_ATTRS_SEG_PREFIX):
+        return DELTA
+    return TABLE_RULES.get(name)
 
 _STATE_FILE = "build_state.json"
 
@@ -604,7 +640,7 @@ def make_packed_tokenizer(id_col: str, text_col: str, mode: str,
                 names.append("poss")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return kernel
+    return trimmed(kernel)
 
 
 def _iter_shard_groups(it, dps: int, columns: list[str]):
@@ -725,7 +761,7 @@ def make_arrow_encoder(dps: int):
                       "last_doc_id", "n_docs", "max_tf", "sum_tf",
                       "min_dl", "data"])
 
-    return encode
+    return trimmed(encode)
 
 
 def make_arrow_impact_encoder(dps: int, avgdl: float):
@@ -762,7 +798,7 @@ def make_arrow_impact_encoder(dps: int, avgdl: float):
             ], names=["term", "shard", "block_id", "first_doc_id",
                       "last_doc_id", "n_docs", "max_impact", "data"])
 
-    return encode
+    return trimmed(encode)
 
 
 def make_arrow_positions_writer(dps: int):
@@ -792,7 +828,122 @@ def make_arrow_positions_writer(dps: int):
                 pa.array(np.full(len(order), shard, dtype=np.int32)),
             ], names=["doc_id", "term", "positions", "shard"])
 
-    return kernel
+    return trimmed(kernel)
+
+
+# ---------------------------------------------------------------------------
+# the changefeed splice kernel: the packed-row kernels above as plain
+# functions over Arrow tables, one call per group of dirty shards
+# ---------------------------------------------------------------------------
+
+
+def _splice_schemas():
+    """Arrow schemas of the kernel outputs (explicit, so that a shard
+    with no tokens still yields typed empty tables, and no Spark type
+    parser is needed inside a task)."""
+    import pyarrow as pa
+
+    i32, i64, st = pa.int32(), pa.int64(), pa.string()
+    head = [("term", st), ("shard", i32), ("block_id", i32),
+            ("first_doc_id", i64), ("last_doc_id", i64), ("n_docs", i32)]
+    packed = [("doc_id", i64), ("dl", i32), ("terms", pa.list_(st)),
+              ("tfs", pa.list_(i32))]
+    return {
+        "packed": pa.schema(packed),
+        "packed_pos": pa.schema(packed + [("poss",
+                                           pa.list_(pa.list_(i32)))]),
+        POSTINGS_TABLE: pa.schema(head + [
+            ("max_tf", i32), ("sum_tf", i64), ("min_dl", i32),
+            ("data", pa.binary())]),
+        POSTINGS_Q_TABLE: pa.schema(head + [("max_impact", i32),
+                                            ("data", pa.binary())]),
+        POSITIONS_TABLE: pa.schema([("doc_id", i64), ("term", st),
+                                    ("positions", pa.list_(i32)),
+                                    ("shard", i32)]),
+    }
+
+
+@dataclass
+class Splice:
+    """splice_shards' result: each spliced table's new partitions of
+    the input's shards (pyarrow Tables with a `shard` column; postings
+    and postings_q keyed by term STRING), the shards' per-term
+    (term, ndf, ncf), and their (n_docs, sum_dl)."""
+    tables: dict
+    terms: object
+    n_docs: int
+    sum_dl: int
+
+
+def splice_shards(rows, *, dps: int, mode: str, positions: bool = False,
+                  quant_avgdl: float | None = None,
+                  store_fields: list[str] = (),
+                  attr_names: list[str] = ()) -> Splice:
+    """The changefeed's splice kernel (streaming/incremental.py): from
+    the complete post-batch doc rows of one or more dirty shards
+    (a pyarrow Table: doc_id, text, plus any stored-field and attr
+    columns), the new partitions of those shards of every spliced
+    table — doc_lens, postings, postings_q (quantized at `quant_avgdl`,
+    the avgdl the table was built with), positions, doc_store and
+    doc_attrs.  It runs the build's own kernels, so a spliced shard is
+    what a fresh build writes for it; term ids are attached by the
+    caller (attach_term_ids) once the batch's dictionary delta is
+    known.  Pure and picklable: the driver calls it for a micro-batch,
+    one mapInArrow task per shard group calls it for a backlog."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sch = _splice_schemas()
+
+    def table(batches, schema):
+        return pa.Table.from_batches(list(batches), schema=schema)
+
+    def by_doc(t, cols):
+        t = t.select(["doc_id", *cols]).sort_by("doc_id")
+        return t.append_column(
+            "shard", pc.divide(t["doc_id"], dps).cast(pa.int32()))
+
+    packed_tbl = table(
+        make_packed_tokenizer("doc_id", "text", mode, positions)(
+            rows.select(["doc_id", "text"]).to_batches()),
+        sch["packed_pos" if positions else "packed"])
+    packed = packed_tbl.to_batches()
+    doc_lens = by_doc(packed_tbl, ["dl"])
+    blocks = table(make_arrow_encoder(dps)(iter(packed)),
+                   sch[POSTINGS_TABLE])
+    out = {DOC_LENS_TABLE: doc_lens, POSTINGS_TABLE: blocks}
+    if quant_avgdl is not None:
+        out[POSTINGS_Q_TABLE] = table(
+            make_arrow_impact_encoder(dps, quant_avgdl)(iter(packed)),
+            sch[POSTINGS_Q_TABLE])
+    if positions:
+        out[POSITIONS_TABLE] = table(
+            make_arrow_positions_writer(dps)(iter(packed)),
+            sch[POSITIONS_TABLE])
+    if store_fields:
+        out[DOC_STORE_TABLE] = by_doc(rows, store_fields)
+    if attr_names:
+        out[DOC_ATTRS_TABLE] = by_doc(rows, attr_names)
+    # df = Σ n_docs, cf = Σ sum_tf over the blocks: exact, since every
+    # posting lands in exactly one block (the build's term_dict identity)
+    agg = blocks.group_by("term").aggregate(
+        [("n_docs", "sum"), ("sum_tf", "sum")])
+    terms = pa.table({"term": agg["term"],
+                      "ndf": agg["n_docs_sum"].cast(pa.int64()),
+                      "ncf": agg["sum_tf_sum"].cast(pa.int64())})
+    return Splice(out, terms, doc_lens.num_rows,
+                  int(pc.sum(doc_lens["dl"]).as_py() or 0))
+
+
+def attach_term_ids(blocks, terms, term_ids, cols: list[str]):
+    """Key term-string blocks by term id (terms[i] ↔ term_ids[i]) in
+    the postings layout: `cols`, sorted by (shard, term_id, block_id)."""
+    import pyarrow.compute as pc
+
+    ids = pc.take(term_ids, pc.index_in(blocks["term"], value_set=terms))
+    return blocks.append_column("term_id", ids).sort_by(
+        [("shard", "ascending"), ("term_id", "ascending"),
+         ("block_id", "ascending")]).select(cols)
 
 
 # ---------------------------------------------------------------------------
@@ -858,6 +1009,7 @@ def build_index(
         for flag, table in ((with_positions, POSITIONS_TABLE),
                             (bool(attr_cols), DOC_ATTRS_TABLE),
                             (quantize, POSTINGS_Q_TABLE),
+                            (quantize, POSTINGS_Q_META),
                             (bool(store_fields), DOC_STORE_TABLE),
                             (with_bigrams, BIGRAM_TABLE),
                             (bool(sort_field), SORTED_ATTRS_TABLE),
@@ -1155,9 +1307,11 @@ def build_index(
         # exact stats.sum_dl — no extra tables.
         from search_ingest_spark.analysis import doc_bigrams_pandas
 
+        def bigrams(it):
+            yield from doc_bigrams_pandas(it, text_col=text_col, mode=mode)
+
         big = docs.select(text_col).mapInPandas(
-            lambda it: doc_bigrams_pandas(it, text_col=text_col, mode=mode),
-            schema="w1 string, w2 string, cnt long",
+            trimmed(bigrams), schema="w1 string, w2 string, cnt long",
         ).groupBy("w1", "w2").agg(F.sum("cnt").alias("cnt"))
         cat.write(BIGRAM_TABLE, big.repartition(n_part, "w1"),
                   sort_within_partitions=["w1", "w2"])
@@ -1233,7 +1387,7 @@ def build_index(
 
     if quantize:
 
-        @stage("postings_quant", tables=[POSTINGS_Q_TABLE])
+        @stage("postings_quant", tables=[POSTINGS_Q_TABLE, POSTINGS_Q_META])
         def _quant():
             # impact-quantized postings: SAME cached exchange, one extra
             # map pass (no extra shuffle) — avgdl baked in at build time
@@ -1252,6 +1406,7 @@ def build_index(
                 partition_by=["shard"],
                 sort_within_partitions=["shard", "term_id", "block_id"],
             )
+            cat.write_small(POSTINGS_Q_META, [(avgdl_q,)], "avgdl double")
 
     if "df" in _srt:
         _srt["df"].unpersist()

@@ -39,6 +39,7 @@ bounds exchanged as the global θ.
 from __future__ import annotations
 
 import heapq
+from multiprocessing import context as mp_context
 
 import numpy as np
 import pandas as pd
@@ -83,9 +84,9 @@ from search_ingest_spark.query.wand import _round_half_up  # noqa: E402
 
 _SERVE_POOL = None
 _SERVE_POOL_SIZE = 0
-# set after a pool failure (e.g. an unguarded __main__ that the
-# multiprocessing bootstrap re-executes): the process falls back to the
-# serial scan permanently rather than retrying a broken pool per query
+# set after a pool failure (e.g. a worker killed by the OS): the
+# process falls back to the serial scan permanently rather than
+# retrying a broken pool per query
 _SERVE_POOL_BROKEN = False
 
 
@@ -164,19 +165,42 @@ def _serve_procs() -> int:
         str(min(8, max(2, (_os.cpu_count() or 4) // 4)))))
 
 
+class _NoMainProcess(mp_context.ForkServerProcess):
+    """A forkserver process started without the caller's `__main__`.
+    multiprocessing's spawn preparation records the main script's path
+    (or module name) and the child re-runs it as `__mp_main__`, so a
+    script without a main guard would run its top level again in every
+    pool worker.  Handing the preparation a blank main module leaves
+    nothing to re-run."""
+
+    @staticmethod
+    def _Popen(process_obj):
+        import sys
+        import types
+
+        main = sys.modules["__main__"]
+        sys.modules["__main__"] = types.ModuleType("__main__")
+        try:
+            return mp_context.ForkServerProcess._Popen(process_obj)
+        finally:
+            sys.modules["__main__"] = main
+
+
+class _NoMainForkServerContext(mp_context.ForkServerContext):
+    Process = _NoMainProcess
+
+
 def _get_serve_pool():
     global _SERVE_POOL, _SERVE_POOL_SIZE
     if _SERVE_POOL is None:
-        import multiprocessing as mp
         from concurrent.futures import ProcessPoolExecutor
 
         _SERVE_POOL_SIZE = _serve_procs()
         # forkserver: children fork from a CLEAN server process — no
         # parent JVM/pyarrow state (fork hazard).  Preload THIS module
-        # instead of the default __main__ (a stdin/REPL parent has no
-        # re-importable main, and re-running a script main would
-        # recurse); children then resolve _serve_worker by reference.
-        ctx = mp.get_context("forkserver")
+        # instead of the default __main__; children then resolve
+        # _serve_worker by reference and never run the caller's main.
+        ctx = _NoMainForkServerContext()
         ctx.set_forkserver_preload(["search_ingest_spark.query.reader"])
         _SERVE_POOL = ProcessPoolExecutor(
             max_workers=_SERVE_POOL_SIZE, mp_context=ctx)
@@ -277,25 +301,6 @@ def _scan_plan(dataset, tfilter, plan, kernel, k: int, guard: float,
             elif item > heap[0]:
                 heapq.heapreplace(heap, item)
     return frames, heap
-
-
-def drop_zip_subpackage_importers() -> None:
-    """Forget the per-subpackage zipimporters of this process's
-    sys.path_importer_cache (kept: one importer per archive).  A Spark
-    Python worker imports pyspark from pyspark.zip, which leaves one
-    zipimporter per imported subpackage (16 after a mapInArrow task),
-    and it calls importlib.invalidate_caches() at the start of every
-    task — on Python 3.11 that re-reads the archive's whole directory
-    once per importer: ~200 ms of each task on a 4-vCPU VM, most of a
-    one-task job's wall.  The entries are a cache; an import that needs
-    one rebuilds it from the archive's cached directory.  Called at the
-    end of a task so the worker's next task starts cheap."""
-    import sys
-    import zipimport
-
-    for path, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
-            sys.path_importer_cache.pop(path, None)
 
 
 def _serve_worker(args):
@@ -885,8 +890,7 @@ class LocalSearcher:
                         frames.extend(fr)
                     done = True
                 except Exception:
-                    # e.g. BrokenProcessPool under an unguarded
-                    # __main__ (the mp bootstrap re-executes it) —
+                    # e.g. BrokenProcessPool after a worker died —
                     # disable the pool for this process and serve
                     # serially; results are identical either way
                     _SERVE_POOL_BROKEN = True

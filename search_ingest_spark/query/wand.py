@@ -56,6 +56,7 @@ from search_ingest_spark.index import build as ib
 from search_ingest_spark.query import filters
 from search_ingest_spark.index.codec import decode_block, decode_blocks_bulk
 from search_ingest_spark.query.bm25 import B, K1, analyze_query
+from search_ingest_spark.session import trimmed
 
 # segment-count cap per kernel invocation (see shard_topk): bounds the
 # Python segment loop's fixed cost while keeping pruning block-accurate
@@ -323,7 +324,7 @@ class Searcher:
         topk = (
             pruned.groupBy("shard")
             .cogroup(attrs.select("shard", "doc_id").groupBy("shard"))
-            .applyInPandas(co_scorer, schema=out_schema)
+            .applyInPandas(trimmed(co_scorer), schema=out_schema)
         )
         if round_to is not None:
             topk = topk.withColumn("score", F.round("score", round_to))
@@ -350,8 +351,8 @@ class Searcher:
         The driver merges all candidates with the serving path's exact
         tail and returns the ranked rows as a LocalRelation.  Each task
         ends by trimming its worker's zipimporter cache
-        (reader.drop_zip_subpackage_importers), which takes ~200 ms off
-        the next task that worker runs."""
+        (session.trimmed), which takes ~200 ms off the next task that
+        worker runs."""
         from search_ingest_spark.query import reader
 
         if not plan:
@@ -363,22 +364,18 @@ class Searcher:
         def score(batches):
             import pyarrow as pa
 
-            from search_ingest_spark.query.reader import (
-                _serve_worker, drop_zip_subpackage_importers,
-            )
+            from search_ingest_spark.query.reader import _serve_worker
 
-            try:
-                for b in batches:
-                    for i in b.column(0).to_pylist():
-                        for fr in _serve_worker((path, chunks[i], tids,
-                                                 params, -np.inf, batch)):
-                            yield pa.RecordBatch.from_pandas(
-                                fr, preserve_index=False)
-            finally:
-                drop_zip_subpackage_importers()
+            for b in batches:
+                for i in b.column(0).to_pylist():
+                    for fr in _serve_worker((path, chunks[i], tids,
+                                             params, -np.inf, batch)):
+                        yield pa.RecordBatch.from_pandas(
+                            fr, preserve_index=False)
 
         got = (self.spark.range(n, numPartitions=n)
-               .mapInArrow(score, "doc_id long, score double").toArrow())
+               .mapInArrow(trimmed(score), "doc_id long, score double")
+               .toArrow())
         doc_ids, scores = reader.merge_candidates(
             got["doc_id"].to_numpy(), got["score"].to_numpy(), params)
         return ranked_frame(self.spark, doc_ids, scores)
@@ -1365,7 +1362,8 @@ def _scored_partitions(pruned: DataFrame, scorer, out_schema: str) -> DataFrame:
             yield scorer(pd.concat(frames, ignore_index=True)
                          if len(frames) > 1 else frames[0])
 
-    return pruned.repartition("shard").mapInPandas(run, schema=out_schema)
+    return pruned.repartition("shard").mapInPandas(trimmed(run),
+                                                   schema=out_schema)
 
 
 def split_banned(

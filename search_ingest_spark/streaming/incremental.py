@@ -1,8 +1,9 @@
-"""Incremental ingest — the reference's changefeed half, Spark-native.
+"""Incremental ingest — the reference's changefeed half.
 
 Reference behavior being reproduced (SURVEY §2 A2/A3/A13-A15, §3.2):
 - `process_resource(action, model)` dispatches Created/Updated/Deleted
-  events one at a time (`/root/reference/src/search-ingest/table.cr:25-46`);
+  events one at a time (`/root/reference/src/search-ingest/table.cr:25-46`),
+  each one Elasticsearch bulk operation — no cluster job per event;
 - updates are upserts keyed by doc id (`doc_as_upsert`,
   `elastic.cr:431-449`), deletes remove by id (`elastic.cr:452-464`);
 - ordering is last-writer-wins per document;
@@ -10,35 +11,52 @@ Reference behavior being reproduced (SURVEY §2 A2/A3/A13-A15, §3.2):
   our analog is checkpointed streaming + idempotent batch application,
   so replays are safe and nothing restarts from zero.
 
-Spark shape: a batch `apply_changes(changes)` operator (callable from
-`foreachBatch`) that
-1. deduplicates the batch latest-per-url (`max_by(warc_ts)` — the
-   reference's per-event ordering collapsed into batch semantics);
-2. assigns dense doc ids: existing urls keep their id (updates),
-   new urls extend the id space (appends), so shard ranges stay dense;
-3. replaces only the DIRTY partitions of the doc store (shard-
-   partitioned) and the url→id mapping (hash-bucket-partitioned);
-4. splices the index **per shard** and DELTA-maintains the global
-   stats: doc_lens is spliced per shard; (n_docs, Σdl) and the
-   term_dict df/cf are updated by subtracting the dirty shards' old
-   per-term aggregates and adding the new ones.  Existing term ids are
-   kept stable and new terms appended so clean shards' postings stay
-   valid.  BM25's global exactness is preserved because the deltas are
-   exact integer arithmetic on the same aggregates a full re-agg would
-   compute.
+`PageIndexer.apply_changes(changes)` (callable from `foreachBatch`)
+applies one batch of (url, warc_ts, html/text, _op) events:
+1. last-writer-wins per url across both op kinds (`latest_per_key`);
+2. dense doc ids: existing urls keep their id, new urls extend the id
+   space in url order, so shard ranges stay dense;
+3. every dirty shard — a shard holding a touched id — is SPLICED:
+   `index.build.splice_shards`, one pure pyarrow/numpy function that
+   runs the build's own tokenize/encode kernels, turns the shard's
+   post-batch doc rows into its new partition of every spliced table
+   (docs, doc_lens, postings, postings_q, positions, doc_store,
+   doc_attrs).  Clean shards' files are hardlinked, never read;
+4. the global aggregates are DELTA-maintained with exact integer
+   arithmetic: (n_docs, Σdl) and the term_dict df/cf lose the dirty
+   shards' old counts and gain the new ones.  Existing term ids stay,
+   new terms are appended, so clean shards' postings stay valid and
+   BM25 stays exactly what a rebuild computes.
 
-Cost model per batch (the O(dirty) contract, asserted by
-tests/test_incremental.py::test_clean_shards_never_read):
-- reads:  dirty shards' docs/doc_lens/postings partitions (the old
-          per-term df/cf comes from the postings' columnar block
-          aggregates — no token stream exists on disk), dirty
-          id-buckets of the url mapping, the (vocabulary-sized) term
-          dictionary, 1-row stats/counters;
-- writes: the same dirty partitions, plus a full term_dict rewrite
-          (dictionary-class table, orders of magnitude smaller than the
-          corpus) and 1-row stats/counters.
-Nothing scans the full docs/postings tables — there is no per-batch
-O(corpus) term re-aggregation.
+Which tables are spliced, delta-maintained, kept or dropped is the
+registry `index.build.TABLE_RULES`; the batch walks it over the
+catalog, so a table is never silently left stale.  A table whose rule
+this indexer cannot honour (postings_q without its recorded build
+avgdl, doc_attrs without attr_exprs, a doc_store field that is no doc
+column, the sorted attr tables without sort_field, bigram_stats,
+build_manifest) is dropped in the batch's transaction.
+
+Placement.  A batch of at most MICRO_BATCH_CAP events runs on the
+driver: one `limit(cap + 1).toArrow()` is both the size probe and the
+batch (the only Spark job: no Python UDF in its plan — html is turned
+into text on the driver), ids resolve with a partition-filtered
+pyarrow read of the touched url→id buckets, the dirty shards' old rows
+are pyarrow reads, and every write is a driver-side parquet write.
+attr_exprs and the url hash evaluate over a LocalRelation, which
+starts no job.  A larger batch (a backlog replay) resolves ids with
+Spark joins and runs the same kernel in one mapInArrow job, one task
+per group of dirty shards writing its partitions straight into the
+catalog's stage dirs; a second job attaches the new term ids to the
+staged postings.  Both placements commit identical tables (asserted
+in tests/test_incremental.py).
+
+Cost per batch (the O(dirty) contract, asserted by
+tests/test_incremental.py::test_clean_shards_never_read): reads are the
+dirty shards' docs/doc_lens/postings partitions (the old per-term
+df/cf comes from the postings' columnar block aggregates), the touched
+id-buckets, the vocabulary-sized term_dict and one-row tables; writes
+are the same dirty partitions of every spliced table, a full term_dict
+rewrite, and one-row stats/counters.  Nothing scans a full table.
 
 Atomicity: every table mutation of a batch is staged inside ONE catalog
 transaction (catalog.begin/commit — the Iceberg multi-table commit
@@ -47,35 +65,34 @@ state, so a foreachBatch replay re-derives deltas from a CONSISTENT
 snapshot: replaying an already-committed batch computes old == new →
 delta 0 → no-op (idempotent), and replaying an uncommitted one starts
 from untouched state.
+
+Each batch returns a `ChangeStats` record: counts, dirty shards,
+placement, Spark jobs started and wall seconds per phase.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import shutil
+import time
+from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from search_ingest_spark.analysis import extract_text_udf
+from search_ingest_spark.analysis import extract_text, extract_text_udf
 from search_ingest_spark.catalog import Catalog
 from search_ingest_spark.index import build as ib
 from search_ingest_spark.index.build import dense_ids
-
-
-def _prof(label: str, t0: float) -> float:
-    """Env-gated stage timer (SPARK_GRAFT_PROF=1): prints the elapsed
-    time of a batch section.  Returns a fresh t0 for chaining."""
-    import os as _os
-    import time as _time
-
-    t1 = _time.perf_counter()
-    if _os.environ.get("SPARK_GRAFT_PROF"):
-        print(f"    [prof] {label}: {t1 - t0:.2f}s", flush=True)
-    return t1
+from search_ingest_spark.session import trimmed
 
 DOCS_TABLE = "docs"
 DOC_IDS_TABLE = "doc_ids"
 COUNTERS_TABLE = "counters"
+DOC_COLS = ["doc_id", "url", "warc_ts", "text"]
 
 # url→id mapping hash-bucket count: a batch touching U urls reads and
 # rewrites ≤ U buckets ≈ U/N_ID_BUCKETS of the mapping, never all of it
@@ -84,19 +101,24 @@ N_ID_BUCKETS = 256
 # change-batch schema: (url, warc_ts, html?, text?, lang?, _op)
 OP_UPSERT = "upsert"
 OP_DELETE = "delete"
+_OPS = pa.array([OP_UPSERT, OP_DELETE])
 
-# batches at or under this many events take the driver-resolved control
-# plane (collect url/op/bucket — never text — and resolve ids with a
-# pyarrow point-read, the ES-bulk analog); larger batches (backlog
-# replays) take the distributed join path.  100k control rows ≈ a few
-# MB of driver memory.
+# batches of at most this many events run on the driver (module doc);
+# 100k events are a few hundred MB of driver memory at most
 MICRO_BATCH_CAP = 100_000
 
-# dictionaries at or under this many terms take the driver-side delta
-# path inside the micro-batch splice (a few hundred MB of driver memory
-# at the cap); larger vocabularies keep the distributed dictionary
-# rewrite.
+# dictionaries of at most this many terms take the driver-side delta
+# (a few hundred MB of driver memory at the cap); larger vocabularies
+# keep the distributed dictionary rewrite
 DRIVER_DICT_MAX_ROWS = 5_000_000
+
+_COUNTERS_DDL = "max_doc_id long, max_term_id long"
+# the spliced tables keyed by term id: the kernel emits their blocks
+# keyed by term string until the batch's dictionary delta is known
+_TERM_KEYED = {ib.POSTINGS_TABLE: ib.POSTINGS_COLS,
+               ib.POSTINGS_Q_TABLE: ib.POSTINGS_Q_COLS}
+_TERMS_SCHEMA = pa.schema([("term", pa.string()), ("ndf", pa.int64()),
+                           ("ncf", pa.int64())])
 
 
 def latest_per_key(df: DataFrame, key: str, ts: str, payload_cols: list[str]) -> DataFrame:
@@ -106,6 +128,23 @@ def latest_per_key(df: DataFrame, key: str, ts: str, payload_cols: list[str]) ->
     return df.groupBy(key).agg(F.max_by(s, s).alias("_s")).select(
         key, *[F.col(f"_s.{c}").alias(c) for c in [ts, *payload_cols]]
     )
+
+
+def latest_per_key_arrow(tbl: pa.Table, key: str, ts: str,
+                         payload_cols: list[str]) -> pa.Table:
+    """latest_per_key over a pyarrow Table, with the same winner: the
+    row with the greatest (ts, *payload) — compared field by field,
+    null lowest, strings by UTF-8 bytes as Spark's struct order does."""
+    cols = [ts, *payload_cols]
+    t = tbl.select([key, *cols]).take(pc.sort_indices(
+        tbl, sort_keys=[(key, "ascending")] + [(c, "descending") for c in cols],
+        null_placement="at_end"))
+    if t.num_rows < 2:
+        return t
+    k = t[key].combine_chunks()
+    first = pa.concat_arrays([pa.array([True]),
+                              pc.not_equal(k[1:], k[:-1]).fill_null(True)])
+    return t.filter(first)
 
 
 def normalize_pages(pages: DataFrame) -> DataFrame:
@@ -122,12 +161,62 @@ def _bucket_col(url_col: str = "url"):
     return F.pmod(F.xxhash64(url_col), F.lit(N_ID_BUCKETS)).cast("int")
 
 
+def _local_select(spark: SparkSession, tbl: pa.Table, *cols) -> pa.Table:
+    """Evaluate Spark column expressions over a driver-side Arrow table
+    with no Spark job: a projection of a LocalRelation is folded into a
+    LocalRelation at planning time, and collect() of one runs none."""
+    df = spark.createDataFrame(tbl).select(*cols)
+    return pa.Table.from_pylist([r.asDict() for r in df.collect()],
+                                schema=Catalog._arrow_schema(df.schema))
+
+
+def _with_shard(tbl: pa.Table, dps: int) -> pa.Table:
+    return tbl.append_column(
+        "shard", pc.divide(tbl["doc_id"], dps).cast(pa.int32()))
+
+
+def _next_job_id(spark: SparkSession) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
 @dataclass
 class ChangeStats:
+    """The structured record of one apply_changes batch."""
     upserts: int
     deletes: int
     new_docs: int
     dirty_shards: list[int]
+    placement: str = "driver"      # "driver" or "spark" (module doc)
+    spark_jobs: int = 0            # jobs the session started meanwhile
+    phase_s: dict = field(default_factory=dict)  # probe/resolve/splice/commit
+
+
+@dataclass
+class _Batch:
+    """A resolved batch: counts, dirty sets, and the upserted rows
+    (doc_id, url, warc_ts, text) and deleted ids, as pyarrow on the
+    driver placement or as Spark frames on the backlog placement."""
+    n_up: int
+    n_new: int
+    n_del: int
+    dirty: list[int]
+    dirty_buckets: list[int]
+    ups: object
+    del_ids: object
+    touched_urls: object
+    id_rows: object             # the touched url→id buckets, rewritten
+    cached: list = field(default_factory=list)
+
+
+@dataclass
+class _Plan:
+    """What the batch does with each existing index table (registry
+    rules resolved against this catalog and indexer)."""
+    splice: set
+    drop: list
+    store_fields: list
+    quant_avgdl: float | None
+    sorted_meta: dict | None
 
 
 class PageIndexer:
@@ -155,7 +244,7 @@ class PageIndexer:
         instead of dropping them: updated docs' attr values are
         recomputable from the batch.  `sort_field` (one of attr_exprs)
         additionally keeps the index-sorted copy alive across batches
-        via Lucene-style sorted delta segments (see _sorted_delta_writes)."""
+        via Lucene-style sorted delta segments (see _sorted_segment_writes)."""
         self.spark = spark
         self.cat = cat
         self.mode = mode
@@ -178,96 +267,6 @@ class PageIndexer:
 
         return f"{ib.SORTED_ATTRS_SEG_PREFIX}{int(seq)}"
 
-    def _attr_maintenance_writes(
-        self, upserts: DataFrame, del_id_frame: DataFrame,
-        merged: DataFrame, dirty: list[int], n_part: int,
-        n_up: int, n_del: int,
-    ) -> tuple[list, int]:
-        """Writes that keep doc_attrs and the index-sorted table ALIVE
-        across a changefeed batch (VERDICT r5 item 4 — previously both
-        were dropped, silently degrading the 64×-I/O sorted-top-k path
-        to a full rebuild after the first update).
-
-        doc_attrs is shard-partitioned: the dirty shards' attrs are
-        recomputed from the already-persisted merged doc frame (one
-        projection, no extra scan) and spliced with the same
-        replace_partitions the doc store uses.
-
-        The index-sorted table gets Lucene's answer — sorted DELTA
-        SEGMENTS: the batch's upserted docs' attr rows are written as
-        one new globally-sorted segment table (attrs_sorted_seg_<n>),
-        and an owners table (doc_id → owning segment seq, -1 deleted)
-        records which segment holds each touched doc's LIVE row; the
-        base build is segment 0.  The reader merges fragments across
-        segments in max-stat order with the same strictly-below-kth
-        early termination, filtering rows to owners[doc] == segment
-        (reader.py::sorted_topk).  Costs per batch: one O(batch)
-        sorted write + one O(touched-since-build) owners rewrite —
-        never an O(corpus) re-sort.  apply_changes folds segments back
-        into the base past SORTED_COMPACT_SEGS (the merge policy).
-
-        Returns ([(tag, thunk)], n_segs_after); n_segs_after is -1
-        when the sorted table is not maintained."""
-        from search_ingest_spark.index import build as ib
-
-        cat = self.cat
-        writes: list = []
-        n_segs_after = -1
-        if not self.attr_exprs:
-            return writes, n_segs_after
-        attr_names = list(self.attr_exprs)
-        if cat.exists(ib.DOC_ATTRS_TABLE):
-            attrs_new = self._attr_cols(merged).select(
-                "doc_id", *attr_names, "shard")
-            writes.append(("doc_attrs", lambda: cat.replace_partitions(
-                ib.DOC_ATTRS_TABLE, attrs_new.repartition(n_part, "shard"),
-                "shard", dirty_values=dirty)))
-        if self.sort_field and cat.exists(ib.SORTED_ATTRS_META):
-            meta = cat.read_small(ib.SORTED_ATTRS_META)[0]
-            if meta["sort_field"] != self.sort_field:
-                raise ValueError(
-                    f"index is sorted by {meta['sort_field']!r} but this "
-                    f"indexer maintains {self.sort_field!r}")
-            n_seg = int(meta.get("n_segs") or 0)
-            seq_new = n_seg + 1 if n_up > 0 else n_seg
-            ups_attrs = self._attr_cols(upserts).select("doc_id", *attr_names)
-            own_parts = []
-            if n_up > 0:
-                own_parts.append(ups_attrs.select("doc_id").withColumn(
-                    "seq", F.lit(seq_new).cast("long")))
-            if n_del > 0:
-                own_parts.append(del_id_frame.select("doc_id").withColumn(
-                    "seq", F.lit(-1).cast("long")))
-            if own_parts:
-                touched_own = own_parts[0]
-                for p in own_parts[1:]:
-                    touched_own = touched_own.unionByName(p)
-                if cat.exists(ib.SORTED_ATTRS_OWNERS):
-                    # old owners resolve their snapshot path NOW (before
-                    # any staged write can shadow it)
-                    old_own = cat.read(ib.SORTED_ATTRS_OWNERS)
-                    new_own = (old_own.join(touched_own.select("doc_id"),
-                                            "doc_id", "left_anti")
-                               .unionByName(touched_own))
-                else:
-                    new_own = touched_own
-                writes.append(("attrs_owners", lambda: cat.write(
-                    ib.SORTED_ATTRS_OWNERS, new_own)))
-            if n_up > 0:
-                seg = (ups_attrs
-                       .repartitionByRange(
-                           n_part, F.desc_nulls_last(self.sort_field),
-                           F.asc("doc_id"))
-                       .sortWithinPartitions(
-                           F.desc_nulls_last(self.sort_field),
-                           F.asc("doc_id")))
-                seg_name = self._seg_table(seq_new)
-                writes.append(("attrs_seg", lambda: cat.write(seg_name, seg)))
-                writes.append(("attrs_meta", lambda: cat.write_small(
-                    ib.SORTED_ATTRS_META, [(self.sort_field, 1, seq_new)],
-                    "sort_field string, descending int, n_segs long")))
-            n_segs_after = seq_new
-        return writes, n_segs_after
 
     def compact_sorted(self) -> None:
         """Fold every sorted delta segment back into ONE globally
@@ -373,631 +372,470 @@ class PageIndexer:
 
     # -- changefeed batch (A2/A13-A15) ---------------------------------------
     def apply_changes(self, changes: DataFrame) -> ChangeStats:
-        """Apply one micro-batch of (url, warc_ts, html/text, _op) events.
-
-        Latency shape (VERDICT r03 item 3): a micro-batch is dominated
-        by per-JOB fixed cost (scheduling + stage planning), not data —
-        so the batch (a) sizes its shuffles to the BATCH, not the
-        session (a 50-doc batch under 32-way shuffles pays 32 tasks of
-        pure scheduling per stage), and (b) runs independent table
-        writes on concurrent driver threads (Spark's scheduler accepts
-        jobs from multiple threads; the txn journal is append-only and
-        order-independent across distinct tables)."""
-        old_shuf = self.spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            return self._apply_changes_impl(changes, old_shuf)
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", old_shuf)
-
-    def _apply_changes_impl(self, changes: DataFrame,
-                            old_shuf: str) -> ChangeStats:
-        from concurrent.futures import ThreadPoolExecutor
-
-        import time as _time
-        _t = _time.perf_counter()
+        """Apply one batch of (url, warc_ts, html/text, _op) events: on
+        the driver, or with Spark past MICRO_BATCH_CAP events (module
+        doc).  Returns the batch's ChangeStats record."""
         spark, cat = self.spark, self.cat
-        # Last-writer-wins PER URL across BOTH op kinds (the reference
-        # consumes events in order, so a delete after an upsert in the
-        # same batch must win, and vice versa).  Tie-break on (op, text)
-        # struct order — 'upsert' > 'delete' lexicographically, i.e. an
-        # exact-timestamp tie resurrects the doc, deterministically.
+        job0, t0 = _next_job_id(spark), time.perf_counter()
+        phases = dict.fromkeys(("probe", "resolve", "splice", "commit"), 0.0)
+
+        def lap(name: str) -> None:
+            nonlocal t0
+            t1 = time.perf_counter()
+            phases[name], t0 = t1 - t0, t1
+
+        ev = changes.select("url", "warc_ts", "html", "text", "_op").limit(
+            MICRO_BATCH_CAP + 1).toArrow()
+        lap("probe")
+        counters = cat.read_small(COUNTERS_TABLE)[0]
+        base = int(counters["max_doc_id"]) + 1
+        driver = ev.num_rows <= MICRO_BATCH_CAP
+        b = (self._resolve_driver(ev, base) if driver
+             else self._resolve_spark(changes, base))
+        lap("resolve")
+        n_segs = -1
+        try:
+            if b.dirty:
+                plan = self._plan()
+                old = self._old_aggregates(b.dirty)
+                cat.begin()
+                try:
+                    splice = self._splice_driver if driver else self._splice_spark
+                    terms, n_docs, sum_dl, finish, n_segs = splice(b, plan)
+                    n_new_terms, dict_terms, dict_ids = self._term_dict_delta(
+                        old[0], terms, int(counters["max_term_id"]) + 1)
+                    finish(dict_terms, dict_ids)
+                    self._stats_delta(b.dirty, old[1:], (n_docs, sum_dl))
+                    lap("splice")
+                    cat.write_small(COUNTERS_TABLE, [(
+                        int(counters["max_doc_id"]) + b.n_new,
+                        int(counters["max_term_id"]) + n_new_terms,
+                    )], _COUNTERS_DDL)
+                    for t in plan.drop:
+                        cat.drop(t)
+                    cat.commit()
+                except BaseException:
+                    cat.rollback()
+                    raise
+                lap("commit")
+        finally:
+            for df in b.cached:
+                df.unpersist()
+        if n_segs > self.SORTED_COMPACT_SEGS:
+            self.compact_sorted()
+        return ChangeStats(b.n_up, b.n_del, b.n_new, b.dirty,
+                           "driver" if driver else "spark",
+                           _next_job_id(spark) - job0, phases)
+
+    def _resolve_driver(self, ev: pa.Table, base: int) -> _Batch:
+        """The micro-batch control plane, all on the driver: html → text,
+        last-writer-wins, ids from a point-read of the touched url→id
+        buckets (the ES-bulk analog: ids by lookup, not by join), and
+        the rewritten rows of those buckets."""
+        spark, cat = self.spark, self.cat
+        text = [t if t is not None else extract_text(h) for t, h in
+                zip(ev["text"].to_pylist(), ev["html"].to_pylist())]
+        ev = ev.set_column(ev.schema.get_field_index("text"), "text",
+                           pa.array(text, pa.string()))
+        latest = latest_per_key_arrow(ev, "url", "warc_ts", ["_op", "text"])
+        latest = latest.filter(pc.is_in(latest["_op"], value_set=_OPS))
+        if latest.num_rows == 0:
+            return _Batch(0, 0, 0, [], [], None, [], None, None)
+        urls = latest["url"].to_pylist()
+        buckets = _local_select(spark, latest.select(["url"]),
+                                _bucket_col().alias("b"))["b"].to_pylist()
+        dirty_buckets = sorted(set(buckets))
+        id_rows = cat.arrow_dataset(DOC_IDS_TABLE).to_table(
+            filter=pc.field("id_bucket").isin(dirty_buckets))
+        touched = pc.is_in(id_rows["url"], value_set=pa.array(urls))
+        known = id_rows.filter(touched)
+        idmap = dict(zip(known["url"].to_pylist(), known["doc_id"].to_pylist()))
+        ups = latest.filter(pc.equal(latest["_op"], OP_UPSERT))
+        up_urls = ups["url"].to_pylist()
+        # dense append in url (code point) order, as dense_ids assigns
+        novel = sorted(u for u in up_urls if u not in idmap)
+        idmap.update((u, base + i) for i, u in enumerate(novel))
+        up_ids = [idmap[u] for u in up_urls]
+        del_ids = [idmap[u] for u, op in zip(urls, latest["_op"].to_pylist())
+                   if op == OP_DELETE and u in idmap]
+        bucket_of = dict(zip(urls, buckets))
+        id_rows = pa.concat_tables([
+            id_rows.filter(pc.invert(touched)),
+            pa.table({"url": pa.array(up_urls, pa.string()),
+                      "doc_id": pa.array(up_ids, pa.int64()),
+                      "id_bucket": pa.array([bucket_of[u] for u in up_urls],
+                                            pa.int32())}),
+        ])
+        ups = pa.table({"doc_id": pa.array(up_ids, pa.int64()),
+                        "url": ups["url"], "warc_ts": ups["warc_ts"],
+                        "text": ups["text"]})
+        dirty = sorted({d // self.docs_per_shard for d in up_ids + del_ids})
+        return _Batch(len(up_ids), len(novel), len(del_ids), dirty,
+                      dirty_buckets, ups, del_ids, pa.array(urls), id_rows)
+
+    def _resolve_spark(self, changes: DataFrame, base: int) -> _Batch:
+        """The backlog control plane: the same resolution as Spark joins
+        over the touched url→id buckets (partition-pruned)."""
+        cat = self.cat
         ev = changes.select(
             "url", "warc_ts",
             F.coalesce(F.col("text"), extract_text_udf(F.col("html"))).alias("text"),
             "_op",
         )
-        # batch-proportional shuffle width: a change stream's own
-        # partition count tracks its volume (a micro-batch arrives in a
-        # handful of partitions, a backlog replay in hundreds); tiny
-        # batches under session-wide shuffles pay per-task scheduling
-        # for empty tasks in every stage.  Never exceeds the session
-        # setting; restored in the outer finally.
-        batch_shuf = max(8, min(int(old_shuf),
-                                changes.rdd.getNumPartitions()))
-        spark.conf.set("spark.sql.shuffle.partitions", str(batch_shuf))
-        # cache the (tiny) resolved batch: the html-extract UDF and the
-        # last-writer-wins window would otherwise re-run in every one
-        # of the downstream actions (VERDICT r03 item 3 — the batch
-        # fixed cost was dominated by repeated job scheduling, not data)
-        latest = latest_per_key(ev, "url", "warc_ts", ["_op", "text"]).persist()
-        ups = latest.where(F.col("_op") == OP_UPSERT).select("url", "warc_ts", "text")
-        dels = latest.where(F.col("_op") == OP_DELETE).select("url")
-
-        old_counters = cat.read_small(COUNTERS_TABLE)[0]
-        base = int(old_counters["max_doc_id"]) + 1
+        latest = latest_per_key(ev, "url", "warc_ts", ["_op", "text"]).where(
+            F.col("_op").isin(OP_UPSERT, OP_DELETE)).persist()
+        dirty_buckets = sorted(r[0] for r in latest.select(
+            _bucket_col().alias("b")).distinct().collect())
+        doc_ids_sub = cat.read(DOC_IDS_TABLE).where(
+            F.col("id_bucket").isin(dirty_buckets))
+        # ONE left join resolves every event (the mapping is unique per
+        # url, so left join + null test is exactly the inner/anti pair)
+        resolved = latest.join(doc_ids_sub.select("url", "doc_id"), "url", "left")
         is_up = F.col("_op") == OP_UPSERT
-        upserts_cached = None
-        del_ids = None
-
-        # ---- control plane: resolve urls → ids, counts, dirty sets ------
-        # MICRO-batch path (the changefeed steady state): collect the
-        # batch's CONTROL columns — url, op, bucket; never the text —
-        # and resolve ids with a pyarrow point-read of the touched
-        # mapping buckets, entirely driver-side.  This is the ES-bulk
-        # analog (ids resolved by point lookup, not by join) and
-        # replaces two shuffle-join probe jobs with one narrow collect.
-        # A batch over the cap (a backlog replay) falls back to the
-        # distributed join path below; the limit+1 collect is the probe.
-        ctl = (
-            latest.select("url", "_op", _bucket_col().alias("b"))
-            .limit(MICRO_BATCH_CAP + 1).collect()
+        known = resolved.where(is_up & F.col("doc_id").isNotNull()).select(
+            "url", "warc_ts", "text", "doc_id")
+        novel = dense_ids(
+            resolved.where(is_up & F.col("doc_id").isNull())
+            .select("url", "warc_ts", "text"), "url", "_rk0",
+        ).withColumn("doc_id", F.col("_rk0") + F.lit(base)).drop("_rk0")
+        ups = (known.withColumn("_new", F.lit(0))
+               .unionByName(novel.withColumn("_new", F.lit(1)))).persist()
+        del_ids = resolved.where(
+            (F.col("_op") == OP_DELETE) & F.col("doc_id").isNotNull()
+        ).select("doc_id").persist()
+        # ONE fused probe: counts + dirty shard ids
+        row = (
+            ups.select("doc_id", "_new", F.lit(0).alias("_d"))
+            .unionByName(del_ids.select(
+                "doc_id", F.lit(0).alias("_new"), F.lit(1).alias("_d")))
+            .select("_new", "_d", self._shard_col().alias("s"))
+            .agg(F.sum(1 - F.col("_d")).alias("n_up"),
+                 F.sum("_new").alias("n_new"), F.sum("_d").alias("n_del"),
+                 F.collect_set("s").alias("shards"))
+            .first()
         )
-        _t = _prof("ctl-probe", _t)
-        if len(ctl) <= MICRO_BATCH_CAP:
-            dirty_buckets = sorted({int(r["b"]) for r in ctl})
-            urls_up = [r["url"] for r in ctl if r["_op"] == OP_UPSERT]
-            urls_del = [r["url"] for r in ctl if r["_op"] == OP_DELETE]
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pads
+        id_rows = (
+            doc_ids_sub.join(latest.select("url"), "url", "left_anti")
+            .select("url", "doc_id", "id_bucket")
+            .unionByName(ups.select("url", "doc_id")
+                         .withColumn("id_bucket", _bucket_col()))
+        )
+        return _Batch(
+            int(row["n_up"] or 0), int(row["n_new"] or 0),
+            int(row["n_del"] or 0), sorted(int(s) for s in row["shards"] or []),
+            dirty_buckets, ups.drop("_new"), del_ids, latest.select("url"),
+            id_rows, [latest, ups, del_ids])
 
-            id_tbl = cat.arrow_dataset(DOC_IDS_TABLE).to_table(
-                columns=["url", "doc_id"],
-                filter=pc.field("id_bucket").isin(dirty_buckets)
-                & pc.field("url").isin(urls_up + urls_del),
-            )
-            idmap = dict(zip(id_tbl["url"].to_pylist(),
-                             id_tbl["doc_id"].to_pylist()))
-            # dense append in url order — identical ids to the
-            # distributed path's dense_ids (both sort by url codepoints)
-            novel_urls = sorted(u for u in urls_up if u not in idmap)
-            novel_ids = {u: base + i for i, u in enumerate(novel_urls)}
-            n_up, n_new, n_del = len(urls_up), len(novel_urls), 0
-            touched_ids = []
-            ids_rows = []
-            del_id_rows: list[tuple[int]] = []
-            for u in urls_up:
-                did = idmap.get(u)
-                if did is None:
-                    did = novel_ids[u]
-                ids_rows.append((u, int(did)))
-                touched_ids.append(int(did))
-            for u in urls_del:
-                did = idmap.get(u)
-                if did is not None:
-                    n_del += 1
-                    touched_ids.append(int(did))
-                    del_id_rows.append((int(did),))
-            del_id_frame = spark.createDataFrame(
-                del_id_rows or [], "doc_id long")
-            dirty = sorted({d // self.docs_per_shard for d in touched_ids})
-            ids_df = spark.createDataFrame(
-                ids_rows or [], "url string, doc_id long"
-            )
-            # text stays distributed: one broadcast hash join against
-            # the cached batch (narrow, no shuffle)
-            upserts = (
-                latest.where(is_up).select("url", "warc_ts", "text")
-                .join(F.broadcast(ids_df), "url")
-            )
-            # the mapping rewrite below still reads the touched buckets
-            # as a (pruned) Spark frame
-            doc_ids_sub = cat.read(DOC_IDS_TABLE).where(
-                F.col("id_bucket").isin(dirty_buckets)
-            )
-        else:
-            # ---- distributed fallback (backlog replay) ------------------
-            # touched id-buckets (O(batch) driver traffic — bucket ids)
-            dirty_buckets = sorted({
-                r[0]
-                for r in ups.select(_bucket_col().alias("b"))
-                .unionByName(dels.select(_bucket_col().alias("b")))
-                .distinct().collect()
-            })
-            # the url→id join reads ONLY those buckets (partition
-            # pruning).  ONE left join resolves every event against the
-            # mapping — upsert-known / upsert-novel / delete-known all
-            # split from the same frame (the mapping is unique per url,
-            # so left join + null test is exactly the inner/anti pair)
-            doc_ids_sub = cat.read(DOC_IDS_TABLE).where(
-                F.col("id_bucket").isin(dirty_buckets)
-            )
-            resolved = latest.join(
-                doc_ids_sub.select("url", "doc_id"), "url", "left"
-            )
-            known = resolved.where(is_up & F.col("doc_id").isNotNull()).select(
-                "url", "warc_ts", "text", "doc_id"
-            )
-            # dense ids are bucket-count-invariant (globally key-ordered
-            # for any n_buckets) — size the range stage to the batch
-            novel = dense_ids(
-                resolved.where(is_up & F.col("doc_id").isNull())
-                .select("url", "warc_ts", "text"),
-                "url", "_rk0", n_buckets=batch_shuf,
-            ).withColumn("doc_id", F.col("_rk0") + F.lit(base)).drop("_rk0")
-            upserts_cached = (
-                known.withColumn("_new", F.lit(0))
-                .unionByName(novel.withColumn("_new", F.lit(1)))
-            ).persist()
-            upserts = upserts_cached
-            del_ids = resolved.where(
-                (F.col("_op") == OP_DELETE) & F.col("doc_id").isNotNull()
-            ).select("doc_id", "url").persist()
+    def _plan(self) -> _Plan:
+        """Resolve the registry (ib.TABLE_RULES) against this catalog:
+        the tables to splice, the tables to drop, and the kernel's
+        inputs for them."""
+        cat = self.cat
+        splice: set = set()
+        drop: list = []
+        store_fields: list = []
+        quant_avgdl = sorted_meta = None
+        attrs = set(self.attr_exprs)
+        for name in cat.list_tables():
+            rule = ib.table_rule(name)
+            cols = ({f.name for f in cat.get_mapping(name).fields}
+                    - {"doc_id", "shard"})
+            if name == ib.POSTINGS_Q_TABLE:
+                ok = cat.exists(ib.POSTINGS_Q_META)
+                if ok:
+                    quant_avgdl = float(cat.read_small(ib.POSTINGS_Q_META)[0]["avgdl"])
+            elif name == ib.DOC_STORE_TABLE:
+                store_fields = [f.name for f in cat.get_mapping(name).fields
+                                if f.name in cols]
+                ok = cols <= set(DOC_COLS) | attrs
+            elif name == ib.DOC_ATTRS_TABLE:
+                ok = bool(attrs) and cols == attrs
+            elif name in (ib.SORTED_ATTRS_TABLE, ib.SORTED_ATTRS_META,
+                          ib.SORTED_ATTRS_OWNERS) or name.startswith(
+                              ib.SORTED_ATTRS_SEG_PREFIX):
+                ok = bool(self.sort_field)
+            else:
+                ok = True
+            if rule == ib.DROP or (rule in (ib.SPLICE, ib.DELTA) and not ok):
+                drop.append(name)
+            elif rule == ib.SPLICE:
+                splice.add(name)
+        if self.sort_field and cat.exists(ib.SORTED_ATTRS_META):
+            sorted_meta = cat.read_small(ib.SORTED_ATTRS_META)[0]
+            if sorted_meta["sort_field"] != self.sort_field:
+                raise ValueError(
+                    f"index is sorted by {sorted_meta['sort_field']!r} but "
+                    f"this indexer maintains {self.sort_field!r}")
+        return _Plan(splice, drop, store_fields, quant_avgdl, sorted_meta)
 
-            # ONE fused probe job: upsert/new/delete counts + dirty-
-            # SHARD ids (only O(dirty shards) ids cross to the driver)
-            meta_row = (
-                upserts.select("doc_id", "_new", F.lit(0).alias("_d"))
-                .unionByName(del_ids.select(
-                    "doc_id", F.lit(0).alias("_new"), F.lit(1).alias("_d")))
-                .select("_new", "_d", self._shard_col().alias("s"))
-                .agg(
-                    F.sum(1 - F.col("_d")).alias("n_up"),
-                    F.sum("_new").alias("n_new"),
-                    F.sum("_d").alias("n_del"),
-                    F.collect_set("s").alias("shards"),
-                )
-                .first()
-            )
-            n_up = int(meta_row["n_up"] or 0)
-            n_new = int(meta_row["n_new"] or 0)
-            n_del = int(meta_row["n_del"] or 0)
-            dirty = sorted(int(s) for s in (meta_row["shards"] or []))
-            upserts = upserts.drop("_new")
-            del_id_frame = del_ids.select("doc_id")
-        _t = _prof("id-resolve", _t)
-        n_part = max(1, min(len(dirty) or 1,
-                            spark.sparkContext.defaultParallelism))
+    def _kernel_args(self, plan: _Plan) -> dict:
+        return dict(
+            dps=self.docs_per_shard, mode=self.mode,
+            positions=ib.POSITIONS_TABLE in plan.splice,
+            quant_avgdl=(plan.quant_avgdl
+                         if ib.POSTINGS_Q_TABLE in plan.splice else None),
+            store_fields=(plan.store_fields
+                          if ib.DOC_STORE_TABLE in plan.splice else ()),
+            attr_names=(list(self.attr_exprs)
+                        if ib.DOC_ATTRS_TABLE in plan.splice else ()),
+        )
 
-        # ---- one atomic multi-table commit for the whole batch ----------
-        cat.begin()
-        try:
-            # doc store: merge ONLY dirty shards (partition-pruned read)
-            docs_old = cat.read(DOCS_TABLE).where(F.col("shard").isin(dirty))
-            touched_urls = (
-                upserts.select("url").unionByName(dels.select("url")).distinct()
-            )
-            ups_rows = upserts.withColumn("shard", self._shard_col()).select(
-                "doc_id", "url", "warc_ts", "text", "shard"
-            )
-            # the post-batch dirty-shard doc store, shared between the
-            # doc-store WRITE and the splice's re-TOKENIZE (previously
-            # the splice read the staged table back, forcing the write
-            # onto its critical path; sharing the cached frame makes
-            # every table write of the batch independent)
-            merged = (
-                docs_old.join(touched_urls, "url", "left_anti")
-                .unionByName(ups_rows)
-                .repartition(n_part, "shard")
-                .persist()
-            )
-            # url→id mapping: rewrite ONLY the touched buckets
-            upd_ids = (
-                doc_ids_sub.join(dels, "url", "left_anti")
-                .join(ups.select("url"), "url", "left_anti")
-                .select("url", "doc_id", "id_bucket")
-                .unionByName(
-                    upserts.select("url", "doc_id")
-                    .withColumn("id_bucket", _bucket_col())
-                )
-            )
-            # every table write of the batch (docs, doc_ids, doc_lens,
-            # term_dict, postings, positions) is submitted to ONE
-            # concurrent fan-out inside _splice_index — distinct tables,
-            # dependencies carried by shared persisted frames (Spark's
-            # block manager computes a racing cached partition exactly
-            # once; in-txn staging is a GIL-atomic list append,
-            # order-independent across tables)
-            extra_writes = [
-                ("docs", lambda: cat.replace_partitions(
-                    DOCS_TABLE, merged, "shard", dirty_values=dirty,
-                )),
-                ("doc_ids", lambda: cat.replace_partitions(
-                    DOC_IDS_TABLE,
-                    upd_ids.repartition(max(1, min(len(dirty_buckets), n_part)),
-                                        "id_bucket"),
-                    "id_bucket", dirty_values=dirty_buckets,
-                )),
-            ]
-            attr_writes, n_segs_after = self._attr_maintenance_writes(
-                upserts, del_id_frame, merged, dirty, n_part,
-                n_up, n_del)
-            extra_writes.extend(attr_writes)
-            n_new_terms = self._splice_index(dirty, merged_docs=merged,
-                                             extra_writes=extra_writes)
-            _t = _prof("splice", _t)
+    def _old_aggregates(self, dirty: list[int]):
+        """The dirty shards' pre-batch aggregates, read before any write
+        of the batch: per-term (term_id, odf, ocf) from the postings'
+        columnar block counts (no decoding), and (n_docs, Σdl)."""
+        in_dirty = pc.field("shard").isin(dirty)
+        ot = self.cat.arrow_dataset(ib.POSTINGS_TABLE).to_table(
+            columns=["term_id", "n_docs", "sum_tf"], filter=in_dirty
+        ).group_by("term_id").aggregate([("n_docs", "sum"), ("sum_tf", "sum")])
+        dl = self.cat.arrow_dataset(ib.DOC_LENS_TABLE).to_table(
+            columns=["dl"], filter=in_dirty)
+        return ot, dl.num_rows, int(pc.sum(dl["dl"]).as_py() or 0)
 
-            cat.write_small(
-                COUNTERS_TABLE,
-                [(
-                    int(old_counters["max_doc_id"]) + n_new,
-                    int(old_counters["max_term_id"]) + n_new_terms,
-                )],
-                "max_doc_id long, max_term_id long",
-            )
-            cat.commit()
-            _t = _prof("counters+commit", _t)
-        except BaseException:
-            cat.rollback()
-            raise
-        finally:
-            latest.unpersist()
-            if upserts_cached is not None:
-                upserts_cached.unpersist()
-            if del_ids is not None:
-                del_ids.unpersist()
-            try:
-                merged.unpersist()
-            except NameError:
-                pass
-        if n_segs_after > self.SORTED_COMPACT_SEGS:
-            self.compact_sorted()
-        return ChangeStats(n_up, n_del, n_new, dirty)
+    def _splice_driver(self, b: _Batch, plan: _Plan):
+        """Micro-batch splice: the kernel runs in-process over the dirty
+        shards' post-batch rows; every write is a driver parquet write."""
+        cat, dirty = self.cat, b.dirty
+        old = cat.arrow_dataset(DOCS_TABLE).to_table(
+            columns=DOC_COLS, filter=pc.field("shard").isin(dirty))
+        rows = pa.concat_tables([
+            old.filter(pc.invert(pc.is_in(old["url"], value_set=b.touched_urls))),
+            b.ups.cast(old.schema),
+        ]).sort_by("doc_id")
+        if self.attr_exprs:
+            attrs = _local_select(self.spark, rows, *[
+                F.expr(e).alias(n) for n, e in self.attr_exprs.items()])
+            for n in attrs.column_names:
+                rows = rows.append_column(n, attrs[n])
+        sp = ib.splice_shards(rows, **self._kernel_args(plan))
+        cat.replace_partitions(DOCS_TABLE, _with_shard(
+            rows.select(DOC_COLS), self.docs_per_shard), "shard", dirty)
+        cat.replace_partitions(DOC_IDS_TABLE, b.id_rows, "id_bucket",
+                               b.dirty_buckets)
+        for name, tbl in sp.tables.items():
+            if name not in _TERM_KEYED:
+                cat.replace_partitions(name, tbl, "shard", dirty)
 
-    def _splice_index(
-        self, dirty_shards: list[int], merged_docs: DataFrame | None = None,
-        extra_writes: list = (),
-    ) -> int:
-        """Re-tokenize + re-encode only the dirty shards; DELTA-maintain
-        the global term/doc stats; keep term ids stable.  Returns the
-        number of newly-appended terms.  Must run inside a catalog
-        transaction (reads pre-swap snapshots lazily; the txn keeps them
-        alive until commit).
+        def finish(terms, ids):
+            for name, cols in _TERM_KEYED.items():
+                if name in sp.tables:
+                    cat.replace_partitions(name, ib.attach_term_ids(
+                        sp.tables[name], terms, ids, cols), "shard", dirty)
 
-        `merged_docs`: the caller's already-built post-batch dirty-shard
-        doc frame (persisted).  When given, the tokenize consumes it
-        directly instead of reading the staged doc table back — which
-        removes the doc-store write from the tokenize's critical path
-        and lets EVERY table write of the batch run concurrently.
-        `extra_writes`: caller-supplied (tag, zero-arg thunk) write
-        pairs (doc store, id mapping, attr maintenance) joined into
-        this method's single fan-out."""
-        if not dirty_shards:
-            for _tag, w in extra_writes:
-                w()
-            return 0
-        import time as _time
-        _t = _time.perf_counter()
+        n_segs = -1
+        if plan.sorted_meta is not None:
+            ups_attrs = rows.filter(pc.is_in(
+                rows["doc_id"], value_set=b.ups["doc_id"]))
+            n_segs = self._sorted_segment_writes(
+                plan.sorted_meta, ups_attrs.select(
+                    ["doc_id", *self.attr_exprs]), b.del_ids)
+        return sp.terms, sp.n_docs, sp.sum_dl, finish, n_segs
+
+    def _splice_spark(self, b: _Batch, plan: _Plan):
+        """Backlog splice: the same kernel in ONE mapInArrow job, one
+        task per group of dirty shards, each writing its partitions
+        into the tables' stage dirs (postings keyed by term string into
+        side stages) and returning the shards' per-term counts plus one
+        null-term row of (n_docs, Σdl).  `finish` attaches the new term
+        ids to the staged postings in a second job."""
+        spark, cat, dirty = self.spark, self.cat, b.dirty
+        rows = (cat.read(DOCS_TABLE).where(F.col("shard").isin(dirty))
+                .select(*DOC_COLS).join(b.touched_urls, "url", "left_anti")
+                .unionByName(b.ups.select(*DOC_COLS)))
+        rows = self._attr_cols(rows).withColumn("shard", self._shard_col())
+        stage = {n: cat.stage_path(n) for n in [DOCS_TABLE, *plan.splice]}
+        schemas = {n: cat.arrow_schema(n, drop=("shard",)) for n in stage}
+        raw = {n: stage[n] + "-terms" for n in _TERM_KEYED if n in stage}
+        kw = self._kernel_args(plan)
+
+        def task(batches):
+            batches = list(batches)
+            if not batches:
+                return
+            tbl = pa.Table.from_batches(batches)
+            sp = ib.splice_shards(tbl, **kw)
+            Catalog.write_arrow_partitions(
+                stage[DOCS_TABLE], tbl, "shard", schemas[DOCS_TABLE])
+            for name, t in sp.tables.items():
+                Catalog.write_arrow_partitions(
+                    raw.get(name, stage[name]), t, "shard",
+                    None if name in raw else schemas[name])
+            yield pa.RecordBatch.from_pydict({
+                "term": sp.terms["term"].to_pylist() + [None],
+                "ndf": sp.terms["ndf"].to_pylist() + [sp.n_docs],
+                "ncf": sp.terms["ncf"].to_pylist() + [sp.sum_dl],
+            }, schema=_TERMS_SCHEMA)
+
+        n_part = max(1, min(len(dirty), spark.sparkContext.defaultParallelism))
+        got = (rows.repartition(n_part, "shard")
+               .mapInArrow(trimmed(task), "term string, ndf long, ncf long")
+               .toArrow())
+        total = got.filter(pc.is_null(got["term"]))
+        agg = got.filter(pc.is_valid(got["term"])).group_by("term").aggregate(
+            [("ndf", "sum"), ("ncf", "sum")])
+        terms = pa.table({"term": agg["term"], "ndf": agg["ndf_sum"],
+                          "ncf": agg["ncf_sum"]})
+        for name in stage:
+            if name not in raw:
+                cat.replace_partitions(name, stage[name], "shard", dirty)
+        cat.replace_partitions(
+            DOC_IDS_TABLE,
+            b.id_rows.repartition(max(1, min(len(b.dirty_buckets), n_part)),
+                                  "id_bucket"),
+            "id_bucket", b.dirty_buckets)
+
+        def finish(term_strs, term_ids):
+            def attach(batches):
+                import os
+
+                for bt in batches:
+                    for s in bt.column(0).to_pylist():
+                        for name, src in raw.items():
+                            part = os.path.join(src, f"shard={s}")
+                            if not os.path.isdir(part):
+                                continue
+                            t = pads.dataset(part).to_table()
+                            t = t.append_column("shard", pa.array(
+                                [s] * t.num_rows, pa.int32()))
+                            Catalog.write_arrow_partitions(
+                                stage[name], ib.attach_term_ids(
+                                    t, term_strs, term_ids, _TERM_KEYED[name]),
+                                "shard", schemas[name])
+                yield from ()
+
+            (spark.createDataFrame([(s,) for s in dirty], "s int")
+             .repartition(n_part).mapInArrow(trimmed(attach), "s int").collect())
+            for name, src in raw.items():
+                cat.replace_partitions(name, stage[name], "shard", dirty)
+                shutil.rmtree(src, ignore_errors=True)
+
+        n_segs = -1
+        if plan.sorted_meta is not None:
+            ups_attrs = rows.join(b.ups.select("doc_id"), "doc_id", "left_semi")
+            n_segs = self._sorted_segment_writes(
+                plan.sorted_meta,
+                ups_attrs.select("doc_id", *self.attr_exprs).toArrow(),
+                [r[0] for r in b.del_ids.collect()])
+        return (terms, int(pc.sum(total["ndf"]).as_py() or 0),
+                int(pc.sum(total["ncf"]).as_py() or 0), finish, n_segs)
+
+    def _term_dict_delta(self, ot: pa.Table, nt: pa.Table, tbase: int):
+        """Delta-maintain term_dict: subtract the dirty shards' old
+        per-term (df, cf) `ot`, add their new ones `nt`; keep existing
+        term ids, append new terms from `tbase` in term order (as
+        dense_ids assigns).  Returns (appended-term count, terms, ids)
+        with terms/ids covering `nt`'s vocabulary."""
+        cat = self.cat
+        ot = pa.table({"term_id": ot["term_id"], "odf": ot["n_docs_sum"],
+                       "ocf": ot["sum_tf_sum"]})
+        if cat.arrow_dataset(ib.TERM_DICT_TABLE).count_rows() > DRIVER_DICT_MAX_ROWS:
+            return self._term_dict_delta_spark(ot, nt, tbase)
+        od = cat.arrow_dataset(ib.TERM_DICT_TABLE).to_table()
+        df, cf = od["df"].to_numpy().copy(), od["cf"].to_numpy().copy()
+        at = pc.index_in(ot["term_id"], value_set=od["term_id"]).to_numpy(
+            zero_copy_only=False)
+        np.subtract.at(df, at, ot["odf"].to_numpy())
+        np.subtract.at(cf, at, ot["ocf"].to_numpy())
+        pos = pc.index_in(nt["term"], value_set=od["term"])
+        known = pc.is_valid(pos)
+        at = pos.filter(known).to_numpy(zero_copy_only=False)
+        np.add.at(df, at, nt["ndf"].filter(known).to_numpy())
+        np.add.at(cf, at, nt["ncf"].filter(known).to_numpy())
+        new = nt.filter(pc.invert(known)).sort_by("term")
+        d = pa.concat_tables([
+            pa.table({"term": od["term"], "term_id": od["term_id"],
+                      "df": df, "cf": cf}).filter(pa.array(df > 0)),
+            pa.table({"term": new["term"],
+                      "term_id": np.arange(tbase, tbase + new.num_rows,
+                                           dtype=np.int64),
+                      "df": new["ndf"], "cf": new["ncf"]}),
+        ]).sort_by("term")
+        cat.write_small_arrow(ib.TERM_DICT_TABLE, d)
+        sub = d.filter(pc.is_in(d["term"], value_set=nt["term"]))
+        return new.num_rows, sub["term"].combine_chunks(), sub["term_id"].combine_chunks()
+
+    def _term_dict_delta_spark(self, ot: pa.Table, nt: pa.Table, tbase: int):
+        """_term_dict_delta as Spark joins, for vocabularies past
+        DRIVER_DICT_MAX_ROWS."""
         spark, cat = self.spark, self.cat
-        dirty = [int(s) for s in dirty_shards]
-        n_part = max(1, min(len(dirty),
-                            spark.sparkContext.defaultParallelism))
+        nt_df = spark.createDataFrame(nt)
+        base = cat.read(ib.TERM_DICT_TABLE).join(
+            spark.createDataFrame(ot), "term_id", "left").select(
+            "term", "term_id",
+            (F.col("df") - F.coalesce("odf", F.lit(0))).alias("dfb"),
+            (F.col("cf") - F.coalesce("ocf", F.lit(0))).alias("cfb"))
+        m = base.join(nt_df, "term", "full_outer").select(
+            "term", "term_id",
+            (F.coalesce("dfb", F.lit(0)) + F.coalesce("ndf", F.lit(0))).alias("df"),
+            (F.coalesce("cfb", F.lit(0)) + F.coalesce("ncf", F.lit(0))).alias("cf"),
+        ).where(F.col("df") > 0)
+        new = dense_ids(m.where(F.col("term_id").isNull()).drop("term_id"),
+                        "term", "_rk0").withColumn(
+            "term_id", F.col("_rk0") + F.lit(tbase)).drop("_rk0")
+        d = (m.where(F.col("term_id").isNotNull())
+             .unionByName(new.select("term", "term_id", "df", "cf"))
+             .persist())
+        try:
+            cat.write(ib.TERM_DICT_TABLE, d, sort_within_partitions=["term"])
+            sub = d.join(nt_df.select("term"), "term").select(
+                "term", "term_id").toArrow()
+        finally:
+            d.unpersist()
+        n_new = int(pc.sum(pc.greater_equal(sub["term_id"], tbase)).as_py() or 0)
+        return n_new, sub["term"].combine_chunks(), sub["term_id"].combine_chunks()
 
-        # OLD dirty-shard per-term aggregates — a COLUMNAR scan of the
-        # dirty postings partitions: each block row carries its df
-        # contribution (n_docs) and cf contribution (sum_tf), so the
-        # exact old (df, cf) per term needs no token stream and no
-        # block decoding (pre-swap snapshot; partition-pruned)
-        old_term = (
-            cat.read(ib.POSTINGS_TABLE).where(F.col("shard").isin(dirty))
-            .groupBy("term_id")
-            .agg(F.sum("n_docs").alias("odf"), F.sum("sum_tf").alias("ocf"))
-        )
-        # old (n, Σdl) over the dirty shards + the one-row stats table:
-        # driver-side pyarrow (partition-pruned dirs; no Spark jobs —
-        # these three actions were pure fixed cost, VERDICT r03 item 3)
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        dl_tbl = cat.arrow_dataset(ib.DOC_LENS_TABLE).to_table(columns=["dl"],
-                   filter=pc.field("shard").isin(dirty))
-        old_dl = {"n": dl_tbl.num_rows,
-                  "s": pc.sum(dl_tbl["dl"]).as_py() or 0}
-        old_st = cat.read_small(ib.STATS_TABLE)[0]
-        _t = _prof("splice:old-reads", _t)
-
-        # tokenize ONLY the dirty shards' docs (docs is shard-partitioned)
-        # — PACKED rows, the same kernel the batch build uses (one row
-        # per doc, terms/tfs[/poss] arrays inside): ~35x fewer rows
-        # cross the JVM↔Python boundary than the old exploded
-        # (doc, term) stream, doc_lens becomes a pure projection (no
-        # groupBy shuffle), and the per-(shard, term, doc) sort the
-        # block encoder needs runs in NumPy inside the encoder kernel.
-        # The cached stream is ephemeral (same contract as the build:
-        # postings are the only committed token data); positions ride
-        # the SAME pass.
-        mode = self.mode
-        has_pos = cat.exists(ib.POSITIONS_TABLE)
-        pk_schema = ib.PACKED_POS_SCHEMA if has_pos else ib.PACKED_SCHEMA
-        dirty_docs = (
-            merged_docs if merged_docs is not None
-            else cat.read(DOCS_TABLE).where(F.col("shard").isin(dirty))
-        )
-        packed = (
-            dirty_docs.select("doc_id", "text")
-            .mapInArrow(
-                ib.make_packed_tokenizer("doc_id", "text", mode, has_pos),
-                schema=pk_schema)
-            .withColumn("shard", self._shard_col())
-            .repartition(n_part, "shard")
-            .persist()
-        )
-        # the encoded blocks are ALSO shared: the per-term (df, cf)
-        # aggregate below reads them (df = Σ n_docs, cf = Σ sum_tf —
-        # the exact columnar identity the build's term_dict stage uses),
-        # and the postings write joins term ids onto the same cached
-        # frame — the old separate salted token-stream aggregation
-        # (~2 shuffle stages per batch of pure scheduling) is gone.
-        blocks_enc = (
-            packed.select("doc_id", "dl", "terms", "tfs")
-            .mapInArrow(ib.make_arrow_encoder(self.docs_per_shard),
-                        schema=ib.POSTINGS_ENC_SCHEMA)
-            .persist()
-        )
-
-        # doc_lens: splice dirty shards; packed rows ARE one row per
-        # doc, so this is a projection; the new (n_docs, Σdl) piggyback
-        # on the WRITE job as Observation metrics — no read-back action
-        from pyspark.sql import Observation
-
-        dl_obs = Observation()
-        dl_new = packed.select("doc_id", "dl", "shard").observe(
-            dl_obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-        )
-        # term_dict: delta-maintain df/cf — subtract the dirty shards' old
-        # per-term counts, add the new; KEEP existing term ids, append new.
-        # The dictionary (vocabulary-sized) is the only fully-rewritten
-        # table; the token stream is never re-aggregated.
-        tbase = int(cat.read_small(COUNTERS_TABLE)[0]["max_term_id"]) + 1
-        # Micro-batch path: compute the delta DRIVER-SIDE when the
-        # dictionary is driver-sized (parquet metadata row count — a
-        # footer read, no scan).  The Spark chain below costs ~6 shuffle
-        # stages of pure scheduling for a 50-doc batch; the same integer
-        # arithmetic over a pyarrow read of the dictionary and the dirty
-        # postings' columnar (n_docs, sum_tf) is milliseconds, and the
-        # postings encode then joins a BROADCAST term→id subset instead
-        # of waiting on a shuffled dictionary frame.
-        dict_rows = cat.arrow_dataset(ib.TERM_DICT_TABLE).count_rows()
-        driver_dict = (merged_docs is not None
-                       and dict_rows <= DRIVER_DICT_MAX_ROWS)
-        dict_frame = None
-        nt_obs = None
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _timed(tag, w):
-            import os as _os
-            import time as _tm
-            t0 = _tm.perf_counter()
-            r = w()
-            if _os.environ.get("SPARK_GRAFT_PROF"):
-                print(f"      [prof] fanout-job[{tag}]: "
-                      f"{_tm.perf_counter() - t0:.2f}s", flush=True)
-            return r
-
-        def _enc_frame(dict_join):
-            # postings: rebuild ONLY dirty shards, splice partition dirs
-            # — the ids join onto the CACHED blocks output (encoded
-            # once, shared with the term aggregate)
-            return blocks_enc.join(dict_join, "term").select(
-                *ib.POSTINGS_COLS
-            ).repartition(n_part, "shard")
-
-        # ---- concurrent write fan-out.  Distinct tables; dependencies
-        # carried by the shared persisted frames (merged docs, token
-        # stream, dictionary), which Spark's block manager computes
-        # exactly once under per-partition block locks.  Every read-
-        # frame above resolved its snapshot paths BEFORE any staged
-        # write, so concurrent staging can't redirect them.  Critical
-        # path drops from Σ(writes) to max(write-chain).
-        base_writes = list(extra_writes)
-        base_writes.append(("doc_lens", lambda: cat.replace_partitions(
-            ib.DOC_LENS_TABLE, dl_new.repartition(n_part, "shard"),
-            "shard", dirty_values=dirty,
-        )))
-        if has_pos:
-            # positional component: flattened from the same cached
-            # packed stream (build's kernel — emits each shard in
-            # (term asc, doc asc) order, the positions layout contract)
-            pos_new = packed.select(
-                "doc_id", "dl", "terms", "tfs", "poss"
-            ).mapInArrow(
-                ib.make_arrow_positions_writer(self.docs_per_shard),
-                schema="doc_id long, term string, positions array<int>,"
-                       " shard int")
-            base_writes.append(("positions", lambda: cat.replace_partitions(
-                ib.POSITIONS_TABLE, pos_new,
-                "shard", dirty_values=dirty,
-            )))
-
-        if driver_dict:
-            import numpy as np
-            import pandas as pd
-            import pyarrow as pa
-
-            n_new_terms_driver = 0
-            with ThreadPoolExecutor(len(base_writes) + 2) as pool:
-                # token-independent writes start NOW; the main thread
-                # concurrently runs the term-aggregate job (which also
-                # materializes the shared merged→tokens caches)
-                futures = [pool.submit(_timed, tag, w)
-                           for tag, w in base_writes]
-                # per-term (df, cf) of the dirty stream from the cached
-                # blocks output — exact by construction (every posting
-                # lands in exactly one block); this action also fills
-                # the packed+blocks caches every other job shares
-                nt_pdf = blocks_enc.groupBy("term").agg(
-                    F.sum("n_docs").alias("ndf"),
-                    F.sum("sum_tf").alias("ncf"),
-                ).toPandas()
-                _t = _prof("splice:term-agg", _t)
-                # old per-term aggregates + dictionary: columnar driver
-                # reads; the delta is the same integer arithmetic as the
-                # distributed chain
-                ot = cat.arrow_dataset(ib.POSTINGS_TABLE).to_table(columns=["term_id", "n_docs", "sum_tf"],
-                           filter=pc.field("shard").isin(dirty)).to_pandas()
-                ot = ot.groupby("term_id", as_index=False).agg(
-                    odf=("n_docs", "sum"), ocf=("sum_tf", "sum"))
-                od = cat.arrow_dataset(
-                    ib.TERM_DICT_TABLE).to_table().to_pandas()
-                m = od.merge(ot, on="term_id", how="left")
-                m["dfb"] = m["df"] - m["odf"].fillna(0).astype("int64")
-                m["cfb"] = m["cf"] - m["ocf"].fillna(0).astype("int64")
-                m = m[["term", "term_id", "dfb", "cfb"]].merge(
-                    nt_pdf, on="term", how="outer")
-                df2 = m["dfb"].fillna(0) + m["ndf"].fillna(0)
-                cf2 = m["cfb"].fillna(0) + m["ncf"].fillna(0)
-                m = m.assign(df=df2, cf=cf2)
-                live = m[df2 > 0]
-                kept_pd = live[live["term_id"].notna()]
-                # dense append in term (codepoint) order — identical ids
-                # to the Spark chain's dense_ids
-                new_pd = live[live["term_id"].isna()].sort_values(
-                    "term", kind="mergesort")
-                new_pd = new_pd.assign(term_id=np.arange(
-                    tbase, tbase + len(new_pd), dtype="int64"))
-                n_new_terms_driver = len(new_pd)
-                dict_pd = pd.concat([
-                    kept_pd[["term", "term_id", "df", "cf"]],
-                    new_pd[["term", "term_id", "df", "cf"]],
-                ]).sort_values("term", kind="mergesort").astype(
-                    {"term_id": "int64", "df": "int64", "cf": "int64"})
-                dict_tbl = pa.table({
-                    "term": pa.array(dict_pd["term"].tolist(),
-                                     type=pa.string()),
-                    "term_id": pa.array(dict_pd["term_id"].to_numpy()),
-                    "df": pa.array(dict_pd["df"].to_numpy()),
-                    "cf": pa.array(dict_pd["cf"].to_numpy()),
-                })
-                # the postings encode joins a BROADCAST subset — exactly
-                # the dirty stream's vocabulary (every token stays live)
-                sub = nt_pdf[["term"]].merge(
-                    dict_pd[["term", "term_id"]], on="term", how="inner")
-                enc = _enc_frame(F.broadcast(spark.createDataFrame(
-                    sub, "term string, term_id long")))
-                futures.append(pool.submit(
-                    _timed, "term_dict",
-                    lambda: cat.write_small_arrow(ib.TERM_DICT_TABLE,
-                                                  dict_tbl)))
-                futures.append(pool.submit(
-                    _timed, "postings", lambda: cat.replace_partitions(
-                        ib.POSTINGS_TABLE, enc, "shard",
-                        dirty_values=dirty)))
-                for f in futures:
-                    f.result()
-        else:
-            # distributed branch (backlog replays / huge dictionaries):
-            # same blocks-derived (df, cf) identity, kept as a frame
-            new_term = blocks_enc.groupBy("term").agg(
-                F.sum("n_docs").alias("ndf"), F.sum("sum_tf").alias("ncf"))
-            old_dict = cat.read(ib.TERM_DICT_TABLE)
-            # subtract the dirty shards' old counts (term_id-keyed, from
-            # the postings columns) ...
-            base = old_dict.join(old_term, "term_id", "left").select(
-                "term", "term_id",
-                (F.col("df") - F.coalesce("odf", F.lit(0))).alias("dfb"),
-                (F.col("cf") - F.coalesce("ocf", F.lit(0))).alias("cfb"),
-            )
-            # ... then add the fresh tokenization's counts (term-keyed)
-            merged = (
-                base.join(new_term, "term", "full_outer")
-                .select(
-                    "term", "term_id",
-                    (F.coalesce("dfb", F.lit(0))
-                     + F.coalesce("ndf", F.lit(0))).alias("df2"),
-                    (F.coalesce("cfb", F.lit(0))
-                     + F.coalesce("ncf", F.lit(0))).alias("cf2"),
-                )
-            )
-            kept = merged.where(
-                F.col("term_id").isNotNull() & (F.col("df2") > 0)
-            ).select(
-                "term", "term_id",
-                F.col("df2").alias("df"), F.col("cf2").alias("cf")
-            )
-            new_terms = merged.where(
-                F.col("term_id").isNull() & (F.col("df2") > 0)
-            ).select(
-                "term", F.col("df2").alias("df"), F.col("cf2").alias("cf")
-            )
-            # batch-sized range buckets (ids are bucket-count-invariant;
-            # a handful of appended terms doesn't need a 256-task stage)
-            new_terms = dense_ids(new_terms, "term", "_rk0",
-                                  n_buckets=n_part * 2).withColumn(
-                "term_id", F.col("_rk0") + F.lit(tbase)
-            ).drop("_rk0")
-            # the new dictionary, shared between its own write and the
-            # postings encode's term→id join (no read-back of the staged
-            # table — the postings job must not wait for the dict write)
-            dict_frame = (
-                kept.select("term", "term_id", "df", "cf")
-                .unionByName(new_terms.select("term", "term_id", "df", "cf"))
-                .persist()
-            )
-            # the appended-term count piggybacks on the dictionary WRITE
-            # as an Observation ABOVE the cache: whichever concurrent job
-            # fills the cache, the dict write's own query streams every
-            # cached row through the observe node, so the count can't be
-            # split by a cache race (new terms are exactly id ≥ tbase)
-            nt_obs = Observation()
-            dict_for_write = dict_frame.observe(
-                nt_obs,
-                F.sum((F.col("term_id") >= F.lit(tbase))
-                      .cast("long")).alias("n"),
-            )
-            enc = _enc_frame(dict_frame.select("term", "term_id"))
-            writes = base_writes + [
-                ("term_dict", lambda: cat.write(
-                    ib.TERM_DICT_TABLE, dict_for_write,
-                    sort_within_partitions=["term"])),
-                ("postings", lambda: cat.replace_partitions(
-                    ib.POSTINGS_TABLE, enc, "shard", dirty_values=dirty)),
-            ]
-            with ThreadPoolExecutor(len(writes)) as pool:
-                futures = [pool.submit(_timed, tag, w) for tag, w in writes]
-                for f in futures:
-                    f.result()
-        _t = _prof("splice:write-fanout", _t)
-
-        n_new_terms = (n_new_terms_driver if driver_dict
-                       else int(nt_obs.get["n"] or 0))
-        new_dl = dl_obs.get
-        n_docs2 = int(old_st["n_docs"]) - int(old_dl["n"]) + int(new_dl["n"])
-        sum_dl2 = (
-            int(old_st["sum_dl"]) - int(old_dl["s"] or 0) + int(new_dl["s"] or 0)
-        )
-        # float(long)/float(long) is the same IEEE double division Spark's
-        # avg performs — bitwise identical to a full rebuild's avgdl
-        avgdl2 = (float(sum_dl2) / float(n_docs2)) if n_docs2 else 0.0
-        n_shards2 = max(int(old_st["n_shards"]), max(dirty) + 1)
-        cat.write_small(
+    def _stats_delta(self, dirty: list[int], old: tuple, new: tuple) -> None:
+        """(n_docs, Σdl) lose the dirty shards' old counts and gain the
+        new ones; avgdl = float(Σdl)/float(n), the same IEEE division
+        as a full build — bitwise identical to a rebuild's avgdl."""
+        st = self.cat.read_small(ib.STATS_TABLE)[0]
+        n = int(st["n_docs"]) - old[0] + new[0]
+        sum_dl = int(st["sum_dl"] or 0) - old[1] + new[1]
+        self.cat.write_small(
             ib.STATS_TABLE,
-            [(n_docs2, sum_dl2, avgdl2, n_shards2, self.mode)],
+            [(n, sum_dl, (float(sum_dl) / float(n)) if n else 0.0,
+              max(int(st["n_shards"]), max(dirty) + 1), self.mode)],
             "n_docs long, sum_dl long, avgdl double, n_shards int, analyzer string",
         )
-        if dict_frame is not None:
-            dict_frame.unpersist()
-        # attr tables the indexer can't RECOMPUTE from the batch are
-        # dropped (stale filters are worse than none); with attr_exprs
-        # configured both doc_attrs and the index-sorted copy are
-        # delta-maintained instead (_attr_maintenance_writes)
-        maintained: set[str] = set()
-        if self.attr_exprs:
-            maintained.add(ib.DOC_ATTRS_TABLE)
-            if self.sort_field:
-                maintained.update((ib.SORTED_ATTRS_TABLE,
-                                   ib.SORTED_ATTRS_META,
-                                   ib.SORTED_ATTRS_OWNERS))
-        for t in (ib.DOC_ATTRS_TABLE, ib.SORTED_ATTRS_TABLE,
-                  ib.SORTED_ATTRS_META, ib.SORTED_ATTRS_OWNERS):
-            if t not in maintained and cat.exists(t):
-                cat.drop(t)
-        if ib.SORTED_ATTRS_TABLE not in maintained:
-            for t in list(cat.list_tables()):
-                if t.startswith(ib.SORTED_ATTRS_SEG_PREFIX):
-                    cat.drop(t)
-        packed.unpersist()
-        blocks_enc.unpersist()
-        return n_new_terms
+
+    def _sorted_segment_writes(self, meta: dict, ups_attrs: pa.Table,
+                               del_ids: list[int]) -> int:
+        """Keep the index-sorted table alive with Lucene's answer —
+        sorted DELTA SEGMENTS: the batch's upserted docs' attr rows
+        become one new sorted segment table (attrs_sorted_seg_<n>), and
+        the owners table (doc_id → owning segment seq, -1 deleted)
+        records which segment holds each touched doc's live row; the
+        base build is segment 0.  The reader merges fragments across
+        segments in max-stat order (reader.py::sorted_topk).  Costs one
+        O(batch) sorted write and one O(touched-since-build) owners
+        rewrite per batch, never an O(corpus) re-sort; compact_sorted
+        folds the segments back past SORTED_COMPACT_SEGS.  Returns the
+        segment count after the batch."""
+        cat = self.cat
+        n_up = ups_attrs.num_rows
+        seq = int(meta.get("n_segs") or 0) + (1 if n_up else 0)
+        touched = ups_attrs["doc_id"].to_pylist() + list(del_ids)
+        if touched:
+            own = pa.table({"doc_id": pa.array(touched, pa.int64()),
+                            "seq": pa.array([seq] * n_up + [-1] * len(del_ids),
+                                            pa.int64())})
+            if cat.exists(ib.SORTED_ATTRS_OWNERS):
+                prev = cat.arrow_dataset(ib.SORTED_ATTRS_OWNERS).to_table()
+                own = pa.concat_tables([prev.filter(pc.invert(pc.is_in(
+                    prev["doc_id"], value_set=own["doc_id"]))), own])
+            cat.write_small_arrow(ib.SORTED_ATTRS_OWNERS, own,
+                                  ddl="doc_id long, seq long")
+        if n_up:
+            f = self.sort_field
+            cat.write_small_arrow(
+                self._seg_table(seq),
+                ups_attrs.sort_by([(f, "descending"), ("doc_id", "ascending")],
+                                  null_placement="at_end"),
+                ddl=", ".join(f"`{c.name}` {c.dataType.simpleString()}" for c in
+                              cat.get_mapping(ib.SORTED_ATTRS_TABLE).fields))
+            cat.write_small(ib.SORTED_ATTRS_META, [(f, 1, seq)],
+                            "sort_field string, descending int, n_segs long")
+        return seq
 
     # -- streaming (A2): foreachBatch wrapper --------------------------------
     def watch(self, stream_df: DataFrame, checkpoint_dir: str, **trigger_kw):

@@ -24,7 +24,10 @@ from search_ingest_spark.streaming.incremental import (
     DOCS_TABLE,
     PageIndexer,
     latest_per_key,
+    latest_per_key_arrow,
 )
+
+from catalog_content import catalog_content
 
 TS0 = dt.datetime(2026, 1, 1)
 
@@ -57,6 +60,29 @@ def indexer(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "inc"))
     ix = PageIndexer(spark, cat, mode="simple", docs_per_shard=8)
     ix.backfill(_pages_df(spark, CORPUS))
+    return ix
+
+
+def _add_quantized_and_store(spark, ix):
+    """The tables PageIndexer.backfill does not build: postings_q and
+    doc_store, through a second build_index over the same docs."""
+    ib.build_index(spark, ix.cat.read(DOCS_TABLE), ix.cat, mode=ix.mode,
+                   docs_per_shard=ix.docs_per_shard, quantize=True,
+                   store_fields=["text"])
+
+
+@pytest.fixture()
+def full_indexer(spark, tmp_path):
+    """An indexer over every optional index table."""
+    cat = Catalog(spark, str(tmp_path / "full"))
+    ix = PageIndexer(spark, cat, mode="simple", docs_per_shard=8,
+                     with_positions=True, attr_exprs={"n_chars": "length(text)"},
+                     sort_field="n_chars")
+    ix.backfill(_pages_df(spark, CORPUS))
+    ib.build_index(spark, ix._attr_cols(cat.read(DOCS_TABLE)), cat, mode="simple",
+                   docs_per_shard=8, with_positions=True, attr_cols=["n_chars"],
+                   sort_field="n_chars", quantize=True, store_fields=["text"],
+                   with_bigrams=True)
     return ix
 
 
@@ -168,7 +194,8 @@ class TestApplyChanges:
         # (or its delta-maintained stats/term_dict updates) scanned ANY
         # clean shard, the job would fail on a corrupt footer.  Only the
         # dirty shard (0), the touched id-bucket, and the vocabulary-
-        # class term_dict may be read.
+        # class term_dict may be read.  postings_q and doc_store are
+        # spliced too, so their clean partitions are clobbered as well.
         import os
 
         cat = indexer.cat
@@ -187,7 +214,9 @@ class TestApplyChanges:
         bucket = spark.createDataFrame([("https://t/1",)], "url string").select(
             F.pmod(F.xxhash64("url"), F.lit(N_ID_BUCKETS)).cast("int").alias("b")
         ).first()["b"]
-        for t in (ib.DOC_LENS_TABLE, ib.POSTINGS_TABLE, DOCS_TABLE):
+        _add_quantized_and_store(spark, indexer)
+        for t in (ib.DOC_LENS_TABLE, ib.POSTINGS_TABLE, DOCS_TABLE,
+                  ib.POSTINGS_Q_TABLE, ib.DOC_STORE_TABLE):
             clobber(t, "shard=0")
         clobber(DOC_IDS_TABLE, f"id_bucket={bucket}")
         st = indexer.apply_changes(_changes_df(spark, [
@@ -261,19 +290,85 @@ class TestWatchStream:
         _assert_index_matches_corpus(spark, indexer)
 
 
+# (events of one url, the text that must win; None: the url is deleted)
+TIE_CASES = [
+    ([(0, "a", OP_UPSERT), (0, "b", OP_UPSERT)], "b"),      # payload tie-break
+    ([(0, "", OP_DELETE), (0, "x", OP_UPSERT)], "x"),       # upsert > delete
+    ([(0, "zz", OP_UPSERT), (0, "", OP_DELETE)], "zz"),
+    ([(5, "", OP_DELETE), (4, "x", OP_UPSERT)], None),      # later ts wins
+    ([(4, "zz", OP_UPSERT), (5, "a", OP_UPSERT)], "a"),
+    ([(0, "é", OP_UPSERT), (0, "z", OP_UPSERT)], "é"),      # UTF-8 byte order
+]
+
+
 def test_latest_per_key_tiebreak(spark):
-    df = spark.createDataFrame(
-        [("u", TS0, "a"), ("u", TS0, "b")], "url string, warc_ts timestamp, text string"
-    )
-    out = latest_per_key(df, "url", "warc_ts", ["text"]).collect()
-    assert len(out) == 1 and out[0]["text"] == "b"  # deterministic tie-break
+    rows = [(f"u{i}", TS0 + dt.timedelta(seconds=o), t, op)
+            for i, (evs, _) in enumerate(TIE_CASES) for o, t, op in evs]
+    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string,"
+                                     " _op string")
+    want = {f"u{i}": w for i, (_, w) in enumerate(TIE_CASES)}
+    for got in (latest_per_key(df, "url", "warc_ts", ["_op", "text"]).collect(),
+                latest_per_key_arrow(df.toArrow(), "url", "warc_ts",
+                                     ["_op", "text"]).to_pylist()):
+        assert {r["url"]: r["text"] if r["_op"] == OP_UPSERT else None
+                for r in got} == want
+
+
+@pytest.mark.parametrize("placement", ["driver", "spark"])
+def test_latest_per_key_ties_through_apply_changes(spark, indexer, monkeypatch,
+                                                   placement):
+    """The tie cases as one changefeed batch over existing urls, through
+    each placement's last-writer-wins."""
+    import search_ingest_spark.streaming.incremental as inc
+
+    if placement == "spark":
+        monkeypatch.setattr(inc, "MICRO_BATCH_CAP", 0)
+    st = indexer.apply_changes(_changes_df(spark, [
+        (f"https://t/{i}", 1000 + o, t if op == OP_UPSERT else None, op)
+        for i, (evs, _) in enumerate(TIE_CASES) for o, t, op in evs]))
+    assert st.placement == placement
+    docs = {r["url"]: r["text"] for r in indexer.cat.read(DOCS_TABLE).collect()}
+    for i, (_, want) in enumerate(TIE_CASES):
+        assert docs.get(f"https://t/{i}") == want, i
+    _assert_index_matches_corpus(spark, indexer)
+
+
+def test_micro_batch_starts_at_most_one_job(spark, full_indexer):
+    """A micro-batch over every optional table is one Spark job (the
+    probe collect); its ChangeStats record says so."""
+    sc = spark.sparkContext
+    j0 = sc._jsc.sc().dagScheduler().nextJobId()
+    st = full_indexer.apply_changes(_changes_df(spark, [
+        ("https://t/1", 1000, "edited once common", OP_UPSERT),
+        ("https://t/20", 1001, None, OP_DELETE),
+        ("https://t/new", 1002, "a new page common shared", OP_UPSERT),
+    ]))
+    assert sc._jsc.sc().dagScheduler().nextJobId() - j0 <= 1
+    assert st.spark_jobs <= 1 and st.placement == "driver"
+    assert (st.upserts, st.deletes, st.new_docs) == (2, 1, 1)
+    assert len(st.dirty_shards) == 3
+    assert set(st.phase_s) == {"probe", "resolve", "splice", "commit"}
+
+
+def test_registry_covers_every_built_table(spark, full_indexer):
+    """Every table a full build writes has a maintenance rule, and a
+    batch drops exactly the tables whose rule is "drop"."""
+    cat = full_indexer.cat
+    index_tables = [t for t in cat.list_tables()
+                    if t not in (DOCS_TABLE, DOC_IDS_TABLE, "counters")]
+    assert all(ib.table_rule(t) is not None for t in index_tables), index_tables
+    full_indexer.apply_changes(_changes_df(spark, [
+        ("https://t/3", 1000, "edited common", OP_UPSERT)]))
+    dropped = {t for t in index_tables if not cat.exists(t)}
+    assert dropped == {ib.BIGRAM_TABLE, ib.MANIFEST_TABLE}
 
 
 class TestControlPlanePaths:
-    """The micro-batch (driver-resolved) and distributed (join-based)
-    control planes, and the driver-side vs Spark dictionary deltas,
-    must produce IDENTICAL committed state — same counts, same ids,
-    same query results.  Forced via the module caps."""
+    """The driver and Spark placements of a batch, and the driver-side
+    vs Spark dictionary deltas, must produce IDENTICAL committed state —
+    same counts, same ids, same query results, and the same content in
+    every registered table (decoded postings and postings_q, doc_store,
+    doc_lens, stats, term_dict).  Forced via the module caps."""
 
     SEQ = [
         # batch 1: updates + novel urls + a delete
@@ -290,6 +385,7 @@ class TestControlPlanePaths:
         cat = Catalog(spark, str(tmp_path / f"cp_{tag}"))
         ix = PageIndexer(spark, cat, mode="simple", docs_per_shard=8)
         ix.backfill(_pages_df(spark, CORPUS))
+        _add_quantized_and_store(spark, ix)
         stats = []
         for batch in self.SEQ:
             st = ix.apply_changes(_changes_df(spark, batch))
@@ -305,7 +401,8 @@ class TestControlPlanePaths:
             tuple(r) for r in ix.cat.read(ib.TERM_DICT_TABLE).collect()
         )
         return stats, docs, (counters["max_doc_id"],
-                             counters["max_term_id"]), dictionary
+                             counters["max_term_id"]), dictionary, \
+            catalog_content(ix.cat)
 
     def test_all_paths_identical(self, spark, tmp_path, monkeypatch):
         import search_ingest_spark.streaming.incremental as inc

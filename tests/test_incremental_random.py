@@ -105,3 +105,87 @@ def test_random_batch_sequence_stays_consistent(spark, tmp_path):
         # doc ids differ (incremental appends ids; fresh assigns by url
         # order) but the score multiset must match exactly
         assert sorted(inc) == sorted(fresh), q
+
+
+# -- every registered table ≡ a fresh build ---------------------------------
+
+ATTRS = {"n_chars": "length(text)"}
+
+
+def _full_index(spark, cat, pages):
+    """A PageIndexer over every optional table: positions, doc_attrs and
+    the index-sorted copy through backfill, then postings_q, doc_store,
+    bigram_stats through a second build_index on the same catalog."""
+    from search_ingest_spark.index.build import build_index
+
+    ix = PageIndexer(spark, cat, mode="simple", docs_per_shard=8,
+                     with_positions=True, attr_exprs=ATTRS, sort_field="n_chars")
+    ix.backfill(pages)
+    build_index(spark, ix._attr_cols(cat.read(DOCS_TABLE)), cat, mode="simple",
+                docs_per_shard=8, with_positions=True, attr_cols=list(ATTRS),
+                sort_field="n_chars", quantize=True,
+                store_fields=["url", "text"], with_bigrams=True)
+    return ix
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("placement", ["driver", "spark"])
+def test_every_table_equals_fresh_build(spark, tmp_path, monkeypatch, placement):
+    """After a random upsert/delete sequence, every table in the
+    maintenance registry holds what a fresh build of the final corpus
+    holds (ids mapped through urls and terms), run once per placement.
+    postings_q keeps the avgdl it was built with: its impacts must be
+    quantize_impacts of the fresh postings at that recorded avgdl."""
+    import numpy as np
+
+    from search_ingest_spark.index import build as ib
+    from search_ingest_spark.streaming import incremental as inc
+    from catalog_content import catalog_content
+
+    if placement == "spark":
+        monkeypatch.setattr(inc, "MICRO_BATCH_CAP", 0)
+    rng = random.Random(99)
+    live = {f"u{i:02d}": _text(rng) for i in range(24)}
+    cat = Catalog(spark, str(tmp_path / "inc"))
+    ix = _full_index(spark, cat, _pages(spark, [(u, 0, t) for u, t in live.items()]))
+    built_avgdl = cat.read_small(ib.STATS_TABLE)[0]["avgdl"]
+    clock = 1
+    for _ in range(3):
+        events = []
+        for _ in range(rng.randint(4, 9)):
+            if live and rng.random() < 0.3:
+                url = rng.choice(sorted(live))
+                events.append((url, clock, None, OP_DELETE))
+                del live[url]
+            else:
+                url = (rng.choice(sorted(live)) if live and rng.random() < 0.5
+                       else f"u{rng.randint(30, 60)}")
+                live[url] = _text(rng)
+                events.append((url, clock, live[url], OP_UPSERT))
+            clock += 1
+        st = ix.apply_changes(spark.createDataFrame(
+            [(u, TS0 + dt.timedelta(seconds=o), None, t, "en", op)
+             for u, o, t, op in events],
+            "url string, warc_ts timestamp, html binary, text string,"
+            " lang string, _op string"))
+        assert st.placement == placement
+    monkeypatch.undo()
+
+    fresh = Catalog(spark, str(tmp_path / "fresh"))
+    _full_index(spark, fresh, _pages(spark, [(u, 0, t) for u, t in sorted(live.items())]))
+    got, want = catalog_content(cat), catalog_content(fresh)
+
+    # the registry's DROP tables are gone; everything else is present
+    assert set(got) == set(want) - {ib.BIGRAM_TABLE, ib.MANIFEST_TABLE}
+    assert got[ib.POSTINGS_Q_META] == [{"avgdl": built_avgdl}]
+    q = ib.quantize_impacts(
+        np.array([tf for _, _, tf, _ in sorted(want[ib.POSTINGS_TABLE])]),
+        np.array([dl for _, _, _, dl in sorted(want[ib.POSTINGS_TABLE])]),
+        built_avgdl)
+    assert got[ib.POSTINGS_Q_TABLE] == {
+        (t, u, int(v)) for (t, u, _, _), v in zip(sorted(want[ib.POSTINGS_TABLE]), q)}
+    [g_st], [w_st] = got[ib.STATS_TABLE], want[ib.STATS_TABLE]
+    for col in ("n_docs", "sum_dl", "avgdl", "analyzer"):
+        assert g_st[col] == w_st[col], col
+    for name in set(got) - {ib.POSTINGS_Q_META, ib.POSTINGS_Q_TABLE, ib.STATS_TABLE}:
+        assert got[name] == want[name], name
