@@ -108,9 +108,13 @@ MANIFEST_TABLE = "build_manifest"
 POSTINGS_Q_META = "postings_q_meta"
 
 # How a changefeed batch (streaming/incremental.py) maintains each index
-# table.  apply_changes walks this registry, so a table added here
-# without a rule, or with a rule the batch cannot honour, is dropped
-# rather than left stale.
+# table.  apply_changes walks this registry: a registered table whose
+# rule the batch cannot honour is dropped rather than left stale.  A
+# table with no rule is not an index table and is kept as it is: the
+# changefeed's own docs / doc_ids / counters, which apply_changes
+# rewrites itself, or another subsystem's table in the same catalog.
+# A new index table therefore needs a rule here
+# (tests/test_incremental.py::test_registry_covers_every_built_table).
 SPLICE = "splice"  # rewritten per dirty shard from the post-batch docs
 DELTA = "delta"    # updated from the batch's exact aggregates / segments
 KEEP = "keep"      # build-time metadata the batch leaves as it is

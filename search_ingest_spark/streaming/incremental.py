@@ -28,27 +28,34 @@ applies one batch of (url, warc_ts, html/text, _op) events:
    new terms are appended, so clean shards' postings stay valid and
    BM25 stays exactly what a rebuild computes.
 
-Which tables are spliced, delta-maintained, kept or dropped is the
-registry `index.build.TABLE_RULES`; the batch walks it over the
-catalog, so a table is never silently left stale.  A table whose rule
-this indexer cannot honour (postings_q without its recorded build
-avgdl, doc_attrs without attr_exprs, a doc_store field that is no doc
-column, the sorted attr tables without sort_field, bigram_stats,
-build_manifest) is dropped in the batch's transaction.
+Which index tables are spliced, delta-maintained, kept or dropped is
+the registry `index.build.TABLE_RULES`; the batch walks it over the
+catalog.  A registered table whose rule this indexer cannot honour
+(postings_q without its recorded build avgdl, doc_attrs without
+attr_exprs, a doc_store field that is no doc column, the sorted attr
+tables without sort_field) is dropped in the batch's transaction, as
+are bigram_stats and build_manifest.  A table with no rule is kept as
+it is: docs, doc_ids and counters, which the batch rewrites itself, or
+a table of another subsystem.
 
-Placement.  A batch of at most MICRO_BATCH_CAP events runs on the
-driver: one `limit(cap + 1).toArrow()` is both the size probe and the
-batch (the only Spark job: no Python UDF in its plan — html is turned
-into text on the driver), ids resolve with a partition-filtered
-pyarrow read of the touched url→id buckets, the dirty shards' old rows
-are pyarrow reads, and every write is a driver-side parquet write.
-attr_exprs and the url hash evaluate over a LocalRelation, which
-starts no job.  A larger batch (a backlog replay) resolves ids with
-Spark joins and runs the same kernel in one mapInArrow job, one task
-per group of dirty shards writing its partitions straight into the
-catalog's stage dirs; a second job attaches the new term ids to the
-staged postings.  Both placements commit identical tables (asserted
-in tests/test_incremental.py).
+Placement.  One `limit(MICRO_BATCH_CAP + 1).toArrow()` is both the
+size probe and, for a batch of at most MICRO_BATCH_CAP events, the
+batch itself (no Python UDF in its plan: html is turned into text on
+the driver).  Such a batch resolves on the driver: last-writer-wins in
+pyarrow, ids from a partition-filtered pyarrow read of the touched
+url→id buckets, the url hash over a LocalRelation (no job).  A larger
+batch (a backlog replay) resolves with Spark joins instead.  The splice
+then runs on the driver when the batch resolved there and its dirty
+shards hold at most DRIVER_SPLICE_MAX_DOCS docs (parquet footer
+counts): the kernel runs in-process over pyarrow reads of the dirty
+shards, attr_exprs evaluate over a LocalRelation, and every write is a
+driver-side parquet write, so the probe is the batch's only Spark job.
+Otherwise the same kernel runs in one mapInArrow job, one task per
+group of dirty shards writing its partitions straight into the
+catalog's stage dirs, and a second job attaches the new term ids to
+the staged postings.  Every placement commits identical tables
+(asserted in tests/test_incremental.py).  Both caps bound driver
+memory; their measured basis is in their comments.
 
 Cost per batch (the O(dirty) contract, asserted by
 tests/test_incremental.py::test_clean_shards_never_read): reads are the
@@ -103,9 +110,21 @@ OP_UPSERT = "upsert"
 OP_DELETE = "delete"
 _OPS = pa.array([OP_UPSERT, OP_DELETE])
 
-# batches of at most this many events run on the driver (module doc);
-# 100k events are a few hundred MB of driver memory at most
-MICRO_BATCH_CAP = 100_000
+# a batch of at most this many events resolves on the driver, so the
+# probe holds at most this many events' payload: ~4 MB of text at the
+# benchmark's ~1 KB pages, ~400 MB if each event carries a 100 KB html
+# page.  The cap bounds driver memory, not time: on the perfbench corpus
+# the driver resolve took 0.1-0.6 s at 12 to 16384 events, the Spark
+# one 2.0-5.2 s
+MICRO_BATCH_CAP = 4096
+
+# the driver splices a batch whose dirty shards hold at most this many
+# docs (counted from parquet footers); past it the mapInArrow splice
+# runs.  It bounds the text the driver loads, converts for attr_exprs
+# and tokenizes in one thread.  Measured on the perfbench corpus with 3
+# Spark cores, the two splices tie at ~10k dirty docs (driver 4.9-5.5 s,
+# Spark 5.3-5.9 s) and Spark wins at 32k (8.6-9.1 s against 12.4-12.7 s)
+DRIVER_SPLICE_MAX_DOCS = 8192
 
 # dictionaries of at most this many terms take the driver-side delta
 # (a few hundred MB of driver memory at the cap); larger vocabularies
@@ -186,7 +205,7 @@ class ChangeStats:
     deletes: int
     new_docs: int
     dirty_shards: list[int]
-    placement: str = "driver"      # "driver" or "spark" (module doc)
+    placement: str = "driver"      # where the splice ran: "driver"/"spark"
     spark_jobs: int = 0            # jobs the session started meanwhile
     phase_s: dict = field(default_factory=dict)  # probe/resolve/splice/commit
 
@@ -194,8 +213,8 @@ class ChangeStats:
 @dataclass
 class _Batch:
     """A resolved batch: counts, dirty sets, and the upserted rows
-    (doc_id, url, warc_ts, text) and deleted ids, as pyarrow on the
-    driver placement or as Spark frames on the backlog placement."""
+    (doc_id, url, warc_ts, text) and deleted ids, as pyarrow when it
+    was resolved on the driver, as Spark frames for a backlog."""
     n_up: int
     n_new: int
     n_del: int
@@ -373,8 +392,9 @@ class PageIndexer:
     # -- changefeed batch (A2/A13-A15) ---------------------------------------
     def apply_changes(self, changes: DataFrame) -> ChangeStats:
         """Apply one batch of (url, warc_ts, html/text, _op) events: on
-        the driver, or with Spark past MICRO_BATCH_CAP events (module
-        doc).  Returns the batch's ChangeStats record."""
+        the driver, or with Spark past MICRO_BATCH_CAP events or
+        DRIVER_SPLICE_MAX_DOCS dirty docs (module doc).  Returns the
+        batch's ChangeStats record."""
         spark, cat = self.spark, self.cat
         job0, t0 = _next_job_id(spark), time.perf_counter()
         phases = dict.fromkeys(("probe", "resolve", "splice", "commit"), 0.0)
@@ -392,6 +412,8 @@ class PageIndexer:
         driver = ev.num_rows <= MICRO_BATCH_CAP
         b = (self._resolve_driver(ev, base) if driver
              else self._resolve_spark(changes, base))
+        driver = driver and cat.arrow_dataset(DOCS_TABLE).count_rows(
+            filter=pc.field("shard").isin(b.dirty)) <= DRIVER_SPLICE_MAX_DOCS
         lap("resolve")
         n_segs = -1
         try:
@@ -637,11 +659,20 @@ class PageIndexer:
         into the tables' stage dirs (postings keyed by term string into
         side stages) and returning the shards' per-term counts plus one
         null-term row of (n_docs, Σdl).  `finish` attaches the new term
-        ids to the staged postings in a second job."""
+        ids to the staged postings in a second job.  The batch may have
+        been resolved on either placement."""
         spark, cat, dirty = self.spark, self.cat, b.dirty
+        ups, touched, id_rows = b.ups, b.touched_urls, b.id_rows
+        if isinstance(ups, pa.Table):
+            ups = spark.createDataFrame(ups)
+            touched = spark.createDataFrame(pa.table({"url": touched}))
+        else:
+            id_rows = id_rows.repartition(
+                max(1, min(len(b.dirty_buckets),
+                           spark.sparkContext.defaultParallelism)), "id_bucket")
         rows = (cat.read(DOCS_TABLE).where(F.col("shard").isin(dirty))
-                .select(*DOC_COLS).join(b.touched_urls, "url", "left_anti")
-                .unionByName(b.ups.select(*DOC_COLS)))
+                .select(*DOC_COLS).join(touched, "url", "left_anti")
+                .unionByName(ups.select(*DOC_COLS)))
         rows = self._attr_cols(rows).withColumn("shard", self._shard_col())
         stage = {n: cat.stage_path(n) for n in [DOCS_TABLE, *plan.splice]}
         schemas = {n: cat.arrow_schema(n, drop=("shard",)) for n in stage}
@@ -678,11 +709,8 @@ class PageIndexer:
         for name in stage:
             if name not in raw:
                 cat.replace_partitions(name, stage[name], "shard", dirty)
-        cat.replace_partitions(
-            DOC_IDS_TABLE,
-            b.id_rows.repartition(max(1, min(len(b.dirty_buckets), n_part)),
-                                  "id_bucket"),
-            "id_bucket", b.dirty_buckets)
+        cat.replace_partitions(DOC_IDS_TABLE, id_rows, "id_bucket",
+                               b.dirty_buckets)
 
         def finish(term_strs, term_ids):
             def attach(batches):
@@ -711,11 +739,12 @@ class PageIndexer:
 
         n_segs = -1
         if plan.sorted_meta is not None:
-            ups_attrs = rows.join(b.ups.select("doc_id"), "doc_id", "left_semi")
+            ups_attrs = rows.join(ups.select("doc_id"), "doc_id", "left_semi")
             n_segs = self._sorted_segment_writes(
                 plan.sorted_meta,
                 ups_attrs.select("doc_id", *self.attr_exprs).toArrow(),
-                [r[0] for r in b.del_ids.collect()])
+                b.del_ids if isinstance(b.del_ids, list)
+                else [r[0] for r in b.del_ids.collect()])
         return (terms, int(pc.sum(total["ndf"]).as_py() or 0),
                 int(pc.sum(total["ncf"]).as_py() or 0), finish, n_segs)
 

@@ -99,3 +99,27 @@ def catalog_content(cat) -> dict:
                     ib.SORTED_ATTRS_SEG_PREFIX):
             out[name] = sorted(str(r) for r in _rows(cat, name))
     return out
+
+
+def assert_matches_fresh_build(cat, fresh, built_avgdl: float) -> None:
+    """An incrementally maintained catalog holds what a fresh build of
+    its final corpus holds, table by table: the registry's drop tables
+    are gone, postings_q keeps the avgdl it was built with (its impacts
+    are quantize_impacts of the fresh postings at that avgdl), and every
+    other table is equal in content."""
+    import numpy as np
+
+    got, want = catalog_content(cat), catalog_content(fresh)
+    assert set(got) == set(want) - {ib.BIGRAM_TABLE, ib.MANIFEST_TABLE}
+    assert got[ib.POSTINGS_Q_META] == [{"avgdl": built_avgdl}]
+    postings = sorted(want[ib.POSTINGS_TABLE])
+    q = ib.quantize_impacts(np.array([tf for _, _, tf, _ in postings]),
+                            np.array([dl for _, _, _, dl in postings]),
+                            built_avgdl)
+    assert got[ib.POSTINGS_Q_TABLE] == {
+        (t, u, int(v)) for (t, u, _, _), v in zip(postings, q)}
+    [g_st], [w_st] = got[ib.STATS_TABLE], want[ib.STATS_TABLE]
+    for col in ("n_docs", "sum_dl", "avgdl", "analyzer"):
+        assert g_st[col] == w_st[col], col
+    for name in set(got) - {ib.POSTINGS_Q_META, ib.POSTINGS_Q_TABLE, ib.STATS_TABLE}:
+        assert got[name] == want[name], name

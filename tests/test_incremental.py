@@ -27,7 +27,7 @@ from search_ingest_spark.streaming.incremental import (
     latest_per_key_arrow,
 )
 
-from catalog_content import catalog_content
+from catalog_content import assert_matches_fresh_build, catalog_content
 
 TS0 = dt.datetime(2026, 1, 1)
 
@@ -71,19 +71,23 @@ def _add_quantized_and_store(spark, ix):
                    store_fields=["text"])
 
 
-@pytest.fixture()
-def full_indexer(spark, tmp_path):
-    """An indexer over every optional index table."""
-    cat = Catalog(spark, str(tmp_path / "full"))
+def _full_index(spark, cat, rows):
+    """An indexer over every optional index table, backfilled with
+    `rows` (url, ts_offset_s, text)."""
     ix = PageIndexer(spark, cat, mode="simple", docs_per_shard=8,
                      with_positions=True, attr_exprs={"n_chars": "length(text)"},
                      sort_field="n_chars")
-    ix.backfill(_pages_df(spark, CORPUS))
+    ix.backfill(_pages_df(spark, rows))
     ib.build_index(spark, ix._attr_cols(cat.read(DOCS_TABLE)), cat, mode="simple",
                    docs_per_shard=8, with_positions=True, attr_cols=["n_chars"],
                    sort_field="n_chars", quantize=True, store_fields=["text"],
                    with_bigrams=True)
     return ix
+
+
+@pytest.fixture()
+def full_indexer(spark, tmp_path):
+    return _full_index(spark, Catalog(spark, str(tmp_path / "full")), CORPUS)
 
 
 def _assert_index_matches_corpus(spark, ix, query="common shared"):
@@ -310,6 +314,8 @@ def test_latest_per_key_tiebreak(spark):
     for got in (latest_per_key(df, "url", "warc_ts", ["_op", "text"]).collect(),
                 latest_per_key_arrow(df.toArrow(), "url", "warc_ts",
                                      ["_op", "text"]).to_pylist()):
+        # exactly one row per url: a duplicate would collapse in the dict
+        assert sorted(r["url"] for r in got) == sorted(want)
         assert {r["url"]: r["text"] if r["_op"] == OP_UPSERT else None
                 for r in got} == want
 
@@ -348,6 +354,37 @@ def test_micro_batch_starts_at_most_one_job(spark, full_indexer):
     assert (st.upserts, st.deletes, st.new_docs) == (2, 1, 1)
     assert len(st.dirty_shards) == 3
     assert set(st.phase_s) == {"probe", "resolve", "splice", "commit"}
+
+
+@pytest.mark.parametrize("placement", ["driver", "spark"])
+def test_batch_touching_every_shard(spark, tmp_path, monkeypatch, placement):
+    """A micro-batch that dirties every shard, spliced on the driver
+    and, with the dirty-doc bound forced to 0, by the mapInArrow splice
+    over the driver-resolved batch: the catalog then holds what a fresh
+    build of the final corpus holds."""
+    import search_ingest_spark.streaming.incremental as inc
+
+    if placement == "spark":
+        monkeypatch.setattr(inc, "DRIVER_SPLICE_MAX_DOCS", 0)
+    cat = Catalog(spark, str(tmp_path / "inc"))
+    ix = _full_index(spark, cat, CORPUS)
+    built_avgdl = cat.read_small(ib.STATS_TABLE)[0]["avgdl"]
+    events = [(f"https://t/{i}", 1000 + i, f"edited {i} common tok{i}", OP_UPSERT)
+              for i in range(0, len(CORPUS), 8)]
+    events += [("https://t/3", 1100, None, OP_DELETE),
+               ("https://t/zz", 1101, "brand new page common", OP_UPSERT)]
+    st = ix.apply_changes(_changes_df(spark, events))
+    assert st.placement == placement
+    assert st.dirty_shards == list(range(len(CORPUS) // 8 + 1))
+    live = {u: t for u, _, t in CORPUS}
+    for u, _, t, op in events:
+        if op == OP_DELETE:
+            del live[u]
+        else:
+            live[u] = t
+    fresh = Catalog(spark, str(tmp_path / "fresh"))
+    _full_index(spark, fresh, [(u, 0, t) for u, t in sorted(live.items())])
+    assert_matches_fresh_build(cat, fresh, built_avgdl)
 
 
 def test_registry_covers_every_built_table(spark, full_indexer):

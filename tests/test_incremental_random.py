@@ -129,21 +129,23 @@ def _full_index(spark, cat, pages):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("placement", ["driver", "spark"])
+@pytest.mark.parametrize("placement", ["driver", "spark", "spark_splice"])
 def test_every_table_equals_fresh_build(spark, tmp_path, monkeypatch, placement):
     """After a random upsert/delete sequence, every table in the
     maintenance registry holds what a fresh build of the final corpus
-    holds (ids mapped through urls and terms), run once per placement.
-    postings_q keeps the avgdl it was built with: its impacts must be
-    quantize_impacts of the fresh postings at that recorded avgdl."""
-    import numpy as np
-
+    holds (ids mapped through urls and terms), run once per placement:
+    all on the driver, all on Spark (a backlog), and a batch resolved
+    on the driver whose dirty shards are too large for the driver
+    splice.  postings_q keeps the avgdl it was built with: its impacts
+    must be quantize_impacts of the fresh postings at that avgdl."""
     from search_ingest_spark.index import build as ib
     from search_ingest_spark.streaming import incremental as inc
-    from catalog_content import catalog_content
+    from catalog_content import assert_matches_fresh_build
 
     if placement == "spark":
         monkeypatch.setattr(inc, "MICRO_BATCH_CAP", 0)
+    elif placement == "spark_splice":
+        monkeypatch.setattr(inc, "DRIVER_SPLICE_MAX_DOCS", 0)
     rng = random.Random(99)
     live = {f"u{i:02d}": _text(rng) for i in range(24)}
     cat = Catalog(spark, str(tmp_path / "inc"))
@@ -168,24 +170,9 @@ def test_every_table_equals_fresh_build(spark, tmp_path, monkeypatch, placement)
              for u, o, t, op in events],
             "url string, warc_ts timestamp, html binary, text string,"
             " lang string, _op string"))
-        assert st.placement == placement
+        assert st.placement == placement.split("_")[0]
     monkeypatch.undo()
 
     fresh = Catalog(spark, str(tmp_path / "fresh"))
     _full_index(spark, fresh, _pages(spark, [(u, 0, t) for u, t in sorted(live.items())]))
-    got, want = catalog_content(cat), catalog_content(fresh)
-
-    # the registry's DROP tables are gone; everything else is present
-    assert set(got) == set(want) - {ib.BIGRAM_TABLE, ib.MANIFEST_TABLE}
-    assert got[ib.POSTINGS_Q_META] == [{"avgdl": built_avgdl}]
-    q = ib.quantize_impacts(
-        np.array([tf for _, _, tf, _ in sorted(want[ib.POSTINGS_TABLE])]),
-        np.array([dl for _, _, _, dl in sorted(want[ib.POSTINGS_TABLE])]),
-        built_avgdl)
-    assert got[ib.POSTINGS_Q_TABLE] == {
-        (t, u, int(v)) for (t, u, _, _), v in zip(sorted(want[ib.POSTINGS_TABLE]), q)}
-    [g_st], [w_st] = got[ib.STATS_TABLE], want[ib.STATS_TABLE]
-    for col in ("n_docs", "sum_dl", "avgdl", "analyzer"):
-        assert g_st[col] == w_st[col], col
-    for name in set(got) - {ib.POSTINGS_Q_META, ib.POSTINGS_Q_TABLE, ib.STATS_TABLE}:
-        assert got[name] == want[name], name
+    assert_matches_fresh_build(cat, fresh, built_avgdl)
