@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, StringType
+from pyspark.sql.types import StringType
 
 # ---------------------------------------------------------------------------
 # Tokenization (UAX#29 approximation of Lucene "standard")
@@ -185,16 +185,6 @@ def extract_text(html: bytes | None) -> str:
 # ---------------------------------------------------------------------------
 # Vectorized Spark wrappers (Arrow batches — the only Python in the row path)
 # ---------------------------------------------------------------------------
-
-
-@pandas_udf(ArrayType(StringType()))
-def analyze_terms_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: analyze(t)[0] if t is not None else [])
-
-
-@pandas_udf(IntegerType())
-def analyze_positions_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: len(standard_tokens(t)) if t is not None else 0)
 
 
 @pandas_udf(StringType())

@@ -220,9 +220,10 @@ def _q_wand_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm25.bm25_oracle_sql("table hash fast", k=10, filter_where="lang = 'es'"),
 )
 def _q_wand_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filter-context bool query on the INDEX path: per-shard postings
-    cogrouped with the shard's qualifying doc ids from the doc_attrs
-    table (whole-index stats, masked candidates — ES semantics)."""
+    """Filter-context bool query on the INDEX path: each shard is scored
+    with its qualifying doc ids from the doc_attrs table as the
+    candidate mask (whole-index stats, masked candidates — ES
+    semantics)."""
     return _searcher(spark, sf_dir).topk(
         "table hash fast", 10, round_to=4, attr_filter={"lang": "es"}
     )
@@ -480,9 +481,9 @@ def _q_wildcard_local(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ES `regexp` term query (B8 family): anchored full-term regex over the
 # dictionary, capped deterministic expansion, OR-scored through the
-# unchanged WAND kernel.  Pattern kept in the portable regex subset so
-# Spark rlike (Java), the serving path (Python re), and the DuckDB
-# oracle (RE2) agree.
+# unchanged WAND kernel.  Both front-ends match with Python `re`
+# (LocalSearcher.plan_regexp); the pattern is kept in the portable
+# regex subset so it and the DuckDB oracle (RE2) agree.
 @register(
     "bm25_regexp_topk",
     bm25.regexp_oracle_sql("dat[ae]s?", k=10, max_expansions=8),
@@ -708,8 +709,9 @@ def _q_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # geo_distance filter-context query (ES geo_distance, schemas.cr:211-222
 # maps geo_point): WAND candidates masked by a haversine predicate over
-# doc_attrs lat/lon, evaluated JVM-side by Catalyst on the same cogroup
-# path as every other filtered query.  The oracle replays the identical
+# doc_attrs lat/lon, evaluated JVM-side by Catalyst in one job whose
+# qualifying doc ids mask the shard fan-out like every other filtered
+# query.  The oracle replays the identical
 # operation-ordered haversine over the doc_id-derived lat/lon.
 _GEO_LAT, _GEO_LON, _GEO_RADIUS_KM = 40.0, -74.0, 5000.0
 

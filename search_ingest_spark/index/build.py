@@ -72,16 +72,13 @@ import os
 import threading
 import time
 import uuid
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from search_ingest_spark.analysis import doc_terms_pandas
 from search_ingest_spark.catalog import Catalog
 from search_ingest_spark.index.codec import BLOCK_SIZE, encode_blocks_bulk
 from search_ingest_spark.session import trimmed
@@ -324,18 +321,20 @@ class _BuildState:
 
 
 # ---------------------------------------------------------------------------
-# the block encoder (mapInPandas kernel over shard-sorted token runs)
+# postings block layout
 # ---------------------------------------------------------------------------
 
 # Block metadata includes per-block aggregates (n_docs = block df
 # contribution, sum_tf = block cf contribution): the incremental splice
 # recovers a dirty shard's exact per-term (df, cf) from a COLUMNAR scan
 # of these — no raw token stream is ever persisted (see build_index).
-POSTINGS_OUT_SCHEMA = (
-    "term_id long, shard int, block_id int, first_doc_id long, last_doc_id long,"
-    " n_docs int, max_tf int, sum_tf long, min_dl int, data binary"
-)
-
+# Block-max metadata is (max_tf, min_dl) rather than a baked-in max
+# BM25 factor: the tf-norm is increasing in tf and decreasing in dl, so
+# max_tf/(max_tf + k1*(1-b+b*min_dl/avgdl)) is a valid upper bound
+# under the avgdl CURRENT at query time — incremental batches shift
+# avgdl without invalidating previously-built shards (Lucene bakes
+# norms in and lives with approximate stats; we keep exactness).
+#
 # encoder emits the term STRING; term ids are joined onto the (10-100x
 # smaller) blocks output afterwards, so raw postings never shuffle twice
 POSTINGS_ENC_SCHEMA = (
@@ -360,96 +359,6 @@ POSTINGS_Q_COLS = [
 ]
 
 
-def _empty_postings_pdf() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "term": pd.Series([], dtype=object),
-            "shard": pd.array([], dtype="int32"),
-            "block_id": pd.array([], dtype="int32"),
-            "first_doc_id": pd.array([], dtype="int64"),
-            "last_doc_id": pd.array([], dtype="int64"),
-            "n_docs": pd.array([], dtype="int32"),
-            "max_tf": pd.array([], dtype="int32"),
-            "sum_tf": pd.array([], dtype="int64"),
-            "min_dl": pd.array([], dtype="int32"),
-            "data": pd.Series([], dtype=object),
-        }
-    )
-
-
-def _encode_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Consume (shard, term_id, doc_id, tf, dl) rows sorted by
-    (shard, term_id, doc_id); emit one postings row per block.
-
-    Fully vectorized: run boundaries ((shard, term_id) changes) and
-    block boundaries (every BLOCK_SIZE postings within a run) are found
-    with NumPy; per-block metadata uses reduceat; the varint streams are
-    encoded in one pass over the whole batch (codec.encode_blocks_bulk)
-    so cost stays per-posting, not per-run — short runs (rare terms /
-    small corpora) would otherwise drown in per-group overhead.
-
-    Streaming with carry-over between Arrow batches so a run can span
-    batch boundaries without buffering the whole partition.
-
-    Block-max metadata is (max_tf, min_dl) rather than a baked-in max
-    BM25 factor: the tf-norm is increasing in tf and decreasing in dl,
-    so max_tf/(max_tf + k1*(1-b+b*min_dl/avgdl)) is a valid upper bound
-    under the avgdl CURRENT at query time — incremental batches shift
-    avgdl without invalidating previously-built shards (Lucene bakes
-    norms in and lives with approximate stats; we keep exactness).
-    """
-    carry: pd.DataFrame | None = None
-
-    def flush(done: pd.DataFrame) -> pd.DataFrame:
-        if len(done) == 0:
-            return _empty_postings_pdf()
-        shard = done["shard"].to_numpy(np.int32)
-        term = done["term"].to_numpy(object)
-        doc = done["doc_id"].to_numpy(np.int64)
-        tf = done["tf"].to_numpy(np.int64)
-        dl = done["dl"].to_numpy(np.int64)
-        n = len(doc)
-        run_start_mask = np.empty(n, dtype=bool)
-        run_start_mask[0] = True
-        run_start_mask[1:] = (shard[1:] != shard[:-1]) | (term[1:] != term[:-1])
-        run_idx = np.cumsum(run_start_mask) - 1          # run id per row
-        run_starts = np.flatnonzero(run_start_mask)
-        offset_in_run = np.arange(n) - run_starts[run_idx]
-        block_start_mask = run_start_mask | (offset_in_run % BLOCK_SIZE == 0)
-        block_starts = np.flatnonzero(block_start_mask)
-        block_ends = np.append(block_starts[1:], n)
-        blobs = encode_blocks_bulk(doc, tf, dl, block_starts, block_ends)
-        return pd.DataFrame({
-            "term": term[block_starts],
-            "shard": shard[block_starts],
-            "block_id": ((offset_in_run[block_starts]) // BLOCK_SIZE).astype(np.int32),
-            "first_doc_id": doc[block_starts],
-            "last_doc_id": doc[block_ends - 1],
-            "n_docs": (block_ends - block_starts).astype(np.int32),
-            "max_tf": np.maximum.reduceat(tf, block_starts).astype(np.int32),
-            "sum_tf": np.add.reduceat(tf, block_starts).astype(np.int64),
-            "min_dl": np.minimum.reduceat(dl, block_starts).astype(np.int32),
-            "data": blobs,
-        })
-
-    for batch in it:
-        if carry is not None:
-            batch = pd.concat([carry, batch], ignore_index=True)
-        if len(batch) == 0:
-            carry = None
-            continue
-        last_shard = batch["shard"].iloc[-1]
-        last_term = batch["term"].iloc[-1]
-        tail_mask = (batch["shard"] == last_shard) & (batch["term"] == last_term)
-        # hold back the (possibly incomplete) final run
-        carry = batch[tail_mask]
-        done = batch[~tail_mask]
-        if len(done):
-            yield flush(done)
-    if carry is not None and len(carry):
-        yield flush(carry)
-
-
 def quantize_impacts(
     tf: np.ndarray, dl: np.ndarray, avgdl: float
 ) -> np.ndarray:
@@ -464,79 +373,6 @@ def quantize_impacts(
     d = dl.astype(np.float64)
     tfn = (t * (K1 + 1.0)) / (t + K1 * (1.0 - B + B * d / avgdl))
     return np.floor(tfn * IMPACT_SCALE).astype(np.int64)
-
-
-def _make_impact_encoder(avgdl: float):
-    """mapInPandas kernel for the impact-quantized postings table: same
-    run/block segmentation as _encode_partition, but the blob is
-    (varint deltas + one impact byte per posting) and the block-max
-    metadata is the EXACT max_impact (tight upper bound, vs the
-    (max_tf, min_dl) proxy on the exact path)."""
-    from search_ingest_spark.index.codec import encode_impact_blocks_bulk
-
-    def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def flush(done: pd.DataFrame) -> pd.DataFrame:
-            if len(done) == 0:
-                return pd.DataFrame({
-                    "term": pd.Series([], dtype=object),
-                    "shard": pd.array([], dtype="int32"),
-                    "block_id": pd.array([], dtype="int32"),
-                    "first_doc_id": pd.array([], dtype="int64"),
-                    "last_doc_id": pd.array([], dtype="int64"),
-                    "n_docs": pd.array([], dtype="int32"),
-                    "max_impact": pd.array([], dtype="int32"),
-                    "data": pd.Series([], dtype=object),
-                })
-            shard = done["shard"].to_numpy(np.int32)
-            term = done["term"].to_numpy(object)
-            doc = done["doc_id"].to_numpy(np.int64)
-            q = quantize_impacts(
-                done["tf"].to_numpy(np.int64),
-                done["dl"].to_numpy(np.int64), avgdl,
-            )
-            n = len(doc)
-            run_start_mask = np.empty(n, dtype=bool)
-            run_start_mask[0] = True
-            run_start_mask[1:] = (shard[1:] != shard[:-1]) | (term[1:] != term[:-1])
-            run_idx = np.cumsum(run_start_mask) - 1
-            run_starts = np.flatnonzero(run_start_mask)
-            offset_in_run = np.arange(n) - run_starts[run_idx]
-            block_start_mask = run_start_mask | (offset_in_run % BLOCK_SIZE == 0)
-            block_starts = np.flatnonzero(block_start_mask)
-            block_ends = np.append(block_starts[1:], n)
-            blobs = encode_impact_blocks_bulk(doc, q, block_starts, block_ends)
-            return pd.DataFrame({
-                "term": term[block_starts],
-                "shard": shard[block_starts],
-                "block_id": (offset_in_run[block_starts] // BLOCK_SIZE).astype(np.int32),
-                "first_doc_id": doc[block_starts],
-                "last_doc_id": doc[block_ends - 1],
-                "n_docs": (block_ends - block_starts).astype(np.int32),
-                "max_impact": np.maximum.reduceat(q, block_starts).astype(np.int32),
-                "data": blobs,
-            })
-
-        for batch in it:
-            if carry is not None:
-                batch = pd.concat([carry, batch], ignore_index=True)
-            if len(batch) == 0:
-                carry = None
-                continue
-            last_shard = batch["shard"].iloc[-1]
-            last_term = batch["term"].iloc[-1]
-            tail_mask = (
-                (batch["shard"] == last_shard) & (batch["term"] == last_term)
-            )
-            carry = batch[tail_mask]
-            done = batch[~tail_mask]
-            if len(done):
-                yield flush(done)
-        if carry is not None and len(carry):
-            yield flush(carry)
-
-    return encode
 
 
 # ---------------------------------------------------------------------------
@@ -1246,9 +1082,10 @@ def build_index(
     def _doc_attrs_fn():
         # filterable per-doc attributes, shard-partitioned and
         # doc-sorted: the query-side filter mask (the Lucene
-        # filter-bitset analog) — a filtered WAND query cogroups these
-        # with the postings per shard (query/wand.py).  Column-pruned
-        # scan: only id + attr columns leave the parquet reader.
+        # filter-bitset analog) — a filtered top-k plans each shard
+        # with its qualifying doc ids read from here
+        # (reader.LocalSearcher.plan_topk).  Column-pruned scan: only
+        # id + attr columns leave the parquet reader.
         a = docs.select(
             F.col(id_col).alias("doc_id"), *[F.col(c) for c in attr_cols]
         ).withColumn("shard", (F.col("doc_id") / F.lit(docs_per_shard)).cast("int"))

@@ -53,21 +53,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def exact_duplicates_sql(table: str = "documents", id_col: str = "doc_id",
-                         text_col: str = "text") -> str:
-    return f"""
-WITH f AS (
-  SELECT {id_col} AS doc_id,
-         md5(array_to_string(regexp_extract_all(lower({text_col}), '{TOKEN_PATTERN}'), ' ')) AS fp
-  FROM {table}
-)
-SELECT min(doc_id)::BIGINT AS keep_doc_id,
-       count(*)::BIGINT AS group_size,
-       list_sort(list(doc_id)) AS members
-FROM f GROUP BY fp HAVING count(*) >= 2
-""".strip()
-
-
 # ---------------------------------------------------------------------------
 # n-gram shingles + exact Jaccard (ground truth)
 # ---------------------------------------------------------------------------
@@ -101,15 +86,6 @@ def _doc_shingles(
         .select("doc_id",
                 F.explode(shingles_from_tokens(F.col("__toks"), n)).alias("sh"))
     )
-
-
-def shingles_col(text_col: str = "text", n: int = 3):
-    """Distinct word n-gram shingles as an array column (JVM-side).
-
-    NOTE: inlines the tokenizer into the shingle lambda — fine for
-    one-shot/small use and for SQL-parity, but hot paths should
-    pre-project tokens and use shingles_from_tokens (see its doc)."""
-    return shingles_from_tokens(tokens_col(text_col), n)
 
 
 def ngram_jaccard_pairs(
@@ -237,17 +213,6 @@ def hash_shingle_col(col) -> F.Column:
     ('0x' || substr(md5(s), 1, 15))::BIGINT), but computed inside
     whole-stage codegen with no Python in the row path."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _perm_hash_col(h, a_j: int, b_j: int, c_j: int) -> F.Column:
-    """(a*(h>>30) + b*(h&mask) + c) mod (2^61-1) over a long column —
-    see the module hashing contract: every intermediate fits signed
-    64-bit, so this is exact in Spark's ANSI mode AND in DuckDB BIGINT."""
-    h1 = F.shiftright(h, 30)
-    h0 = h.bitwiseAND(F.lit(_HALF_MASK))
-    return F.pmod(
-        h1 * F.lit(a_j) + h0 * F.lit(b_j) + F.lit(c_j), F.lit(_MERSENNE)
-    )
 
 
 def minhash_signatures(

@@ -18,14 +18,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_ingest_spark.ops.dedup import cosine_expr
-
-
-def _query_df(spark: SparkSession, qvec: list[float]):
-    return F.array(*[F.lit(float(v)).cast("float") for v in qvec])
 
 
 def brute_force_topk(

@@ -644,7 +644,7 @@ def fuzzy_oracle_sql(
     """DuckDB SQL modeling Searcher.topk_fuzzy: the query's term set is
     expanded to every VOCABULARY term within `fuzziness` Levenshtein
     edits of any analyzed query term, then scored as a plain OR query
-    (each expanded term with its own idf — wand.Searcher.plan_fuzzy's
+    (each expanded term with its own idf — reader.LocalSearcher.plan_fuzzy's
     documented semantics)."""
     terms = sorted(set(analyze_query(query_text, mode="simple")))
     f = int(fuzziness)

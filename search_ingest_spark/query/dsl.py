@@ -574,14 +574,6 @@ def _agg_percentiles(searcher, text, body):
         for p in body.get("percents", [25, 50, 75, 95, 99])])
 
 
-def _dispatch(fn_name):
-    def call(searcher, text, body):
-        from search_ingest_spark.query import aggs as _aggs
-        fn = getattr(_aggs, fn_name)
-        return fn(searcher, text, **body)
-    return call
-
-
 def _agg_range(searcher, text, body):
     from search_ingest_spark.query import aggs as _aggs
     ranges = [(r.get("key") or f"r{i}", r.get("from"), r.get("to"))

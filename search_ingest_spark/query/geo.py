@@ -2,11 +2,11 @@
 
 The reference maps geo_point fields into ES (schemas.cr:211-222), whose
 index serves geo_distance / bounding-box filter queries.  Here those
-are filter-context predicates over the doc_attrs table, riding the same
-per-shard cogroup path as every other filtered query (query/wand.py
-Searcher.topk attr_where) — the filter is evaluated JVM-side by
-Catalyst on a partition-pruned, predicate-pushed attrs scan, then masks
-WAND candidates per shard.  df/avgdl stay whole-index, exactly like ES.
+are filter-context predicates over the doc_attrs table (query/wand.py
+Searcher.topk attr_where): Catalyst evaluates the filter JVM-side in
+one job over a partition-pruned, predicate-pushed attrs scan, and the
+qualifying doc ids mask the WAND candidates per shard, like every other
+filtered query.  df/avgdl stay whole-index, exactly like ES.
 
 Float caveat: haversine uses transcendental functions, so engine-to-
 engine (JVM Math vs libm) results can differ in the last ulp — a filter

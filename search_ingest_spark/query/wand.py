@@ -3,15 +3,19 @@
 The fast path the reference gets from Elasticsearch/Lucene (WAND /
 block-max WAND over its inverted index) re-expressed for Spark's
 execution model.  An unfiltered top-k (`topk`, the dictionary-expansion
-queries, `topk_quantized`) is ES's coordinating node plus one fan-out:
+queries, `topk_quantized`, and their filtered forms) is ES's
+coordinating node plus one fan-out:
 
-1. Query planning on the driver, with the code the Spark-free reader
-   uses (query/reader.py): analyze the query with the SAME analyzer as
-   index time, look up term ids + document frequencies in `term_dict`
-   (a pruned pyarrow read of a tiny table) and compute each idf once;
-   then read only the block METADATA of those terms' postings and order
-   the shards by their score upper bound (reader.plan_exact /
-   plan_quantized).  No posting bytes are read here.
+1. Query planning on the driver, with the Spark-free reader's code
+   (query/reader.py LocalSearcher, opened over the same snapshot):
+   analyze the query with the SAME analyzer as index time, look up term
+   ids + document frequencies in `term_dict` (a pruned pyarrow read of
+   a tiny table; the dictionary expansions filter the same read) and
+   compute each idf once; then read only the block METADATA of those
+   terms' postings and order the shards by their score upper bound
+   (reader.plan_exact / plan_quantized).  A filtered query adds each
+   shard's allowed doc ids to the plan (LocalSearcher.plan_topk).  No
+   posting bytes are read here.
 2. ONE Spark job of one stage: `spark.range(n).mapInArrow` runs
    n = min(defaultParallelism, shards in the plan) tasks; task i scores
    the stride-split chunk i of the UB-ordered plan with the serving
@@ -24,9 +28,8 @@ queries, `topk_quantized`) is ES's coordinating node plus one fan-out:
    (score desc, doc_id asc)) and returns the ranked rows as a
    LocalRelation, whose collect starts no further job.
 
-Filtered top-k (attr_filter / attr_where), topk_many and the
-full-matching-set queries still run as Spark plans over a pruned
-postings scan (a cogroup with doc_attrs, or _scored_partitions).
+topk_many and the full-matching-set queries still run as Spark plans
+over a pruned postings scan (_scored_partitions).
 
 The scorer kernel is exact block-max pruning, NumPy-vectorized:
 segments of doc-id space are processed in DESCENDING upper-bound order,
@@ -172,47 +175,45 @@ def regexp_prune_prefix(p: str) -> str:
 
 
 class Searcher:
-    """Per-index query handle; caches the tiny planning tables."""
+    """Per-index query handle; plans with a LocalSearcher over the same
+    catalog."""
 
     def __init__(self, spark: SparkSession, cat: Catalog) -> None:
+        from search_ingest_spark.query.reader import LocalSearcher
+
         self.spark = spark
         self.cat = cat
-        st = cat.read(ib.STATS_TABLE).first()
-        self.n_docs = int(st["n_docs"])
-        self.avgdl = float(st["avgdl"])
-        self.mode = st["analyzer"]
+        # stats, the term-sorted dictionary and the pinned postings
+        # snapshot (postings_q's on first use) are read through pyarrow,
+        # so opening a Searcher starts no Spark job (the ES analog: the
+        # coordinating node's in-memory term lookup)
+        self._local = LocalSearcher(cat)
+        self.n_docs = self._local.n_docs
+        self.avgdl = self._local.avgdl
+        self.mode = self._local.mode
         self.postings = cat.read(ib.POSTINGS_TABLE)
         self.term_dict = cat.read(ib.TERM_DICT_TABLE)
-        # planning reads the (tiny, term-sorted) dictionary via pyarrow —
-        # row groups pruned by term min/max stats, NO Spark job per query
-        # (the ES analog: the coordinating node's in-memory term lookup)
-        import pyarrow.dataset as ds
 
-        self._dict_ds = ds.dataset(cat.data_path(ib.TERM_DICT_TABLE))
-        # the unfiltered top-k reads postings through pyarrow, on the
-        # driver (block metadata) and in its Spark tasks (blocks): the
-        # snapshot path is pinned here, postings_q's on first use
-        self._postings_path = cat.data_path(ib.POSTINGS_TABLE)
-        self._postings_ds = ds.dataset(self._postings_path,
-                                       partitioning="hive")
-        self._pq: tuple | None = None
-
-    # -- planning -----------------------------------------------------------
+    # -- planning: LocalSearcher's ------------------------------------------
     def plan(self, query_text: str) -> dict[int, float]:
         """term_id → idf for the query's terms present in the dictionary."""
-        import pyarrow.compute as pc
+        return self._local.plan(query_text)
 
-        terms = sorted(set(analyze_query(query_text, mode=self.mode)))
-        if not terms:
-            return {}
-        tbl = self._dict_ds.to_table(
-            columns=["term_id", "df"], filter=pc.field("term").isin(terms)
-        )
-        n = self.n_docs
-        return {
-            int(tid): float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
-            for tid, df in zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist())
-        }
+    def plan_prefix(self, prefix: str,
+                    max_expansions: int = 50) -> dict[int, float]:
+        return self._local.plan_prefix(prefix, max_expansions)
+
+    def plan_wildcard(self, pattern: str,
+                      max_expansions: int = 50) -> dict[int, float]:
+        return self._local.plan_wildcard(pattern, max_expansions)
+
+    def plan_regexp(self, pattern: str,
+                    max_expansions: int = 50) -> dict[int, float]:
+        return self._local.plan_regexp(pattern, max_expansions)
+
+    def plan_fuzzy(self, query_text: str,
+                   fuzziness: int = 1) -> dict[int, float]:
+        return self._local.plan_fuzzy(query_text, fuzziness)
 
     # -- execution ----------------------------------------------------------
     def topk(self, query_text: str, k: int = 10, *, round_to: int | None = None,
@@ -225,29 +226,33 @@ class Searcher:
              required_text: str | None = None) -> DataFrame:
         """(doc_id, score, rank) — rank-identical to the brute-force oracle.
 
-        Without a filter this is the module docstring's fan-out: the
-        driver plans the shards from the postings' block metadata, ONE
-        Spark job of one stage scores shard chunks with
-        reader._serve_worker, and the driver merges the candidates
-        (reader.merge_candidates) into a LocalRelation — the result is
-        bitwise identical to LocalSearcher.topk, which runs the same
-        three pieces without Spark.
+        This is the module docstring's fan-out: the driver plans the
+        shards from the postings' block metadata, ONE Spark job of one
+        stage scores shard chunks with reader._serve_worker, and the
+        driver merges the candidates (reader.merge_candidates) into a
+        LocalRelation — the result is bitwise identical to
+        LocalSearcher.topk, which runs the same three pieces without
+        Spark.
 
         `match_all=True` = conjunctive (AND) query.  A query with terms
         missing from the dictionary can match nothing under AND.
 
-        `attr_filter` = {attr: value} equality filters over the
-        doc_attrs table (built with attr_cols=[...]) — ES bool-query
-        filter context on the INDEX path, planned in Spark instead: per
-        shard, the pruned postings scan cogroups with the shard's
-        qualifying doc ids (the Lucene filter-bitset analog; the attrs
-        scan is partition-pruned and predicate-pushed), the scorer
-        masks candidates before truncation, then TakeOrdered + rank.
-        df/avgdl are untouched, exactly like ES.
+        `attr_filter` = the shared filter spec over the doc_attrs table
+        (built with attr_cols=[...]; term / terms / range / exists /
+        nested, query/filters.py) — ES bool-query filter context.  The
+        driver reads the qualifying (shard, doc_id) rows with pyarrow,
+        the predicate pushed into the parquet scan, and plans each shard
+        with its allowed doc ids (LocalSearcher.plan_topk); the kernel
+        masks candidates before truncation.  No extra Spark job; a
+        filter that matches no doc starts none at all.  df/avgdl are
+        untouched, exactly like ES.
 
         `attr_where` = an arbitrary Column predicate over doc_attrs
         (range filters, geo distance via query.geo.haversine_km, ...) —
-        the general filter context; rides the same cogroup path.
+        the general filter context.  Catalyst evaluates it in ONE job
+        that collects the qualifying (shard, doc_id) rows, which then
+        feed the same plan; a doc must pass both filters when both are
+        given.
 
         `exclude_text` = ES bool `must_not` terms: any doc containing
         ANY of its analyzed terms is excluded.  The excluded terms'
@@ -280,70 +285,25 @@ class Searcher:
         if resolved is None:
             return ranked_frame(self.spark)
         idf, excluded, required_tids = resolved
-        if not attr_filter and attr_where is None:
-            tids, plan = reader.plan_exact(self._postings_ds, idf,
-                                           self.avgdl, excluded)
-            return self._fan_out(self._postings_path, tids, plan,
-                                 reader.kernel_params(
-                                     idf, k, avgdl=self.avgdl,
-                                     match_all=match_all,
-                                     round_to=round_to, excluded=excluded,
-                                     min_match=min_match,
-                                     after=search_after,
-                                     required_tids=required_tids))
-        out_schema = "doc_id long, score double"
-        scan_ids = sorted(set(idf) | excluded)
-        pruned = self.postings.where(F.col("term_id").isin([int(t) for t in scan_ids]))
-        attrs = self.cat.read(ib.DOC_ATTRS_TABLE)
-        if attr_filter:
-            # scalar = ES `term`; list = ES `terms`; dict with
-            # gte/gt/lte/lt = ES `range` (query/filters.py — one
-            # spec compiled identically for both query paths)
-            attrs = attrs.where(filters.spark_cond(attr_filter))
+        where_rows = None
         if attr_where is not None:
-            attrs = attrs.where(attr_where)
-        avgdl, _idf = self.avgdl, idf
-
-        def co_scorer(post_pdf: pd.DataFrame,
-                      allow_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(post_pdf) == 0 or len(allow_pdf) == 0:
-                return pd.DataFrame({
-                    "doc_id": pd.array([], dtype="int64"),
-                    "score": pd.array([], dtype="float64"),
-                })
-            banned = None
-            if excluded:
-                post_pdf, banned = split_banned(post_pdf, excluded)
-            allowed = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
-            return shard_topk(post_pdf, idf=_idf, k=k, avgdl=avgdl,
-                              match_all=match_all, round_to=round_to,
-                              allowed=allowed, min_match=min_match,
-                              banned=banned, after=search_after,
-                              required_tids=required_tids)
-
-        topk = (
-            pruned.groupBy("shard")
-            .cogroup(attrs.select("shard", "doc_id").groupBy("shard"))
-            .applyInPandas(trimmed(co_scorer), schema=out_schema)
-        )
-        if round_to is not None:
-            topk = topk.withColumn("score", F.round("score", round_to))
-        if search_after is not None:
-            s_a, d_a = search_after
-            topk = topk.where(
-                (F.col("score") < F.lit(float(s_a)))
-                | ((F.col("score") == F.lit(float(s_a)))
-                   & (F.col("doc_id") > F.lit(int(d_a))))
-            )
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        from search_ingest_spark.ranking import ranked_desc
-
-        return ranked_desc(topk, "score", "doc_id")
+            where_rows = (self.cat.read(ib.DOC_ATTRS_TABLE).where(attr_where)
+                          .select("shard", "doc_id").toArrow())
+        tids, plan = self._local.plan_topk(idf, excluded, attr_filter,
+                                           where_rows)
+        return self._fan_out(self._local._postings_path, tids, plan,
+                             reader.kernel_params(
+                                 idf, k, avgdl=self.avgdl,
+                                 match_all=match_all, round_to=round_to,
+                                 excluded=excluded, min_match=min_match,
+                                 after=search_after,
+                                 required_tids=required_tids))
 
     def _fan_out(self, path: str, tids: list[int], plan: list,
                  params: dict) -> DataFrame:
-        """Score a UB-descending shard `plan` in ONE Spark job of one
-        stage and merge on the driver: task i runs reader._serve_worker
+        """Score a UB-descending shard `plan` (with each shard's allowed
+        doc ids when filtered) in ONE Spark job of one stage and merge on
+        the driver: task i runs reader._serve_worker
         in-process over the stride-split chunk i of the plan (each chunk
         stays UB-descending and UB-balanced), against the pinned
         snapshot `path`, from θ0 = -inf — each task's θ gates only its
@@ -423,8 +383,8 @@ class Searcher:
 
         if not idf:
             return ranked_frame(self.spark)
-        tids, plan = reader.plan_exact(self._postings_ds, idf, self.avgdl)
-        return self._fan_out(self._postings_path, tids, plan,
+        tids, plan = self._local.plan_topk(idf)
+        return self._fan_out(self._local._postings_path, tids, plan,
                              reader.kernel_params(idf, k, avgdl=self.avgdl,
                                                   round_to=round_to))
 
@@ -441,43 +401,9 @@ class Searcher:
         expanded), fed to the unchanged OR kernel; like every
         dictionary-expansion query each expanded term scores with its
         own idf.  (doc_id, score, rank)."""
-        tokens = analyze_query(text, mode=self.mode)
-        if not tokens:
-            return ranked_frame(self.spark)
-        idf: dict[int, float] = {}
-        if len(tokens) > 1:
-            idf.update(self.plan(" ".join(tokens[:-1])))
-        idf.update(self.plan_prefix(tokens[-1], max_expansions))
-        return self._topk_expanded(idf, int(k), round_to)
-
-    # -- fuzzy execution ------------------------------------------------------
-    def plan_fuzzy(self, query_text: str, fuzziness: int = 1) -> dict[int, float]:
-        """term_id → idf over every dictionary term within `fuzziness`
-        Levenshtein edits of any analyzed query term (ES match
-        `fuzziness`).  ES walks an FST automaton; the analog here is a
-        Catalyst filter over the (tiny, term-sorted) dictionary with a
-        length pre-filter so the edit-distance evaluation touches only
-        plausible rows.  Each expanded term scores with its OWN idf —
-        a documented divergence from ES's blended-df rewrite, chosen so
-        scores stay an exact function of corpus statistics."""
-        terms = sorted(set(analyze_query(query_text, mode=self.mode)))
-        if not terms:
-            return {}
-        f = int(fuzziness)
-        cond = None
-        for t in terms:
-            e = (
-                (F.abs(F.length("term") - F.lit(len(t))) <= f)
-                & (F.levenshtein(F.col("term"), F.lit(t)) <= f)
-            )
-            cond = e if cond is None else cond | e
-        rows = self.term_dict.where(cond).select("term_id", "df").collect()
-        n = self.n_docs
-        return {
-            int(r["term_id"]):
-                float(np.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5)))
-            for r in rows
-        }
+        return self._topk_expanded(
+            self._local.plan_match_bool_prefix(text, max_expansions),
+            int(k), round_to)
 
     def topk_fuzzy(
         self, query_text: str, k: int = 10, *, fuzziness: int = 1,
@@ -487,36 +413,6 @@ class Searcher:
         term set — the expansion plan feeds the unchanged WAND kernel."""
         return self._topk_expanded(
             self.plan_fuzzy(query_text, fuzziness), k, round_to)
-
-    # -- prefix execution -----------------------------------------------------
-    def plan_prefix(
-        self, prefix: str, max_expansions: int = 50
-    ) -> dict[int, float]:
-        """term_id → idf for every dictionary term starting with
-        `prefix` (ES `prefix` query expansion).  ES rewrites to at most
-        `max_expansions` terms; the cap here is deterministic —
-        highest-df first (the terms that can actually match documents),
-        term asc on ties.  The term-sorted dictionary layout makes the
-        scan a pruned [prefix, prefix+1) range predicate, the same
-        trick the completion suggester uses (reader.suggest)."""
-        p = prefix.lower()
-        if not p:
-            return {}
-        hi = p[:-1] + chr(ord(p[-1]) + 1)
-        rows = (
-            self.term_dict
-            .where((F.col("term") >= p) & (F.col("term") < hi))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(int(max_expansions))
-            .select("term_id", "df")
-            .collect()
-        )
-        n = self.n_docs
-        return {
-            int(r["term_id"]):
-                float(np.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5)))
-            for r in rows
-        }
 
     def topk_prefix(
         self, prefix: str, k: int = 10, *, max_expansions: int = 50,
@@ -528,46 +424,6 @@ class Searcher:
         divergence from ES's blended-df rewrite as topk_fuzzy)."""
         return self._topk_expanded(self.plan_prefix(prefix, max_expansions),
                                    k, round_to)
-
-    # -- wildcard execution ---------------------------------------------------
-    def plan_wildcard(
-        self, pattern: str, max_expansions: int = 50
-    ) -> dict[int, float]:
-        """term_id → idf for dictionary terms matching an ES `wildcard`
-        pattern (`*` = any run, `?` = exactly one char), capped at
-        `max_expansions` by (df desc, term asc) — the same deterministic
-        rewrite as plan_prefix.  The literal prefix before the first
-        wildcard narrows the term-sorted dictionary scan to a pruned
-        range (ES walks a compiled automaton over its FST; the analog
-        here is range + regex over the tiny dictionary table)."""
-        p = pattern.lower()
-        if not p:
-            return {}
-        cut = min((p.index(c) for c in "*?" if c in p), default=len(p))
-        scan = self.term_dict
-        if cut > 0:
-            lo = p[:cut]
-            hi = lo[:-1] + chr(ord(lo[-1]) + 1)
-            scan = scan.where((F.col("term") >= lo) & (F.col("term") < hi))
-        import re as _re
-
-        rx = "^" + "".join(
-            ".*" if ch == "*" else "." if ch == "?" else _re.escape(ch)
-            for ch in p
-        ) + "$"
-        rows = (
-            scan.where(F.col("term").rlike(rx))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(int(max_expansions))
-            .select("term_id", "df")
-            .collect()
-        )
-        n = self.n_docs
-        return {
-            int(r["term_id"]):
-                float(np.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5)))
-            for r in rows
-        }
 
     def topk_wildcard(
         self, pattern: str, k: int = 10, *, max_expansions: int = 50,
@@ -1139,12 +995,14 @@ class Searcher:
         are computed once there with the kernel's arithmetic."""
         import pyarrow.compute as pc
 
+        from search_ingest_spark.query.reader import bm25_idf
+
         terms = sorted(set(analyze_query(query_text, mode=self.mode)))
         out_schema = ("term string, tf int, dl int, df long, "
                       "idf double, partial double")
         if not terms:
             return local_frame(self.spark, out_schema)
-        tbl = self._dict_ds.to_table(
+        tbl = self._local._dict.to_table(
             columns=["term_id", "term", "df"],
             filter=pc.field("term").isin(terms))
         meta = {int(t): (s, int(d)) for t, s, d in zip(
@@ -1178,7 +1036,7 @@ class Searcher:
         for r in sorted(hit_rows, key=lambda r: meta[r["term_id"]][0]):
             term, df = meta[r["term_id"]]
             tf, dl = int(r["tf"]), int(r["dl"])
-            idf = float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
+            idf = bm25_idf(n, df)
             partial = idf * (
                 (tf * (K1 + 1.0))
                 / (tf + K1 * (1.0 - B + B * dl / avgdl)))
@@ -1217,49 +1075,15 @@ class Searcher:
         )
         return ranked_desc(hits, "score", "doc_id")
 
-    # -- regexp execution -----------------------------------------------------
-    def plan_regexp(
-        self, pattern: str, max_expansions: int = 50
-    ) -> dict[int, float]:
-        """term_id → idf for dictionary terms fully matching an ES
-        `regexp` pattern (always anchored to the WHOLE term, like ES),
-        capped at `max_expansions` by (df desc, term asc).  The SAFE
-        literal prefix (regexp_prune_prefix: no '|' anywhere, last char
-        dropped under a trailing quantifier) narrows the term-sorted
-        dictionary scan to a pruned range — the same FST-walk analog as
-        plan_wildcard.  Patterns should stay in the
-        portable subset (classes, alternation, quantifiers) shared by
-        Java regex / Python re / RE2."""
-        p = pattern.lower()
-        if not p:
-            return {}
-        scan = self.term_dict
-        lo = regexp_prune_prefix(p)
-        if lo:
-            hi = lo[:-1] + chr(ord(lo[-1]) + 1)
-            scan = scan.where((F.col("term") >= lo) & (F.col("term") < hi))
-        rows = (
-            scan.where(F.col("term").rlike("^(?:" + p + ")$"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(int(max_expansions))
-            .select("term_id", "df")
-            .collect()
-        )
-        n = self.n_docs
-        return {
-            int(r["term_id"]):
-                float(np.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5)))
-            for r in rows
-        }
-
     def topk_regexp(
         self, pattern: str, k: int = 10, *, max_expansions: int = 50,
         round_to: int | None = None,
     ) -> DataFrame:
-        """ES regexp query: the expansion plan feeds the unchanged WAND
-        kernel as an OR query, each expanded term scoring with its own
-        idf (same documented divergence from ES's blended-df rewrite as
-        topk_prefix/topk_wildcard/topk_fuzzy)."""
+        """ES regexp query: the expansion plan (LocalSearcher.plan_regexp,
+        one regex engine for both front-ends: Python `re.fullmatch`)
+        feeds the unchanged WAND kernel as an OR query, each expanded
+        term scoring with its own idf (same documented divergence from
+        ES's blended-df rewrite as topk_prefix/topk_wildcard/topk_fuzzy)."""
         return self._topk_expanded(
             self.plan_regexp(pattern, max_expansions), k, round_to)
 
@@ -1283,15 +1107,10 @@ class Searcher:
         idf = self.plan(query_text)
         if not idf:
             return ranked_frame(self.spark)
-        if self._pq is None:
-            import pyarrow.dataset as ds
-
-            path = self.cat.data_path(ib.POSTINGS_Q_TABLE)
-            self._pq = (path, ds.dataset(path, partitioning="hive"))
-        path, pq = self._pq
-        tids, plan = reader.plan_quantized(pq, idf)
-        return self._fan_out(path, tids, plan, reader.kernel_params(
-            idf, k, quantized=True, round_to=round_to))
+        tids, plan = reader.plan_quantized(self._local._postings_q(), idf)
+        return self._fan_out(self._local._pq_path, tids, plan,
+                             reader.kernel_params(idf, k, quantized=True,
+                                                  round_to=round_to))
 
     # -- batch execution ------------------------------------------------------
     def topk_many(
@@ -1835,7 +1654,3 @@ def shard_all_scores(
     if with_nmatch:
         out["n_matched"] = nmatch.astype(np.int32)
     return out
-
-
-def iter_empty(_: Iterator) -> Iterator[pd.DataFrame]:  # pragma: no cover
-    yield from ()

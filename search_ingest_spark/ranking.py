@@ -24,8 +24,8 @@ per comparison at execution.  The sort is now expressed through
   struct(-score, id, payload) ASCENDING: -score asc == score desc,
   then id asc.  Negation maps every 0.0 to -0.0 uniformly, so
   within-frame ordering is unaffected.
-- neither numeric → the original lambda comparator (not reached by any
-  current caller; kept as the general fallback).
+- neither numeric → TypeError: no caller ranks such a frame, and the
+  lambda comparator that once served it was dropped.
 
 Tie depth: every caller ranks frames whose id column is unique
 (doc_id / vec_id / term / composed `_mid`), so the payload fields
@@ -61,36 +61,6 @@ def _explode_ranked(
     )
 
 
-def _lambda_sorted(
-    df: DataFrame, key_col: str, id_col: str, extras: list[str],
-    descending: bool,
-) -> Column:
-    """General fallback: explicit comparator lambda (original
-    formulation) — only taken when neither key nor id is numeric."""
-
-    def cmp(lft: Column, rgt: Column) -> Column:
-        first = (
-            F.when(lft[key_col] > rgt[key_col],
-                   F.lit(-1 if descending else 1))
-            .when(lft[key_col] < rgt[key_col],
-                  F.lit(1 if descending else -1))
-        )
-        return (
-            first
-            .when(lft[id_col] < rgt[id_col], F.lit(-1))
-            .when(lft[id_col] > rgt[id_col], F.lit(1))
-            .otherwise(F.lit(0))
-        )
-
-    return F.array_sort(
-        F.collect_list(
-            F.struct(F.col(id_col), F.col(key_col),
-                     *[F.col(c) for c in extras])
-        ),
-        cmp,
-    )
-
-
 def ranked_desc(
     df: DataFrame, score_col: str, id_col: str, *, rank_col: str = "rank",
     extra_cols: list[str] | None = None,
@@ -103,7 +73,8 @@ def ranked_desc(
     unchanged (they never participate in the ordering — every caller's
     id column is unique, see module doc).
 
-    Preconditions, not checked here: scores are finite and ids are
+    Raises TypeError when neither column is numeric.  Preconditions,
+    not checked here: scores are finite and ids are
     unique.  A NaN score sorts above every number (Spark's NaN order)
     instead of tying; duplicate ids let the extra columns decide ties.
     The top-k front-ends check their scores before ranking
@@ -139,7 +110,10 @@ def ranked_desc(
             asc=True,
         )
     else:
-        arr = _lambda_sorted(df, score_col, id_col, extras, descending=True)
+        raise TypeError(
+            f"ranked_desc needs a numeric score or id column; "
+            f"{score_col!r} is {df.schema[score_col].dataType.simpleString()}"
+            f" and {id_col!r} is {df.schema[id_col].dataType.simpleString()}")
     return _explode_ranked(arr, id_col, score_col, extras, rank_col, df)
 
 

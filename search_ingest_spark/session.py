@@ -71,27 +71,16 @@ def drop_zip_subpackage_importers() -> None:
 
 
 def trimmed(fn):
-    """Wrap a Python-UDF task function so that it ends by trimming its
+    """Wrap a Python-UDF iterator kernel (mapInArrow / mapInPandas: a
+    function of one iterator) so that its task ends by trimming the
     worker's zipimporter cache (drop_zip_subpackage_importers), which
-    takes ~200 ms off the next task that worker runs.  `fn` is either
-    an iterator kernel (mapInArrow / mapInPandas: a generator function
-    of one iterator) or a cogroup applyInPandas function (left, right)."""
-    import inspect
-
-    if inspect.isgeneratorfunction(fn):
-        def task(it):
-            try:
-                yield from fn(it)
-            finally:
-                drop_zip_subpackage_importers()
-        return task
-
-    def cogroup(left, right):
+    takes ~200 ms off the next task that worker runs."""
+    def task(it):
         try:
-            return fn(left, right)
+            yield from fn(it)
         finally:
             drop_zip_subpackage_importers()
-    return cogroup
+    return task
 
 
 def get_spark(

@@ -85,6 +85,13 @@ class TestDegenerate:
         out = Searcher(spark, cat).topk("doc", 5).collect()
         assert len(out) == 1 and out[0]["rank"] == 1
 
+    def test_ranked_desc_rejects_non_numeric_score_and_id(self, spark):
+        from search_ingest_spark.ranking import ranked_desc
+
+        df = spark.createDataFrame([("a", "x")], "label string, key string")
+        with pytest.raises(TypeError, match="'label' is string.*'key' is string"):
+            ranked_desc(df, "label", "key")
+
 
 class TestResumeLayoutStability:
     def test_resume_reuses_shard_layout_despite_new_default(

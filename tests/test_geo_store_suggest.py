@@ -2,7 +2,7 @@
 completion suggester (VERDICT r02 items 5-7).
 
 geo_distance / geo_bounding_box are filter-context predicates over
-doc_attrs riding the filtered-WAND cogroup path (reference maps
+doc_attrs whose qualifying doc ids mask the WAND fan-out (reference maps
 geo_point into ES, schemas.cr:211-222); doc_store is the ES
 stored-fields analog (elastic.cr:224-233) served Spark-free; suggest is
 a prefix scan over the term-sorted dictionary."""

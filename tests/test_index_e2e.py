@@ -284,8 +284,9 @@ class TestShardKernel:
 
 
 class TestFilteredWand:
-    """Filter-context queries on the index path: per-shard cogroup with
-    the doc_attrs table; must be bitwise-identical to the brute-force
+    """Filter-context queries on the index path: each shard is scored
+    with its allowed doc ids from the doc_attrs table; must be
+    bitwise-identical to the brute-force
     path with the same candidate filter (whole-index stats)."""
 
     @pytest.fixture(scope="class")

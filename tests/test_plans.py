@@ -5,8 +5,9 @@ designed for: filter pushdown into parquet scans, column pruning,
 broadcast of small sides, TakeOrderedAndProject for top-k (no global
 sort), zero exchanges in the doc-local tokenization stage.  These
 assertions fail if a refactor silently degrades the plan at 100x data.
-The unfiltered top-k runs its Spark job inside the call, so its
-contract is one job of one stage per call and a LocalRelation result.
+Every top-k runs its Spark job inside the call, so its contract is one
+job of one stage per call and a LocalRelation result; an attr_where
+predicate adds one job that reads the qualifying doc ids.
 """
 
 from __future__ import annotations
@@ -112,13 +113,61 @@ class TestQueryPlans:
         assert jobs_and_stages(spark, lambda: call(s)) == (1, 1)
 
     def test_expanded_topk_is_one_job_one_stage(self, spark, doc_index):
-        # the prefix expansion itself is a dictionary query of its own;
-        # the scoring of the expanded terms is the one-job fan-out
+        # the dictionary expansion is a pyarrow read on the driver; the
+        # scoring of the expanded terms is the one-job fan-out
         s = Searcher(spark, doc_index)
-        idf = s.plan_prefix("da", 5)
-        assert idf
-        assert jobs_and_stages(
-            spark, lambda: s._topk_expanded(idf, 10, 4)) == (1, 1)
+        calls = {
+            "prefix": lambda: s.topk_prefix("da", 10, max_expansions=5,
+                                            round_to=4),
+            "wildcard": lambda: s.topk_wildcard("d?t*", 10, round_to=4),
+            "regexp": lambda: s.topk_regexp("dat[ae]|tabl.", 10,
+                                            round_to=4),
+            "fuzzy": lambda: s.topk_fuzzy("dats", 10, fuzziness=1,
+                                          round_to=4),
+            "match_bool_prefix": lambda: s.match_bool_prefix_topk(
+                "table da", 10, round_to=4),
+        }
+        for name, call in calls.items():
+            assert call().collect(), name  # warm the Python workers
+            assert jobs_and_stages(spark, call) == (1, 1), name
+
+    def test_attr_filter_topk_is_one_job_one_stage(self, spark, doc_index):
+        # the allowed doc ids are a pyarrow read of doc_attrs on the
+        # driver: the filtered top-k is the same one-job fan-out
+        s = Searcher(spark, doc_index)
+
+        def call():
+            return s.topk("data table", 10, round_to=4,
+                          attr_filter={"lang": ["fr", "es"]})
+
+        assert call().collect()  # warm the Python workers
+        assert jobs_and_stages(spark, call) == (1, 1)
+        assert optimized_of(call()).startswith("LocalRelation")
+
+    def test_attr_where_topk_adds_at_most_one_job(self, spark, doc_index):
+        # Catalyst evaluates the Column predicate in one job that reads
+        # the qualifying (shard, doc_id) rows; they mask the fan-out
+        s = Searcher(spark, doc_index)
+
+        def call():
+            return s.topk("data table", 10, round_to=4,
+                          attr_where=F.col("lang") == "fr")
+
+        assert call().collect()
+        jobs, _ = jobs_and_stages(spark, call)
+        assert jobs <= 2
+        assert optimized_of(call()).startswith("LocalRelation")
+
+    def test_filter_matching_no_doc_starts_no_job(self, spark, doc_index):
+        s = Searcher(spark, doc_index)
+        assert jobs_and_stages(spark, lambda: s.topk(
+            "data table", 10, attr_filter={"lang": "zz"})) == (0, 0)
+
+    def test_opening_searcher_starts_no_job(self, spark, doc_index):
+        # stats and the dictionary are read through pyarrow
+        first = next_job_id(spark)
+        Searcher(spark, doc_index)
+        assert next_job_id(spark) == first
 
     def test_empty_topk_starts_no_job(self, spark, doc_index):
         s = Searcher(spark, doc_index)
@@ -142,11 +191,6 @@ class TestQueryPlans:
         assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,fr)]" in plan, plan
         # source column never leaves the reader
         assert "ReadSchema: struct<doc_id:bigint,lang:string>" in plan, plan
-
-    def test_filtered_wand_cogroups_postings_with_attrs(self, spark, doc_index):
-        s = Searcher(spark, doc_index)
-        plan = plan_of(s.topk("data table", 10, attr_filter={"lang": "fr"}))
-        assert "FlatMapCoGroupsInPandas" in plan  # postings ⋈ filter mask
 
     def test_range_filter_pushes_bounds_into_attrs_scan(self, spark, doc_index):
         # the shared filter spec (query/filters.py) must reach parquet:

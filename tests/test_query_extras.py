@@ -202,7 +202,7 @@ class TestMustNot:
         assert out == []
 
     def test_compose_with_attr_filter(self, spark, built):
-        # must_not + filter context on the cogroup path
+        # must_not + filter context on the filtered fan-out
         got = [tuple(r) for r in Searcher(spark, built).topk(
             "table hash fast", 10, round_to=4,
             attr_filter={"lang": "es"}, exclude_text="customer",

@@ -2,13 +2,17 @@
 shards, one Spark job scores stride-split shard chunks with the serving
 worker, the driver merges (query/wand.py module doc).
 
+Filtered queries ride the same fan-out: the plan carries each shard's
+allowed doc ids.
+
 Two layouts stress the two ends of the chunking: more shards than the
 session's defaultParallelism (every task scores several shards, so the
 per-task θ gates batches and the merge sees several candidate sets per
 task) and a single shard (one task, one chunk).  Every query kind the
 fan-out serves is checked against an oracle that never touches the
-index — bm25_brute_force over the raw documents, or the DuckDB oracles
-for the must clause, prefix expansion and quantized scoring — not only
+index — bm25_brute_force over the raw documents (over the filtered
+documents for a filter), or the DuckDB oracles for the must clause,
+the dictionary expansions and quantized scoring — not only
 against LocalSearcher, which shares the fan-out's planner, kernel and
 merge.
 """
@@ -19,6 +23,7 @@ import duckdb
 import numpy as np
 import pytest
 from conftest import SF_SMOKE
+from pyspark.sql import functions as F
 
 from search_ingest_spark.catalog import Catalog
 from search_ingest_spark.index import build as ib
@@ -33,9 +38,10 @@ LAYOUTS = {"many_shards": 16, "one_shard": 10**6}
 def searcher(request, spark, documents_smoke, tmp_path_factory):
     cat = Catalog(spark, str(tmp_path_factory.mktemp(request.param)))
     ib.build_index(spark, documents_smoke, cat, mode="simple",
-                   docs_per_shard=LAYOUTS[request.param], quantize=True)
+                   docs_per_shard=LAYOUTS[request.param], quantize=True,
+                   attr_cols=["lang", "n_chars"])
     s = Searcher(spark, cat)
-    _, plan = reader.plan_exact(s._postings_ds, s.plan(Q), s.avgdl)
+    _, plan = s._local.plan_topk(s.plan(Q))
     if request.param == "many_shards":
         assert len(plan) > spark.sparkContext.defaultParallelism
     else:
@@ -49,6 +55,13 @@ def _brute(docs, text, **kw):
     return [tuple(r) for r in bm25.bm25_brute_force(
         docs, text, 10, mode="simple", deterministic_sum=True,
         driver_idf=True, **kw).collect()]
+
+
+def _allowed(docs, cond):
+    return docs.where(cond).select("doc_id")
+
+
+LANGS = ["es", "fr", "en"]
 
 
 def _duck(sql: str):
@@ -93,8 +106,39 @@ CASES = {
                                           round_to=4),
                lambda d, c: _duck(bm25.prefix_oracle_sql(
                    "da", k=10, max_expansions=5))),
+    "wildcard": (lambda s, c: s.topk_wildcard("d?t*", 10, max_expansions=8,
+                                              round_to=4),
+                 lambda d, c: _duck(bm25.wildcard_oracle_sql(
+                     "d?t*", k=10, max_expansions=8))),
+    "regexp": (lambda s, c: s.topk_regexp("data|spark", 10, max_expansions=8,
+                                          round_to=4),
+               lambda d, c: _duck(bm25.regexp_oracle_sql(
+                   "data|spark", k=10, max_expansions=8))),
+    "fuzzy": (lambda s, c: s.topk_fuzzy("spork data", 10, fuzziness=1,
+                                        round_to=4),
+              lambda d, c: _duck(bm25.fuzzy_oracle_sql(
+                  "spork data", k=10, fuzziness=1))),
+    "match_bool_prefix": (
+        lambda s, c: s.match_bool_prefix_topk("spark qu", 10,
+                                              max_expansions=8, round_to=4),
+        lambda d, c: _duck(bm25.match_bool_prefix_oracle_sql(
+            "spark qu", k=10, max_expansions=8))),
     "quantized": (lambda s, c: s.topk_quantized(Q, 10, round_to=4),
                   lambda d, c: _duck(bm25.bm25_quantized_oracle_sql(Q, k=10))),
+    "attr_filter": (lambda s, c: s.topk(Q, 10, attr_filter={"lang": LANGS}),
+                    lambda d, c: _brute(d, Q, candidate_filter=_allowed(
+                        d, F.col("lang").isin(LANGS)))),
+    "attr_filter_exclude_after": (
+        lambda s, c: s.topk(Q, 10, round_to=4, attr_filter={"lang": LANGS},
+                            exclude_text="customer", search_after=c),
+        lambda d, c: _brute(d, Q, round_to=4, exclude_text="customer",
+                            search_after=c, candidate_filter=_allowed(
+                                d, F.col("lang").isin(LANGS)))),
+    "attr_filter_and_where": (
+        lambda s, c: s.topk(Q, 10, round_to=4, attr_filter={"lang": LANGS},
+                            attr_where=F.col("n_chars") > 100),
+        lambda d, c: _brute(d, Q, round_to=4, candidate_filter=_allowed(
+            d, F.col("lang").isin(LANGS) & (F.col("n_chars") > 100)))),
 }
 
 
