@@ -38,6 +38,8 @@ Engine-specific notes (each mirrors the backing operator's contract):
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -737,11 +739,13 @@ _AGG_COMPILERS = {
 # ---------------------------------------------------------------------------
 
 # driver-build fence + per-table graph cache for the no-knn_index path
-# (see _knn_hits) — keyed by the vector table's input-file set; small
-# FIFO because serving tiers hold a handful of vector tables at most
+# (see _knn_hits) — keyed by the vector frame's analyzed plan and its
+# input-file set; small FIFO because serving tiers hold a handful of
+# vector tables at most, guarded by a lock for concurrent requests
 _KNN_BUILD_MAX_ROWS = 100_000
 _KNN_GRAPH_CACHE: dict = {}
 _KNN_GRAPH_CACHE_MAX = 4
+_KNN_GRAPH_LOCK = threading.Lock()
 
 
 def _knn_hits(knn: dict, emb, knn_index, *, default_k: int) -> DataFrame:
@@ -774,11 +778,15 @@ def _knn_hits(knn: dict, emb, knn_index, *, default_k: int) -> DataFrame:
         #    (one job, no separate count); above it the request must
         #    name a prebuilt graph (ops/hnsw.load_graph / knn_index=)
         #    — corpus-scale ANN routes through IVF-PQ / persisted HNSW;
-        # 2. the built graph is cached per input-file set (catalog
-        #    snapshots get fresh paths per generation, so staleness is
-        #    structural), not rebuilt per request.
-        key = tuple(sorted(emb.inputFiles())) or None
-        cached = _KNN_GRAPH_CACHE.get(key) if key else None
+        # 2. the built graph is cached per (analyzed plan, input-file
+        #    set), not rebuilt per request: catalog snapshots get fresh
+        #    paths per generation, and the plan's semantic hash tells a
+        #    filtered or projected frame from the table it reads.
+        files = tuple(sorted(emb.inputFiles()))
+        key = ((emb._jdf.queryExecution().analyzed().semanticHash(), files)
+               if files else None)
+        with _KNN_GRAPH_LOCK:
+            cached = _KNN_GRAPH_CACHE.get(key) if key else None
         if cached is None:
             rows = (emb.select("vec_id", "embedding")
                     .orderBy("vec_id").limit(_KNN_BUILD_MAX_ROWS + 1)
@@ -798,9 +806,10 @@ def _knn_hits(knn: dict, emb, knn_index, *, default_k: int) -> DataFrame:
             Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
             cached = (Xn, _hnsw.build(Xn))
             if key:
-                if len(_KNN_GRAPH_CACHE) >= _KNN_GRAPH_CACHE_MAX:
-                    _KNN_GRAPH_CACHE.pop(next(iter(_KNN_GRAPH_CACHE)))
-                _KNN_GRAPH_CACHE[key] = cached
+                with _KNN_GRAPH_LOCK:
+                    if len(_KNN_GRAPH_CACHE) >= _KNN_GRAPH_CACHE_MAX:
+                        _KNN_GRAPH_CACHE.pop(next(iter(_KNN_GRAPH_CACHE)))
+                    _KNN_GRAPH_CACHE[key] = cached
         knn_index = cached
     Xn, graph = knn_index
     q = np.asarray([float(v) for v in knn["query_vector"]],

@@ -4,7 +4,8 @@ The fast path the reference gets from Elasticsearch/Lucene (WAND /
 block-max WAND over its inverted index) re-expressed for Spark's
 execution model.  An unfiltered top-k (`topk`, the dictionary-expansion
 queries, `topk_quantized`, and their filtered forms) is ES's
-coordinating node plus one fan-out:
+coordinating node, which scores a small index itself and fans out only
+when that pays:
 
 1. Query planning on the driver, with the Spark-free reader's code
    (query/reader.py LocalSearcher, opened over the same snapshot):
@@ -16,17 +17,21 @@ coordinating node plus one fan-out:
    (reader.plan_exact / plan_quantized).  A filtered query adds each
    shard's allowed doc ids to the plan (LocalSearcher.plan_topk).  No
    posting bytes are read here.
-2. ONE Spark job of one stage: `spark.range(n).mapInArrow` runs
-   n = min(defaultParallelism, shards in the plan) tasks; task i scores
-   the stride-split chunk i of the UB-ordered plan with the serving
-   worker (reader._serve_worker: pyarrow reads of the query terms'
-   blocks from the snapshot pinned when the Searcher opened it, θ-gated
-   batches of the kernel below) and returns its candidates.  Postings
-   never enter the JVM and nothing is shuffled.
+2. LocalSearcher's executor (reader.LocalSearcher._run_plan) scores
+   the plan over the snapshot pinned when the Searcher opened it.  A
+   plan under _PAR_BOOT + _PAR_MIN_SHARDS shards runs wholly on the
+   driver (θ-gated batches of the kernel below, no Spark job).  A
+   larger one scores its best-UB boot batch on the driver to fix θ and
+   places the shards still live by their postings (Σ n_docs of their
+   blocks, LocalSearcher._placement): the driver, the serving process
+   pool, or — when the wider fan-out saves more than a job costs — ONE
+   Spark job of one stage whose mapInArrow tasks run the serving worker
+   over stride-split chunks from θ0 = the boot θ (reader._spark_scan).
 3. The driver merges the candidates (about k per kernel call) exactly
    (reader.merge_candidates: HALF_UP rounding, the search_after cursor,
    (score desc, doc_id asc)) and returns the ranked rows as a
-   LocalRelation, whose collect starts no further job.
+   LocalRelation, whose collect starts no further job.  Results are
+   bitwise identical in every placement and to LocalSearcher's.
 
 topk_many and the full-matching-set queries still run as Spark plans
 over a pruned postings scan (_scored_partitions).
@@ -226,13 +231,13 @@ class Searcher:
              required_text: str | None = None) -> DataFrame:
         """(doc_id, score, rank) — rank-identical to the brute-force oracle.
 
-        This is the module docstring's fan-out: the driver plans the
-        shards from the postings' block metadata, ONE Spark job of one
-        stage scores shard chunks with reader._serve_worker, and the
-        driver merges the candidates (reader.merge_candidates) into a
-        LocalRelation — the result is bitwise identical to
-        LocalSearcher.topk, which runs the same three pieces without
-        Spark.
+        The module docstring's executor: the driver plans the shards
+        from the postings' block metadata and runs LocalSearcher's
+        executor over the plan (_fan_out) — on the driver, unless the
+        plan's residue is large enough that one Spark job over shard
+        chunks pays for itself — and returns the merged rows as a
+        LocalRelation, bitwise identical to LocalSearcher.topk.  k = 0
+        returns the empty result; a negative k raises ValueError.
 
         `match_all=True` = conjunctive (AND) query.  A query with terms
         missing from the dictionary can match nothing under AND.
@@ -285,60 +290,30 @@ class Searcher:
         if resolved is None:
             return ranked_frame(self.spark)
         idf, excluded, required_tids = resolved
+        params = reader.kernel_params(
+            idf, k, avgdl=self.avgdl, match_all=match_all,
+            round_to=round_to, excluded=excluded, min_match=min_match,
+            after=search_after, required_tids=required_tids)
         where_rows = None
-        if attr_where is not None:
+        if attr_where is not None and params["k"]:
             where_rows = (self.cat.read(ib.DOC_ATTRS_TABLE).where(attr_where)
                           .select("shard", "doc_id").toArrow())
         tids, plan = self._local.plan_topk(idf, excluded, attr_filter,
                                            where_rows)
-        return self._fan_out(self._local._postings_path, tids, plan,
-                             reader.kernel_params(
-                                 idf, k, avgdl=self.avgdl,
-                                 match_all=match_all, round_to=round_to,
-                                 excluded=excluded, min_match=min_match,
-                                 after=search_after,
-                                 required_tids=required_tids))
+        return self._fan_out(self._local._postings,
+                             self._local._postings_path, tids, plan, params)
 
-    def _fan_out(self, path: str, tids: list[int], plan: list,
+    def _fan_out(self, dataset, path: str, tids: list[int], plan: list,
                  params: dict) -> DataFrame:
-        """Score a UB-descending shard `plan` (with each shard's allowed
-        doc ids when filtered) in ONE Spark job of one stage and merge on
-        the driver: task i runs reader._serve_worker
-        in-process over the stride-split chunk i of the plan (each chunk
-        stays UB-descending and UB-balanced), against the pinned
-        snapshot `path`, from θ0 = -inf — each task's θ gates only its
-        own batches, so its candidates hold its chunk's exact top k.
-        The driver merges all candidates with the serving path's exact
-        tail and returns the ranked rows as a LocalRelation.  Each task
-        ends by trimming its worker's zipimporter cache
-        (session.trimmed), which takes ~200 ms off the next task that
-        worker runs."""
-        from search_ingest_spark.query import reader
-
-        if not plan:
-            return ranked_frame(self.spark)
-        n = min(self.spark.sparkContext.defaultParallelism, len(plan))
-        chunks = [plan[j::n] for j in range(n)]
-        batch = reader.LocalSearcher._PAR_BATCH
-
-        def score(batches):
-            import pyarrow as pa
-
-            from search_ingest_spark.query.reader import _serve_worker
-
-            for b in batches:
-                for i in b.column(0).to_pylist():
-                    for fr in _serve_worker((path, chunks[i], tids,
-                                             params, -np.inf, batch)):
-                        yield pa.RecordBatch.from_pandas(
-                            fr, preserve_index=False)
-
-        got = (self.spark.range(n, numPartitions=n)
-               .mapInArrow(trimmed(score), "doc_id long, score double")
-               .toArrow())
-        doc_ids, scores = reader.merge_candidates(
-            got["doc_id"].to_numpy(), got["score"].to_numpy(), params)
-        return ranked_frame(self.spark, doc_ids, scores)
+        """Run a UB-descending shard `plan` (with each shard's allowed
+        doc ids when filtered) through LocalSearcher._run_plan with this
+        Searcher's session, which lets _placement send the residue after
+        the boot batch to ONE Spark job of one stage when its postings
+        pay for that; return the merged rows as a LocalRelation."""
+        rows = self._local._run_plan(dataset, path, tids, plan, params,
+                                     spark=self.spark)
+        return ranked_frame(self.spark, [d for d, _, _ in rows],
+                            [s for _, s, _ in rows])
 
     # -- composed bool query --------------------------------------------------
     def bool_topk(self, *, must: str | None = None,
@@ -378,13 +353,14 @@ class Searcher:
                        round_to: int | None) -> DataFrame:
         """Shared tail for dictionary-expansion queries (prefix /
         wildcard / regexp / fuzzy OR-rewrites): the expanded idf map
-        runs as a plain OR top-k through the one-job fan-out."""
+        runs as a plain OR top-k through _fan_out."""
         from search_ingest_spark.query import reader
 
         if not idf:
             return ranked_frame(self.spark)
         tids, plan = self._local.plan_topk(idf)
-        return self._fan_out(self._local._postings_path, tids, plan,
+        return self._fan_out(self._local._postings,
+                             self._local._postings_path, tids, plan,
                              reader.kernel_params(idf, k, avgdl=self.avgdl,
                                                   round_to=round_to))
 
@@ -1107,8 +1083,9 @@ class Searcher:
         idf = self.plan(query_text)
         if not idf:
             return ranked_frame(self.spark)
-        tids, plan = reader.plan_quantized(self._local._postings_q(), idf)
-        return self._fan_out(self._local._pq_path, tids, plan,
+        pq = self._local._postings_q()
+        tids, plan = reader.plan_quantized(pq, idf)
+        return self._fan_out(pq, self._local._pq_path, tids, plan,
                              reader.kernel_params(idf, k, quantized=True,
                                                   round_to=round_to))
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import time
 
 import pytest
+from conftest import force_placement
 
 from search_ingest_spark.catalog import Catalog
 from search_ingest_spark.index import build as ib
@@ -45,7 +46,11 @@ def test_unknown_query_absent_not_crashing(searcher):
     assert out.count() == 0
 
 
-def test_batch_amortizes_scheduling(searcher):
+def test_batch_amortizes_scheduling(searcher, monkeypatch):
+    # the singles take the Spark placement, one job each: that is the
+    # cost one batch job amortizes (a plan this small is otherwise
+    # scored on the driver with no job at all)
+    force_placement(monkeypatch, "spark")
     # warm
     searcher.topk_many({0: "data"}, 5).collect()
     t0 = time.time()

@@ -291,6 +291,21 @@ class TestTopLevel:
         want = searcher.topk(Q, 20, round_to=4).where(F.col("rank") > 10)
         _same(got, want)
 
+    def test_size_zero_returns_no_hits_and_runs_no_job(self, spark,
+                                                       searcher):
+        # ES's aggregations-only request: "size": 0 asks for no hits
+        from conftest import jobs_and_stages
+
+        req = {"query": {"match": {"text": Q}}, "size": 0}
+        assert jobs_and_stages(spark, lambda: _hits(searcher, req)) == (0, 0)
+        hits = _hits(searcher, req)
+        assert hits.collect() == []
+        assert hits.columns == ["doc_id", "score", "rank"]
+        out = dsl.search(searcher, dict(req, aggs={"langs": {
+            "terms": {"field": "lang"}}}))
+        assert out["hits"].collect() == []
+        assert out["aggs"]["langs"].collect()
+
     def test_search_after(self, searcher):
         page1 = searcher.topk(Q, 10, round_to=4).collect()
         cursor = [float(page1[-1]["score"]), int(page1[-1]["doc_id"])]

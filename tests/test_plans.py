@@ -5,14 +5,16 @@ designed for: filter pushdown into parquet scans, column pruning,
 broadcast of small sides, TakeOrderedAndProject for top-k (no global
 sort), zero exchanges in the doc-local tokenization stage.  These
 assertions fail if a refactor silently degrades the plan at 100x data.
-Every top-k runs its Spark job inside the call, so its contract is one
-job of one stage per call and a LocalRelation result; an attr_where
+Every top-k returns a LocalRelation.  A plan as small as these
+fixtures' is scored on the driver (no Spark job); with the Spark
+placement forced, the call runs one job of one stage.  An attr_where
 predicate adds one job that reads the qualifying doc ids.
 """
 
 from __future__ import annotations
 
 import pytest
+from conftest import force_placement, jobs_and_stages, run_counted
 from pyspark.sql import functions as F
 
 from search_ingest_spark.catalog import Catalog
@@ -36,23 +38,6 @@ def doc_index(spark, documents_smoke, tmp_path_factory):
                    with_positions=True, attr_cols=["lang", "source"],
                    quantize=True)
     return cat
-
-
-def next_job_id(spark) -> int:
-    j = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-    return j if isinstance(j, int) else j.get()
-
-
-def jobs_and_stages(spark, run) -> tuple[int, int]:
-    """(Spark jobs, stages) started while `run()` builds AND collects a
-    frame, counted by job id and the status tracker."""
-    first = next_job_id(spark)
-    run().collect()
-    last = next_job_id(spark)
-    tracker = spark.sparkContext.statusTracker()
-    stages = sum(len(tracker.getJobInfo(j).stageIds)
-                 for j in range(first, last))
-    return last - first, stages
 
 
 class TestScanPlans:
@@ -107,14 +92,19 @@ class TestQueryPlans:
                          search_after=(0.5, 3), round_to=4),
         lambda s: s.topk_quantized("data table", 10),
     ], ids=["topk", "match_all", "required_after", "topk_quantized"])
-    def test_topk_is_one_job_one_stage(self, spark, doc_index, call):
+    def test_topk_is_one_job_one_stage(self, spark, doc_index, call,
+                                       monkeypatch):
         s = Searcher(spark, doc_index)
+        assert jobs_and_stages(spark, lambda: call(s)) == (0, 0)
+        force_placement(monkeypatch, "spark")
         call(s).collect()  # warm the Python workers
         assert jobs_and_stages(spark, lambda: call(s)) == (1, 1)
 
-    def test_expanded_topk_is_one_job_one_stage(self, spark, doc_index):
+    def test_expanded_topk_is_one_job_one_stage(self, spark, doc_index,
+                                                monkeypatch):
         # the dictionary expansion is a pyarrow read on the driver; the
-        # scoring of the expanded terms is the one-job fan-out
+        # expanded terms score like any top-k: on the driver for a plan
+        # this small, in one job with the Spark placement forced
         s = Searcher(spark, doc_index)
         calls = {
             "prefix": lambda: s.topk_prefix("da", 10, max_expansions=5,
@@ -128,18 +118,24 @@ class TestQueryPlans:
                 "table da", 10, round_to=4),
         }
         for name, call in calls.items():
+            assert jobs_and_stages(spark, call) == (0, 0), name
+        force_placement(monkeypatch, "spark")
+        for name, call in calls.items():
             assert call().collect(), name  # warm the Python workers
             assert jobs_and_stages(spark, call) == (1, 1), name
 
-    def test_attr_filter_topk_is_one_job_one_stage(self, spark, doc_index):
+    def test_attr_filter_topk_is_one_job_one_stage(self, spark, doc_index,
+                                                   monkeypatch):
         # the allowed doc ids are a pyarrow read of doc_attrs on the
-        # driver: the filtered top-k is the same one-job fan-out
+        # driver: the filtered top-k places like an unfiltered one
         s = Searcher(spark, doc_index)
 
         def call():
             return s.topk("data table", 10, round_to=4,
                           attr_filter={"lang": ["fr", "es"]})
 
+        assert jobs_and_stages(spark, call) == (0, 0)
+        force_placement(monkeypatch, "spark")
         assert call().collect()  # warm the Python workers
         assert jobs_and_stages(spark, call) == (1, 1)
         assert optimized_of(call()).startswith("LocalRelation")
@@ -165,15 +161,27 @@ class TestQueryPlans:
 
     def test_opening_searcher_starts_no_job(self, spark, doc_index):
         # stats and the dictionary are read through pyarrow
-        first = next_job_id(spark)
-        Searcher(spark, doc_index)
-        assert next_job_id(spark) == first
+        _, jobs = run_counted(spark, lambda: Searcher(spark, doc_index))
+        assert jobs == []
 
     def test_empty_topk_starts_no_job(self, spark, doc_index):
         s = Searcher(spark, doc_index)
         assert jobs_and_stages(spark, lambda: s.topk("zzzqqq", 10)) == (0, 0)
         assert jobs_and_stages(
             spark, lambda: s.topk("data", 10, min_match=3)) == (0, 0)
+
+    @pytest.mark.parametrize("placement", ["driver", "spark"])
+    def test_k_zero_starts_no_job(self, spark, doc_index, monkeypatch,
+                                  placement):
+        force_placement(monkeypatch, placement)
+        s = Searcher(spark, doc_index)
+        for call in (lambda: s.topk("data table", 0),
+                     lambda: s.topk_quantized("data table", 0),
+                     lambda: s.topk_prefix("da", 0),
+                     lambda: s.topk("data table", 0,
+                                    attr_where=F.col("lang") == "fr")):
+            assert jobs_and_stages(spark, call) == (0, 0)
+            assert call().collect() == []
 
     def test_positions_scan_pushes_term_filter(self, spark, doc_index):
         # a phrase query must read only its terms' row groups

@@ -156,3 +156,23 @@ class TestKnnBuildFence:
                             emb, None, default_k=2).collect()
         assert next(iter(_dsl._KNN_GRAPH_CACHE.values())) is cached_graph
         assert [tuple(r) for r in r1] == [tuple(r) for r in r2]
+
+    def test_filtered_frame_gets_its_own_graph(self, spark, monkeypatch):
+        # a frame filtered from the cached table reads the same files;
+        # its graph must not be the whole table's
+        from conftest import SF_CORRECT
+
+        from search_ingest_spark.query import dsl as _dsl
+
+        emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
+        sub = emb.where("vec_id < 250")
+        knn = {"query_vector": [1.0] + [0.0] * 63, "k": 5,
+               "num_candidates": 5}
+        monkeypatch.setattr(_dsl, "_KNN_GRAPH_CACHE", {})
+        _dsl._knn_hits(knn, emb, None, default_k=5).collect()
+        after_full = _dsl._knn_hits(knn, sub, None, default_k=5).collect()
+        assert len(_dsl._KNN_GRAPH_CACHE) == 2
+        monkeypatch.setattr(_dsl, "_KNN_GRAPH_CACHE", {})
+        fresh = _dsl._knn_hits(knn, sub, None, default_k=5).collect()
+        assert len(fresh) == 5
+        assert [tuple(r) for r in after_full] == [tuple(r) for r in fresh]

@@ -1,20 +1,22 @@
-"""Oracle fence for the unfiltered Spark top-k: the driver plans the
-shards, one Spark job scores stride-split shard chunks with the serving
-worker, the driver merges (query/wand.py module doc).
+"""Oracle fence for Searcher's top-k in each of the executor's three
+placements (query/wand.py module doc): the driver plans the shards;
+the driver, the serving process pool, or one Spark job scores them
+with the serving worker; the driver merges.  Every case runs once per
+placement, forced by the executor's constants (conftest
+force_placement), and the three results must be bitwise equal.
 
-Filtered queries ride the same fan-out: the plan carries each shard's
+Filtered queries ride the same executor: the plan carries each shard's
 allowed doc ids.
 
 Two layouts stress the two ends of the chunking: more shards than the
-session's defaultParallelism (every task scores several shards, so the
-per-task θ gates batches and the merge sees several candidate sets per
-task) and a single shard (one task, one chunk).  Every query kind the
-fan-out serves is checked against an oracle that never touches the
-index — bm25_brute_force over the raw documents (over the filtered
-documents for a filter), or the DuckDB oracles for the must clause,
-the dictionary expansions and quantized scoring — not only
-against LocalSearcher, which shares the fan-out's planner, kernel and
-merge.
+session's defaultParallelism (every task or worker scores several
+shards, so its θ gates batches and the merge sees several candidate
+sets per chunk) and a single shard (one chunk).  Every query kind is
+checked against an oracle that never touches the index —
+bm25_brute_force over the raw documents (over the filtered documents
+for a filter), or the DuckDB oracles for the must clause, the
+dictionary expansions and quantized scoring — not only against
+LocalSearcher, which shares the planner, kernel and merge.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from __future__ import annotations
 import duckdb
 import numpy as np
 import pytest
-from conftest import SF_SMOKE
+from conftest import PLACEMENTS, SF_SMOKE, force_placement, run_counted
 from pyspark.sql import functions as F
 
 from search_ingest_spark.catalog import Catalog
@@ -143,13 +145,29 @@ CASES = {
 
 
 @pytest.mark.parametrize("case", list(CASES))
-def test_fan_out_matches_oracle(searcher, documents_smoke, cursor, case):
+def test_fan_out_matches_oracle(spark, searcher, documents_smoke, cursor,
+                                case, monkeypatch):
     run, oracle = CASES[case]
-    got = _rows(run(searcher, cursor))
     want = [(int(d), float(s), int(r)) for d, s, r in
             oracle(documents_smoke, cursor)]
-    assert got == want
-    assert len(got) > 0
+    assert len(want) > 0
+    real_pool = reader._get_serve_pool
+    pools = []
+    monkeypatch.setattr(reader, "_get_serve_pool",
+                        lambda: pools.append(1) or real_pool())
+    jobs = {}
+    for placement in PLACEMENTS:
+        with monkeypatch.context() as m:
+            force_placement(m, placement)
+            got, ids = run_counted(spark,
+                                   lambda: _rows(run(searcher, cursor)))
+        assert got == want, placement
+        jobs[placement] = len(ids)
+        assert bool(pools) == (placement == "pool"), placement
+        pools.clear()
+    assert not reader._SERVE_POOL_BROKEN
+    # the Spark placement is the only one that runs a scoring job
+    assert jobs["spark"] == jobs["driver"] + 1 == jobs["pool"] + 1
 
 
 class TestMergeCandidates:
