@@ -253,7 +253,7 @@ def query_phase(tmp: str, scaling: dict | None) -> dict:
     queries["wand_topk_p50"] = round(statistics.median(lat), 4)
     queries["wand_topk_p95"] = round(lat[int(len(lat) * 0.95) - 1], 4)
 
-    # batch path: the whole query set in one job
+    # batch path: the whole query set in one result frame
     t0 = time.time()
     s.topk_many(dict(enumerate(WAND_QUERIES)), 10).collect()
     queries["wand_batch_5q"] = round(time.time() - t0, 3)

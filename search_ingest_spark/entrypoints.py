@@ -1961,7 +1961,7 @@ _BATCH_QUERIES = {0: "data", 1: "spark query data", 2: "customer window batch"}
 
 
 def _q_wand_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole query set in one Spark job (Searcher.topk_many)."""
+    """Whole query set in one result frame (Searcher.topk_many)."""
     return _searcher(spark, sf_dir).topk_many(_BATCH_QUERIES, 10, round_to=4)
 
 

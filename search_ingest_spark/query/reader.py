@@ -7,13 +7,13 @@ self-describing layout (hive-partitioned by shard, sorted by term
 within files, block metadata in columns), any parquet reader can serve
 it.  This module is that reader (`LocalSearcher`): pyarrow datasets +
 the NumPy block-max kernel (wand.shard_topk).  It also holds the one
-top-k executor both front-ends run (`LocalSearcher._run_plan`): driver
-planning (`plan*`, `resolve_terms`, `plan_exact`, `plan_quantized`), a
-serial boot batch that fixes θ, the shard-chunk worker (`_serve_worker`)
-for the residue — on the driver, the process pool, or (`wand.Searcher`
-only, when its postings pay for a job: `_placement`) one Spark job
-(`_spark_scan`) — and the exact merge (`merge_candidates`).  Every
-placement returns bitwise-identical results — asserted in tests.
+top-k executor both front-ends run (`LocalSearcher._run_plan`), so
+`wand.Searcher` starts no Spark job to score a top-k: driver planning
+(`plan*`, `resolve_terms`, `plan_exact`, `plan_quantized`), a serial
+scan of the best-UB shards that fixes θ, the shard-chunk worker
+(`_serve_worker`) for a corpus-scale residue on the process pool, and
+the exact merge (`merge_candidates`).  Both front-ends and both
+placements return bitwise-identical results — asserted in tests.
 
 Serving-path scale shape (VERDICT r02 weak item #2): queries run in
 three stages —
@@ -274,17 +274,17 @@ def _scan_plan(dataset, tfilter, plan, kernel, k: int, guard: float,
             break  # UB-descending: all remaining prune too
         tbl = dataset.to_table(
             filter=tfilter
-            & pc.field("shard").isin([int(p[0]) for p in live])
+            & pc.field("shard").isin([int(s) for s, _, _ in live])
         ).to_pandas()
         groups = {int(s): g for s, g in tbl.groupby("shard", sort=False)}
         th = theta()
         chunk = [c for c in live if c[1] >= th and int(c[0]) in groups]
         if not chunk:
             continue
-        parts = [groups[int(c[0])] for c in chunk]
+        parts = [groups[int(s)] for s, _, _ in chunk]
         g = parts[0] if len(parts) == 1 else pd.concat(
             parts, ignore_index=True)
-        extras = [c[2] for c in chunk]
+        extras = [e for _, _, e in chunk]
         if extras[0] is None:
             extra = None
         else:
@@ -318,37 +318,6 @@ def _serve_worker(args):
     frames, _ = _scan_plan(dset, tfilter, chunk, kernel, params["k"],
                            guard, theta0, batch)
     return frames
-
-
-def _spark_scan(spark, path: str, live: list, tids: list[int],
-                params: dict, theta0: float, batch: int) -> list:
-    """The Spark placement of a residue: the candidate frames of ONE job
-    of one stage, n = min(defaultParallelism, shards) mapInArrow tasks,
-    task i running _serve_worker over stride chunk i of `live` from θ0
-    = the boot θ.  Postings never enter the JVM; nothing is shuffled.
-    Each task ends by trimming its worker's zipimporter cache
-    (session.trimmed): ~200 ms off the next task that worker runs."""
-    from search_ingest_spark.session import trimmed
-
-    n = min(spark.sparkContext.defaultParallelism, len(live))
-    chunks = [live[j::n] for j in range(n)]
-
-    def score(batches):
-        import pyarrow as pa
-
-        from search_ingest_spark.query.reader import _serve_worker
-
-        for b in batches:
-            for i in b.column(0).to_pylist():
-                for fr in _serve_worker((path, chunks[i], tids, params,
-                                         theta0, batch)):
-                    yield pa.RecordBatch.from_pandas(
-                        fr, preserve_index=False)
-
-    got = (spark.range(n, numPartitions=n)
-           .mapInArrow(trimmed(score), "doc_id long, score double")
-           .toArrow())
-    return [got.to_pandas()] if got.num_rows else []
 
 
 # ---------------------------------------------------------------------------
@@ -389,31 +358,26 @@ def resolve_terms(searcher, query_text: str, *, match_all: bool = False,
     return idf, excluded, required_tids
 
 
-def _shard_plan(meta: pd.DataFrame, ub: np.ndarray) -> list:
-    """[(shard, bound, None, postings)], best shard first: the bound is
-    Σ_terms max block UB (≥ any doc's score in the shard), the postings
-    Σ n_docs over the shard's blocks (the work its scan may decode)."""
-    shard = meta["shard"].to_numpy(np.int64)
-    ids, at = np.unique(shard, return_inverse=True)
-    postings = dict(zip(ids.tolist(), np.bincount(
-        at, weights=meta["n_docs"].to_numpy(np.float64)).astype(int).tolist()))
-    order = (
-        pd.DataFrame({"shard": shard,
+def _shard_order(meta: pd.DataFrame, ub: np.ndarray) -> pd.Series:
+    """shard → Σ_terms max block UB (≥ any doc's score in the shard),
+    best shard first."""
+    return (
+        pd.DataFrame({"shard": meta["shard"].to_numpy(np.int64),
                       "term_id": meta["term_id"].to_numpy(np.int64),
                       "ub": ub})
         .groupby(["shard", "term_id"])["ub"].max()
         .groupby("shard").sum()
         .sort_values(ascending=False)
     )
-    return [(int(s), float(u), None, postings[s]) for s, u in order.items()]
 
 
 def plan_exact(postings, idf: dict[int, float], avgdl: float,
                excluded: frozenset[int] = frozenset(),
                ) -> tuple[list[int], list]:
     """Stages 1-2 for exact BM25 over the `postings` pyarrow dataset:
-    (term ids to scan, plan).  The plan is _shard_plan's, UB-descending;
-    only the block metadata is read, never posting bytes.  Excluded-only terms bound at 0 — they never ADD score, but
+    (term ids to scan, plan).  The plan is [(shard, ub, None)],
+    UB-descending; only the block metadata is read, never posting
+    bytes.  Excluded-only terms bound at 0 — they never ADD score, but
     their rows must reach the scans to build the ban sets."""
     tids = sorted({int(t) for t in idf} | excluded)
     meta = postings.to_table(
@@ -429,7 +393,8 @@ def plan_exact(postings, idf: dict[int, float], avgdl: float,
         * ((mtf * (K1 + 1.0)) / (mtf + K1 * (1.0 - B + B * mdl / avgdl)))
         * (1.0 + 1e-9)
     )
-    return tids, _shard_plan(meta, ub)
+    return tids, [(int(s), float(u), None)
+                  for s, u in _shard_order(meta, ub).items()]
 
 
 def plan_quantized(postings_q, idf: dict[int, float],
@@ -441,7 +406,7 @@ def plan_quantized(postings_q, idf: dict[int, float],
 
     tids = [int(t) for t in idf]
     meta = postings_q.to_table(
-        columns=["term_id", "shard", "n_docs", "max_impact"],
+        columns=["term_id", "shard", "max_impact"],
         filter=pc.field("term_id").isin(tids),
     ).to_pandas()
     if len(meta) == 0:
@@ -451,7 +416,8 @@ def plan_quantized(postings_q, idf: dict[int, float],
         * ((meta["max_impact"].to_numpy(np.float64) + 0.5) / IMPACT_SCALE)
         * (1.0 + 1e-9)
     )
-    return tids, _shard_plan(meta, ub)
+    return tids, [(int(s), float(u), None)
+                  for s, u in _shard_order(meta, ub).items()]
 
 
 def kernel_params(idf: dict[int, float], k: int, *, avgdl: float = 1.0,
@@ -462,8 +428,8 @@ def kernel_params(idf: dict[int, float], k: int, *, avgdl: float = 1.0,
                   after: tuple[float, int] | None = None,
                   required_tids: frozenset[int] | None = None) -> dict:
     """The picklable parameter dict a kernel is rebuilt from
-    (_kernel_from_params) in the driver, a pool process or a Spark
-    task; merge_candidates reads k / round_to / after from it.  A
+    (_kernel_from_params) in the driver or a pool process;
+    merge_candidates reads k / round_to / after from it.  A
     negative `k` raises ValueError; k = 0 plans an empty result
     (LocalSearcher._run_plan returns before any scan)."""
     k = int(k)
@@ -677,8 +643,7 @@ class LocalSearcher:
             int(s): np.sort(g["doc_id"].to_numpy(np.int64))
             for s, g in rows.to_pandas().groupby("shard", sort=True)
         }
-        return tids, [(s, u, allowed[s], n) for s, u, _, n in plan
-                      if s in allowed]
+        return tids, [(s, u, allowed[s]) for s, u, _ in plan if s in allowed]
 
     def topk(self, query_text: str, k: int = 10, *,
              match_all: bool = False,
@@ -850,11 +815,6 @@ class LocalSearcher:
     # serially — a spawn-pool round trip costs ~10 ms; only corpus-scale
     # residues are worth shipping out
     _PAR_MIN_SHARDS = 24
-    # Spark placement cost model (_placement): driver kernel seconds
-    # per posting, and the wall of a no-op job over the worker, both
-    # measured on a 4-vCPU VM at local[3] (CHANGES.md)
-    _POSTING_S = 3.4e-7
-    _SPARK_JOB_S = 0.12
     # serial boot batch when a parallel tail is possible: just enough
     # best-UB shards to establish a near-final θ (the plan is UB-sorted)
     _PAR_BOOT = 24
@@ -863,44 +823,29 @@ class LocalSearcher:
     # shards per worker batch inside a parallel chunk
     _PAR_BATCH = 32
 
-    def _placement(self, live: list, spark) -> str:
-        """Where a live residue of P postings runs: "spark" (given a
-        session) when _POSTING_S·P·(1/w_local − 1/w_spark) > _SPARK_JOB_S,
-        else "pool" for a corpus-scale residue, else "driver".  w_local =
-        pool processes (1 without the pool), w_spark = defaultParallelism."""
-        pool = not _SERVE_POOL_BROKEN and len(live) >= self._PAR_MIN_SHARDS
-        if spark is not None:
-            w_local = _serve_procs() if pool else 1
-            w_spark = spark.sparkContext.defaultParallelism
-            saved = (self._POSTING_S * sum(p[3] for p in live)
-                     * (1.0 / w_local - 1.0 / w_spark))
-            if saved > self._SPARK_JOB_S:
-                return "spark"
-        return "pool" if pool else "driver"
-
     def _run_plan(self, dataset, path: str, tids: list[int], plan: list,
-                  params: dict, spark=None) -> list[tuple[int, float, int]]:
-        """Stage-3 executor of both front-ends: θ-gated batched reads +
-        merged kernels (_scan_plan), a parallel placement for the
-        residue, then the shared exact merge.
+                  params: dict) -> list[tuple[int, float, int]]:
+        """Stage-3 executor of both front-ends (wand.Searcher too):
+        θ-gated batched reads + merged kernels (_scan_plan), with
+        cross-shard PROCESS parallelism for corpus-scale plans, then the
+        shared exact merge.
 
-        `plan` = [(shard, static_ub, extra, postings)], UB-descending:
-        re-gate each batch on the risen global θ (posting BYTES of
-        pruned shards are never read; the first fully-pruned batch
-        proves every later one prunes too), bulk-read survivors in one
+        `plan` = [(shard, static_ub, extra)], UB-descending: re-gate
+        each batch on the risen global θ (posting BYTES of pruned
+        shards are never read; the first fully-pruned batch proves
+        every later one prunes too), bulk-read survivors in one
         to_table, and score them as ONE merged kernel call under the
         shared θ.  `extra` (per-shard allowed-doc filters) is
         homogeneous across a query's plan and shards partition the
         doc-id space, so merged chunks concatenate their sorted
         allowed arrays losslessly.
 
-        A plan too small for a parallel tail runs whole on the driver;
-        else the best-UB boot batch fixes θ and the shards still live
-        run where _placement puts them — the driver, the worker pool
-        (each worker re-opens the pinned snapshot `path`) or one Spark
-        job (_spark_scan) — from θ0 = the boot θ.  Candidates merge
-        losslessly: every placement is bitwise identical.  k is clamped
-        to n_docs; k = 0 returns [] before any read."""
+        After the boot batch fixes θ, surviving shards of a large plan
+        fan out to the persistent worker pool, each worker re-opening
+        the pinned snapshot `path` (see module comment); candidates
+        merge losslessly, so results stay bitwise identical to the
+        serial scan.  k is clamped to n_docs; k = 0 returns [] before
+        any read."""
         global _SERVE_POOL, _SERVE_POOL_BROKEN
         k = min(params["k"], self.n_docs)
         if not plan or k == 0:
@@ -910,48 +855,51 @@ class LocalSearcher:
         guard = 10.0 ** -round_to if round_to is not None else 0.0
         tfilter = pc.field("term_id").isin(tids)
         kernel = _kernel_from_params(params)
-        par_possible = ((spark is not None or not _SERVE_POOL_BROKEN)
+        par_possible = (not _SERVE_POOL_BROKEN
                         and len(plan) >= self._PAR_BOOT + self._PAR_MIN_SHARDS)
         n_boot = self._PAR_BOOT if par_possible else self._SHARDS_PER_BATCH
-        frames, heap = _scan_plan(dataset, tfilter, plan[:n_boot], kernel, k,
+        boot = plan[:n_boot]
+        frames, heap = _scan_plan(dataset, tfilter, boot, kernel, k,
                                   guard, -np.inf, self._SHARDS_PER_BATCH)
-        th = heap[0][0] - guard if len(heap) >= k else -np.inf
-        live = [p for p in plan[n_boot:] if p[1] >= th]
-        where = self._placement(live, spark) if live else None
-        if where == "spark":
-            frames.extend(_spark_scan(spark, path, live, tids, params, th,
-                                      self._PAR_BATCH))
-        elif where == "pool":
-            try:
-                pool = _get_serve_pool()
-                n = max(1, min(_SERVE_POOL_SIZE,
-                               (len(live) + self._PAR_CHUNK_TARGET - 1)
-                               // self._PAR_CHUNK_TARGET))
-                # stride split keeps each chunk UB-descending and
-                # UB-balanced across workers
-                futs = [pool.submit(
-                    _serve_worker,
-                    (path, live[j::n], tids, params, th, self._PAR_BATCH))
-                    for j in range(n)]
-                # gather fully BEFORE merging: a partial merge +
-                # serial fallback would duplicate candidates
-                got = [f.result() for f in futs]
-                for fr in got:
-                    frames.extend(fr)
-            except Exception:
-                # e.g. BrokenProcessPool after a worker died — disable
-                # the pool for this process and serve serially; results
-                # are identical either way
-                _SERVE_POOL_BROKEN = True
+        rest = plan[n_boot:]
+        if rest:
+            th = heap[0][0] - guard if len(heap) >= k else -np.inf
+            live = [p for p in rest if p[1] >= th]
+            done = False
+            if not _SERVE_POOL_BROKEN and len(live) >= self._PAR_MIN_SHARDS:
                 try:
-                    _SERVE_POOL.shutdown(wait=False, cancel_futures=True)
+                    pool = _get_serve_pool()
+                    n = max(1, min(_SERVE_POOL_SIZE,
+                                   (len(live) + self._PAR_CHUNK_TARGET - 1)
+                                   // self._PAR_CHUNK_TARGET))
+                    # stride split keeps each chunk UB-descending and
+                    # UB-balanced across workers
+                    chunks = [live[j::n] for j in range(n)]
+                    futs = [pool.submit(
+                        _serve_worker,
+                        (path, c, tids, params, th, self._PAR_BATCH))
+                        for c in chunks]
+                    # gather fully BEFORE merging: a partial merge +
+                    # serial fallback would duplicate candidates
+                    got = [f.result() for f in futs]
+                    for fr in got:
+                        frames.extend(fr)
+                    done = True
                 except Exception:
-                    pass
-                _SERVE_POOL = None
-                where = "driver"
-        if where == "driver":
-            _scan_plan(dataset, tfilter, live, kernel, k, guard, th,
-                       self._SHARDS_PER_BATCH, heap=heap, frames=frames)
+                    # e.g. BrokenProcessPool after a worker died —
+                    # disable the pool for this process and serve
+                    # serially; results are identical either way
+                    _SERVE_POOL_BROKEN = True
+                    try:
+                        _SERVE_POOL.shutdown(wait=False,
+                                             cancel_futures=True)
+                    except Exception:
+                        pass
+                    _SERVE_POOL = None
+            if not done and live:
+                _scan_plan(dataset, tfilter, live, kernel, k, guard,
+                           th, self._SHARDS_PER_BATCH,
+                           heap=heap, frames=frames)
         if not frames:
             return []
         allr = pd.concat(frames, ignore_index=True)

@@ -4,8 +4,8 @@ The fast path the reference gets from Elasticsearch/Lucene (WAND /
 block-max WAND over its inverted index) re-expressed for Spark's
 execution model.  An unfiltered top-k (`topk`, the dictionary-expansion
 queries, `topk_quantized`, and their filtered forms) is ES's
-coordinating node, which scores a small index itself and fans out only
-when that pays:
+coordinating node, which scores the shards itself and starts no Spark
+job:
 
 1. Query planning on the driver, with the Spark-free reader's code
    (query/reader.py LocalSearcher, opened over the same snapshot):
@@ -18,23 +18,20 @@ when that pays:
    shard's allowed doc ids to the plan (LocalSearcher.plan_topk).  No
    posting bytes are read here.
 2. LocalSearcher's executor (reader.LocalSearcher._run_plan) scores
-   the plan over the snapshot pinned when the Searcher opened it.  A
-   plan under _PAR_BOOT + _PAR_MIN_SHARDS shards runs wholly on the
-   driver (θ-gated batches of the kernel below, no Spark job).  A
-   larger one scores its best-UB boot batch on the driver to fix θ and
-   places the shards still live by their postings (Σ n_docs of their
-   blocks, LocalSearcher._placement): the driver, the serving process
-   pool, or — when the wider fan-out saves more than a job costs — ONE
-   Spark job of one stage whose mapInArrow tasks run the serving worker
-   over stride-split chunks from θ0 = the boot θ (reader._spark_scan).
+   the plan over the snapshot pinned when the Searcher opened it:
+   θ-gated batches of the kernel below on the driver.  A plan of at
+   least _PAR_BOOT + _PAR_MIN_SHARDS shards scores its best-UB boot
+   batch on the driver to fix θ and sends the shards still live to the
+   serving process pool.
 3. The driver merges the candidates (about k per kernel call) exactly
    (reader.merge_candidates: HALF_UP rounding, the search_after cursor,
    (score desc, doc_id asc)) and returns the ranked rows as a
    LocalRelation, whose collect starts no further job.  Results are
-   bitwise identical in every placement and to LocalSearcher's.
+   bitwise identical in both placements and to LocalSearcher's.
 
-topk_many and the full-matching-set queries still run as Spark plans
-over a pruned postings scan (_scored_partitions).
+topk_many runs each query of its set through the same executor and
+returns one LocalRelation.  The full-matching-set queries still run as
+Spark plans over a pruned postings scan (_scored_partitions).
 
 The scorer kernel is exact block-max pruning, NumPy-vectorized:
 segments of doc-id space are processed in DESCENDING upper-bound order,
@@ -232,12 +229,12 @@ class Searcher:
         """(doc_id, score, rank) — rank-identical to the brute-force oracle.
 
         The module docstring's executor: the driver plans the shards
-        from the postings' block metadata and runs LocalSearcher's
-        executor over the plan (_fan_out) — on the driver, unless the
-        plan's residue is large enough that one Spark job over shard
-        chunks pays for itself — and returns the merged rows as a
-        LocalRelation, bitwise identical to LocalSearcher.topk.  k = 0
-        returns the empty result; a negative k raises ValueError.
+        from the postings' block metadata, scores the plan with
+        LocalSearcher's executor (_fan_out: on the driver, or the
+        serving pool for a corpus-scale plan; no Spark job) and returns
+        the merged rows as a LocalRelation, bitwise identical to
+        LocalSearcher.topk.  k = 0 returns the empty result; a negative
+        k raises ValueError.
 
         `match_all=True` = conjunctive (AND) query.  A query with terms
         missing from the dictionary can match nothing under AND.
@@ -305,13 +302,10 @@ class Searcher:
 
     def _fan_out(self, dataset, path: str, tids: list[int], plan: list,
                  params: dict) -> DataFrame:
-        """Run a UB-descending shard `plan` (with each shard's allowed
-        doc ids when filtered) through LocalSearcher._run_plan with this
-        Searcher's session, which lets _placement send the residue after
-        the boot batch to ONE Spark job of one stage when its postings
-        pay for that; return the merged rows as a LocalRelation."""
-        rows = self._local._run_plan(dataset, path, tids, plan, params,
-                                     spark=self.spark)
+        """Score a UB-descending shard `plan` (with each shard's allowed
+        doc ids when filtered) with LocalSearcher._run_plan and return
+        the merged rows as a LocalRelation."""
+        rows = self._local._run_plan(dataset, path, tids, plan, params)
         return ranked_frame(self.spark, [d for d, _, _ in rows],
                             [s for _, s, _ in rows])
 
@@ -1093,47 +1087,36 @@ class Searcher:
     def topk_many(
         self, queries: dict[int, str], k: int = 10, *, round_to: int | None = None,
     ) -> DataFrame:
-        """Execute a whole query set in ONE Spark job.
+        """Execute a whole query set and return it as ONE LocalRelation
+        of (query_id, doc_id, score, rank), starting no Spark job.
 
-        This is the throughput path the architecture is built for: the
-        per-job scheduling overhead that dominates single-query latency
-        in local mode amortizes over the set; the postings scan prunes
-        to the UNION of all queries' term ids (one pass), and each
-        shard scores every query against its already-materialized
-        Arrow batch.  Returns (query_id, doc_id, score, rank).
-        """
-        plans = {qid: self.plan(text) for qid, text in queries.items()}
-        plans = {qid: p for qid, p in plans.items() if p}
-        out_schema = "query_id int, doc_id long, score double"
-        if not plans:
-            return local_frame(self.spark, out_schema + ", rank int")
-        all_tids = sorted({t for p in plans.values() for t in p})
-        pruned = self.postings.where(
-            F.col("term_id").isin([int(t) for t in all_tids])
-        )
-        avgdl = self.avgdl
+        Each query is planned and scored like topk(text, k,
+        round_to=round_to) — LocalSearcher's executor on the driver or
+        the serving pool — so its rows are identical to that call's.
+        The set shares one result frame instead of one per query, which
+        is the per-query cost a batch can save once scoring runs
+        without a job."""
+        from search_ingest_spark.query import reader
 
-        def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            frames = []
-            tid_col = pdf["term_id"].to_numpy(np.int64)
-            for qid, idf in plans.items():
-                sub = pdf[np.isin(tid_col, list(idf))]
-                res = shard_topk(sub, idf=idf, k=k, avgdl=avgdl, round_to=round_to)
-                res.insert(0, "query_id", np.int32(qid))
-                frames.append(res)
-            return pd.concat(frames, ignore_index=True)
-
-        per_shard = _scored_partitions(pruned, scorer, out_schema)
-        if round_to is not None:
-            per_shard = per_shard.withColumn("score", F.round("score", round_to))
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            per_shard.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "doc_id", "score", "rank")
-        )
+        rows = []
+        for qid, text in queries.items():
+            idf = self.plan(text)
+            if not idf:
+                continue
+            tids, plan = self._local.plan_topk(idf)
+            rows += [(qid, *r) for r in self._local._run_plan(
+                self._local._postings, self._local._postings_path, tids,
+                plan, reader.kernel_params(idf, k, avgdl=self.avgdl,
+                                           round_to=round_to))]
+        schema = "query_id int, doc_id long, score double, rank int"
+        if not rows:
+            return local_frame(self.spark, schema)
+        qid, doc_id, score, rank = zip(*rows)
+        return local_frame(
+            self.spark, schema, query_id=np.asarray(qid, dtype=np.int32),
+            doc_id=np.asarray(doc_id, dtype=np.int64),
+            score=np.asarray(score, dtype=np.float64),
+            rank=np.asarray(rank, dtype=np.int32))
 
 
 def _scored_partitions(pruned: DataFrame, scorer, out_schema: str) -> DataFrame:

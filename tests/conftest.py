@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import itertools
-import math
 
 import pytest
 
@@ -63,15 +62,14 @@ def jobs_and_stages(spark, run) -> tuple[int, int]:
     return len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
 
 
-PLACEMENTS = ("driver", "pool", "spark")
+PLACEMENTS = ("driver", "pool")
 
 
 def force_placement(monkeypatch, placement: str) -> None:
     """Make LocalSearcher._run_plan score every plan in one placement:
     "driver" (two-shard serial batches, the residue after the first
-    batch included), "pool" (the forkserver pool) or "spark" (one Spark
-    job; a Searcher only).  The parallel placements get every shard of
-    the plan (no boot batch) in two-shard worker batches."""
+    batch included) or "pool" (the forkserver pool gets every shard of
+    the plan, no boot batch, in two-shard worker batches)."""
     from search_ingest_spark.query.reader import LocalSearcher
 
     def put(**kw):
@@ -79,7 +77,6 @@ def force_placement(monkeypatch, placement: str) -> None:
             monkeypatch.setattr(LocalSearcher, name, value)
 
     if placement == "driver":
-        put(_SHARDS_PER_BATCH=2, _PAR_MIN_SHARDS=10**9, _SPARK_JOB_S=math.inf)
+        put(_SHARDS_PER_BATCH=2, _PAR_MIN_SHARDS=10**9)
     else:
-        put(_PAR_BOOT=0, _PAR_MIN_SHARDS=1, _PAR_BATCH=2,
-            _SPARK_JOB_S=-math.inf if placement == "spark" else math.inf)
+        put(_PAR_BOOT=0, _PAR_MIN_SHARDS=1, _PAR_BATCH=2)

@@ -1,12 +1,13 @@
-"""Batch query execution (Searcher.topk_many): one Spark job for the
-whole query set, per-query results rank-identical to single execution."""
+"""Batch query execution (Searcher.topk_many): one result frame for the
+whole query set and no Spark job, per-query results rank-identical to
+single execution."""
 
 from __future__ import annotations
 
 import time
 
 import pytest
-from conftest import force_placement
+from conftest import jobs_and_stages
 
 from search_ingest_spark.catalog import Catalog
 from search_ingest_spark.index import build as ib
@@ -46,11 +47,12 @@ def test_unknown_query_absent_not_crashing(searcher):
     assert out.count() == 0
 
 
-def test_batch_amortizes_scheduling(searcher, monkeypatch):
-    # the singles take the Spark placement, one job each: that is the
-    # cost one batch job amortizes (a plan this small is otherwise
-    # scored on the driver with no job at all)
-    force_placement(monkeypatch, "spark")
+def test_batch_starts_no_job(spark, searcher):
+    assert jobs_and_stages(spark, lambda: searcher.topk_many(
+        QUERIES, k=10)) == (0, 0)
+
+
+def test_batch_amortizes_scheduling(searcher):
     # warm
     searcher.topk_many({0: "data"}, 5).collect()
     t0 = time.time()
@@ -60,4 +62,4 @@ def test_batch_amortizes_scheduling(searcher, monkeypatch):
     t0 = time.time()
     searcher.topk_many(dict(list(QUERIES.items())[:5]), 10).collect()
     batch = time.time() - t0
-    assert batch < singles  # one job beats five jobs
+    assert batch < singles  # one result frame beats five

@@ -5,16 +5,19 @@ designed for: filter pushdown into parquet scans, column pruning,
 broadcast of small sides, TakeOrderedAndProject for top-k (no global
 sort), zero exchanges in the doc-local tokenization stage.  These
 assertions fail if a refactor silently degrades the plan at 100x data.
-Every top-k returns a LocalRelation.  A plan as small as these
-fixtures' is scored on the driver (no Spark job); with the Spark
-placement forced, the call runs one job of one stage.  An attr_where
-predicate adds one job that reads the qualifying doc ids.
+Every top-k returns a LocalRelation and is scored by the reader's
+executor without a Spark job; the tests named "one job one stage" keep
+the names of the Spark fan-out they replaced and assert (0 jobs,
+0 stages).  An attr_where predicate adds one job that reads the
+qualifying doc ids.
 """
 
 from __future__ import annotations
 
 import pytest
-from conftest import force_placement, jobs_and_stages, run_counted
+from conftest import (
+    PLACEMENTS, force_placement, jobs_and_stages, run_counted,
+)
 from pyspark.sql import functions as F
 
 from search_ingest_spark.catalog import Catalog
@@ -92,19 +95,13 @@ class TestQueryPlans:
                          search_after=(0.5, 3), round_to=4),
         lambda s: s.topk_quantized("data table", 10),
     ], ids=["topk", "match_all", "required_after", "topk_quantized"])
-    def test_topk_is_one_job_one_stage(self, spark, doc_index, call,
-                                       monkeypatch):
+    def test_topk_is_one_job_one_stage(self, spark, doc_index, call):
         s = Searcher(spark, doc_index)
         assert jobs_and_stages(spark, lambda: call(s)) == (0, 0)
-        force_placement(monkeypatch, "spark")
-        call(s).collect()  # warm the Python workers
-        assert jobs_and_stages(spark, lambda: call(s)) == (1, 1)
 
-    def test_expanded_topk_is_one_job_one_stage(self, spark, doc_index,
-                                                monkeypatch):
+    def test_expanded_topk_is_one_job_one_stage(self, spark, doc_index):
         # the dictionary expansion is a pyarrow read on the driver; the
-        # expanded terms score like any top-k: on the driver for a plan
-        # this small, in one job with the Spark placement forced
+        # expanded terms score like any top-k, with no job
         s = Searcher(spark, doc_index)
         calls = {
             "prefix": lambda: s.topk_prefix("da", 10, max_expansions=5,
@@ -118,26 +115,20 @@ class TestQueryPlans:
                 "table da", 10, round_to=4),
         }
         for name, call in calls.items():
+            assert call().collect(), name
             assert jobs_and_stages(spark, call) == (0, 0), name
-        force_placement(monkeypatch, "spark")
-        for name, call in calls.items():
-            assert call().collect(), name  # warm the Python workers
-            assert jobs_and_stages(spark, call) == (1, 1), name
 
-    def test_attr_filter_topk_is_one_job_one_stage(self, spark, doc_index,
-                                                   monkeypatch):
+    def test_attr_filter_topk_is_one_job_one_stage(self, spark, doc_index):
         # the allowed doc ids are a pyarrow read of doc_attrs on the
-        # driver: the filtered top-k places like an unfiltered one
+        # driver: the filtered top-k scores like an unfiltered one
         s = Searcher(spark, doc_index)
 
         def call():
             return s.topk("data table", 10, round_to=4,
                           attr_filter={"lang": ["fr", "es"]})
 
+        assert call().collect()
         assert jobs_and_stages(spark, call) == (0, 0)
-        force_placement(monkeypatch, "spark")
-        assert call().collect()  # warm the Python workers
-        assert jobs_and_stages(spark, call) == (1, 1)
         assert optimized_of(call()).startswith("LocalRelation")
 
     def test_attr_where_topk_adds_at_most_one_job(self, spark, doc_index):
@@ -170,7 +161,7 @@ class TestQueryPlans:
         assert jobs_and_stages(
             spark, lambda: s.topk("data", 10, min_match=3)) == (0, 0)
 
-    @pytest.mark.parametrize("placement", ["driver", "spark"])
+    @pytest.mark.parametrize("placement", PLACEMENTS)
     def test_k_zero_starts_no_job(self, spark, doc_index, monkeypatch,
                                   placement):
         force_placement(monkeypatch, placement)
